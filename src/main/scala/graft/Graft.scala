@@ -300,9 +300,10 @@ final case class Graft(
     * re-registers an existing summary with THIS session (the rewrite
     * registry is in-process). The descriptor lives in the summary's
     * table properties, so any session can attach/maintain without
-    * re-stating the definition — and `maintain` dispatches to the
-    * right fold (count/sum, min/max, multi, multi-minmax, distinct)
-    * from it. */
+    * re-stating the definition. A kind is parsed once into a measure
+    * spec ([[graft.store.IncrementalAgg.Spec]]); the same spec drives
+    * the bootstrap, the rewrite registration and the one fold every
+    * kind shares. */
   object summaries {
     import graft.store.IncrementalAgg
 
@@ -323,13 +324,15 @@ final case class Graft(
         val i = p.indexOf("\u0002"); (p.substring(0, i), p.substring(i + 1)) }
 
     /** Bootstrap `name` as a maintained summary of `base` and register
-      * it for automatic query rewrite. `kind`: "sum" (count/sum — the
-      * C41 canonical), "minmax" (C41b), "multi" (C41c), "multiminmax"
-      * (C41e), "distinct" (C41d KMV, `k` registers), "distinctmulti"
-      * (one KMV sketch per measure), "quantile" (C41g — the A46
-      * integer log-histogram as counter rows; pure add/subtract
-      * maintenance, no rescan, serves the valueSketch query shape).
-      * Single-measure kinds take exactly one value column. */
+      * it for automatic query rewrite. `kind` names the measure spec:
+      * "sum"/"multi" (count + sum per value column), "minmax"/
+      * "multiminmax" (count + sum + min + max), "distinct"/
+      * "distinctmulti" (KMV registers, `k` of them), "quantile" (the
+      * A46 integer log-histogram as counter rows keyed by group and
+      * bucket; serves the valueSketch query shape). Count, sum and
+      * bucket counters fold by add/subtract alone; min/max and KMV
+      * rescan the groups a delete touched. Single-measure kinds take
+      * exactly one value column; multi kinds one or more. */
     def define(name: String, base: String, groupCols: Seq[String],
         valueCols: Seq[String], kind: String = "sum", k: Int = 64,
         deriveCols: Seq[(String, String)] = Nil,
@@ -337,9 +340,7 @@ final case class Graft(
       val store = st(name)
       require(store eq st(base), "summary and base must share a store root")
       val (summary, b) = (pn(name), pn(base))
-      val single = Set("sum", "minmax", "distinct", "quantile")
-      if (single(kind)) require(valueCols.size == 1,
-        s"summary kind '$kind' takes exactly one value column")
+      val spec = IncrementalAgg.Spec(kind, valueCols, k)
       // group columns are the summary's PK — a GLOBAL (zero-group)
       // summary has no keyable row identity, and the empty list would
       // not round-trip through the descriptor ("".split(',') is [""]);
@@ -360,38 +361,25 @@ final case class Graft(
         // from bootstrapping the table and THEN throwing inside the
         // trailing attach(), which would leave a permanently broken
         // summary whose every future attach() also throws
-        val identityOk = e.trim == n && kind != "quantile"
+        val identityOk = e.trim == n && !spec.quantile
         require(!baseFields.contains(n) || identityOk,
           s"derived column '$n' shadows a physical column of '$base' — " +
-            (if (kind == "quantile")
+            (if (spec.quantile)
               "pick a fresh name (a quantile grouping that IS a physical " +
                 "column needs no derivation at all)"
             else "pick a fresh name (only the identity derivation may reuse one)"))
       }
       // C47: derived group columns (e.g. "day" -> "to_date(ts)") are
       // projected identically at bootstrap, fold and rescan time
-      val baseDf = IncrementalAgg.derivedView(store.readTable(b), deriveCols)
-      val bootstrap = kind match {
-        case "sum" => IncrementalAgg.summarize(baseDf, groupCols, valueCols.head)
-        case "minmax" => IncrementalAgg.summarizeMinMax(baseDf, groupCols, valueCols.head)
-        case "multi" => IncrementalAgg.summarizeMulti(baseDf, groupCols, valueCols)
-        case "multiminmax" => IncrementalAgg.summarizeMultiMinMax(baseDf, groupCols, valueCols)
-        case "distinct" => IncrementalAgg.summarizeDistinct(baseDf, groupCols, valueCols.head, k)
-        case "distinctmulti" => IncrementalAgg.summarizeDistinctMulti(baseDf, groupCols, valueCols, k)
-        case "quantile" => IncrementalAgg.summarizeQuantile(baseDf, groupCols, valueCols.head)
-        case other => throw new IllegalArgumentException(
-          s"unknown summary kind '$other' " +
-            "(sum|minmax|multi|multiminmax|distinct|distinctmulti|quantile)")
-      }
-      // a quantile summary's rows are keyed by (groups, bucket)
-      val pk = if (kind == "quantile") groupCols ++ Seq("bin_id", "bin_upper") else groupCols
+      val bootstrap = IncrementalAgg.summarize(spec,
+        IncrementalAgg.derivedView(store.readTable(b), deriveCols), groupCols)
       // bench timed-span accounting (pass-through unless graft.Bench
       // armed it — see graft.BenchSetup): the summary bootstrap — the
       // MV's initial full-scan aggregate + write — is setup, not the
       // maintenance/serving signal the lifecycle entries time. It runs
       // for real on every bench run; only its span is excluded.
       graft.BenchSetup.setup(
-        store.createTableFromDataFrame(summary, bootstrap, pk, infer = false))
+        store.createTableFromDataFrame(summary, bootstrap, spec.keys(groupCols), infer = false))
       IncrementalAgg.markMaintained(store, b, summary, store.snapshots(b).last._1)
       store.setProperties(summary, Map(KindKey -> kind, BaseKey -> b,
         GroupsKey -> groupCols.mkString(","), ValuesKey -> valueCols.mkString(","),
@@ -400,13 +388,14 @@ final case class Graft(
       attach(name)
     }
 
-    private def descriptor(name: String): (String, String, Seq[String], Seq[String], Int, Seq[(String, String)]) = {
+    /** (spec, base, groups, derive) as `define` recorded them. */
+    private def descriptor(name: String): (IncrementalAgg.Spec, String, Seq[String], Seq[(String, String)]) = {
       val store = st(name)
       val props = store.properties(pn(name))
       val kind = props.getOrElse(KindKey, throw new IllegalArgumentException(
         s"$name carries no summary descriptor — define() it first"))
-      (kind, props(BaseKey), props(GroupsKey).split(',').toSeq,
-        props(ValuesKey).split(',').toSeq, props(KKey).toInt,
+      (IncrementalAgg.Spec(kind, props(ValuesKey).split(',').toSeq, props(KKey).toInt),
+        props(BaseKey), props(GroupsKey).split(',').toSeq,
         decodeDerive(props.getOrElse(DeriveKey, "")))
     }
 
@@ -415,19 +404,8 @@ final case class Graft(
       * auto-maintenance coupling when the descriptor carries it. */
     def attach(name: String): Unit = {
       val store = st(name)
-      val (kind, b, groups, values, k, derive) = descriptor(name)
-      kind match {
-        case "sum" | "minmax" =>
-          graft.plans.SummaryRewrite.register(spark, store, b, pn(name), groups, values.head, derive)
-        case "multi" | "multiminmax" =>
-          graft.plans.SummaryRewrite.registerMulti(spark, store, b, pn(name), groups, values, derive)
-        case "distinct" =>
-          graft.plans.SummaryRewrite.registerDistinct(spark, store, b, pn(name), groups, values.head, k, derive)
-        case "distinctmulti" =>
-          graft.plans.SummaryRewrite.registerDistinctMulti(spark, store, b, pn(name), groups, values, k, derive)
-        case "quantile" =>
-          graft.plans.SummaryRewrite.registerQuantile(spark, store, b, pn(name), groups, values.head, derive)
-      }
+      val (spec, b, groups, derive) = descriptor(name)
+      graft.plans.SummaryRewrite.registerSpec(spark, store, b, pn(name), groups, spec, derive)
       if (store.properties(pn(name)).contains(AutoKey)) armAutoMaintain(store, b, name)
     }
 
@@ -444,7 +422,7 @@ final case class Graft(
       * this session the summary's only maintainer). */
     def autoMaintainOn(name: String): Unit = {
       val store = st(name)
-      val (_, b, _, _, _, _) = descriptor(name)
+      val (_, b, _, _) = descriptor(name)
       store.setProperties(pn(name), Map(AutoKey -> "true"))
       armAutoMaintain(store, b, name)
     }
@@ -453,7 +431,7 @@ final case class Graft(
       * the next explicit maintain). */
     def autoMaintainOff(name: String): Unit = {
       val store = st(name)
-      val (_, b, _, _, _, _) = descriptor(name)
+      val (_, b, _, _) = descriptor(name)
       store.setProperties(pn(name), Map.empty, remove = Seq(AutoKey))
       store.removePostCommitHook(b, "summary-maintain:" + pn(name))
     }
@@ -483,12 +461,12 @@ final case class Graft(
       * reads + one manifest listing, zero data I/O). */
     def status(name: String): Map[String, String] = {
       val store = st(name)
-      val (kind, b, groups, values, _, _) = descriptor(name)
+      val (spec, b, groups, _) = descriptor(name)
       val applied = IncrementalAgg.maintainedGen(store, b, pn(name))
       val cur = store.snapshots(b).last._1
       Map(
-        "summary" -> pn(name), "base" -> b, "kind" -> kind,
-        "groups" -> groups.mkString(","), "values" -> values.mkString(","),
+        "summary" -> pn(name), "base" -> b, "kind" -> spec.kind,
+        "groups" -> groups.mkString(","), "values" -> spec.values.mkString(","),
         "maintained_gen" -> applied.map(_.toString).getOrElse("none"),
         "base_gen" -> cur.toString,
         "fresh" -> applied.contains(cur).toString,
@@ -499,16 +477,8 @@ final case class Graft(
       * since the durable watermark — crash-safe, replay-idempotent. */
     def maintain(name: String): Unit = {
       val store = st(name)
-      val (kind, b, groups, values, k, derive) = descriptor(name)
-      kind match {
-        case "sum" => IncrementalAgg.maintainToCurrent(store, b, pn(name), groups, values.head, derive)
-        case "minmax" => IncrementalAgg.maintainMinMaxToCurrent(store, b, pn(name), groups, values.head, derive)
-        case "multi" => IncrementalAgg.maintainMultiToCurrent(store, b, pn(name), groups, values, derive)
-        case "multiminmax" => IncrementalAgg.maintainMultiMinMaxToCurrent(store, b, pn(name), groups, values, derive)
-        case "distinct" => IncrementalAgg.maintainDistinctToCurrent(store, b, pn(name), groups, values.head, k, derive)
-        case "distinctmulti" => IncrementalAgg.maintainDistinctMultiToCurrent(store, b, pn(name), groups, values, k, derive)
-        case "quantile" => IncrementalAgg.maintainQuantileToCurrent(store, b, pn(name), groups, values.head, derive)
-      }
+      val (spec, b, groups, derive) = descriptor(name)
+      IncrementalAgg.maintainSpec(store, b, pn(name), spec, groups, derive)
     }
 
     /** C46e: the MV ADVISOR — the inverse of [[explain]]: given an

@@ -289,7 +289,7 @@ object Pairs {
     val side = (idCol +: payloadCols).map(attr)
     val pairAttrs = (Seq("a_", "b_")).flatMap(prefix =>
       side.map(a => AttributeReference(prefix + a.name, a.dataType, a.nullable)()))
-    org.apache.spark.sql.graftglue.Glue.ofRows(spark,
+    org.apache.spark.sql.graftx.bridge.ofRows(spark,
       PairsWithinGroups(groupCols.map(attr), attr(idCol), payloadCols.map(attr),
         pairAttrs, maxGroupRows, plan))
   }

@@ -213,7 +213,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
       df: org.apache.spark.sql.DataFrame): Seq[ServeProbe] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[ServeProbe]
     probe.set(buf)
-    try org.apache.spark.sql.graftglue.Glue
+    try org.apache.spark.sql.graftx.bridge
       .ofRows(spark, df.queryExecution.logical)
       .queryExecution.optimizedPlan
     finally probe.remove()
@@ -248,21 +248,14 @@ object SummaryRewrite extends Rule[LogicalPlan] {
   def register(spark: SparkSession, store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCol: String,
       derive: Seq[(String, String)] = Nil): Unit =
-    registerEntry(spark, Registration(store, base, summary, groupCols,
-      Map(valueCol -> "sum_val"),
-      Map(valueCol -> "min_val"), Map(valueCol -> "max_val"),
-      derive = deriveTemplates(store, base, derive)))
+    registerSpec(spark, store, base, summary, groupCols, IncrementalAgg.Spec("sum", Seq(valueCol)), derive)
 
   /** Register a C41c MULTI-measure summary ([[IncrementalAgg
     * .summarizeMulti]]'s `sum_<c>` naming). */
   def registerMulti(spark: SparkSession, store: TableStore, base: String,
       summary: String, groupCols: Seq[String], valueCols: Seq[String],
       derive: Seq[(String, String)] = Nil): Unit =
-    registerEntry(spark, Registration(store, base, summary, groupCols,
-      valueCols.map(c => c -> ("sum_" + c)).toMap,
-      valueCols.map(c => c -> ("min_" + c)).toMap,
-      valueCols.map(c => c -> ("max_" + c)).toMap,
-      derive = deriveTemplates(store, base, derive)))
+    registerSpec(spark, store, base, summary, groupCols, IncrementalAgg.Spec("multi", valueCols), derive)
 
   /** Register a C41d distinct-count (KMV) summary ([[IncrementalAgg
     * .summarizeDistinct]]): serves `GraftFunctions.kmvDistinct(v, k)`
@@ -272,27 +265,18 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     * losslessly WIDENED upstream (different render) must not match. */
   def registerDistinct(spark: SparkSession, store: TableStore, base: String,
       summary: String, groupCols: Seq[String], valueCol: String, k: Int,
-      derive: Seq[(String, String)] = Nil): Unit = {
-    val vt = store.readTable(base).schema(valueCol).dataType
-    registerEntry(spark, Registration(store, base, summary, groupCols,
-      Map.empty, Map.empty, Map.empty,
-      kmv = Map(valueCol -> "kmv_val"), kmvK = k, kmvTypes = Map(valueCol -> vt),
-      derive = deriveTemplates(store, base, derive)))
-  }
+      derive: Seq[(String, String)] = Nil): Unit =
+    registerSpec(spark, store, base, summary, groupCols,
+      IncrementalAgg.Spec("distinct", Seq(valueCol), k), derive)
 
   /** Register a MULTI-MEASURE distinct-count summary ([[IncrementalAgg
     * .summarizeDistinctMulti]]'s `kmv_<c>` naming) — one fold, one
     * table, serving `kmvDistinct(c, k)` for every registered measure. */
   def registerDistinctMulti(spark: SparkSession, store: TableStore, base: String,
       summary: String, groupCols: Seq[String], valueCols: Seq[String], k: Int,
-      derive: Seq[(String, String)] = Nil): Unit = {
-    val schema = store.readTable(base).schema
-    registerEntry(spark, Registration(store, base, summary, groupCols,
-      Map.empty, Map.empty, Map.empty,
-      kmv = valueCols.map(c => c -> ("kmv_" + c)).toMap, kmvK = k,
-      kmvTypes = valueCols.map(c => c -> schema(c).dataType).toMap,
-      derive = deriveTemplates(store, base, derive)))
-  }
+      derive: Seq[(String, String)] = Nil): Unit =
+    registerSpec(spark, store, base, summary, groupCols,
+      IncrementalAgg.Spec("distinctmulti", valueCols, k), derive)
 
   /** C41g: register a QUANTILE-SKETCH summary ([[IncrementalAgg
     * .summarizeQuantile]]) — the A46 integer log-histogram maintained
@@ -306,7 +290,37 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     * the rule sees at query time), so the match is by construction. */
   def registerQuantile(spark: SparkSession, store: TableStore, base: String,
       summary: String, groupCols: Seq[String], valueCol: String,
-      derive: Seq[(String, String)] = Nil): Unit = {
+      derive: Seq[(String, String)] = Nil): Unit =
+    registerSpec(spark, store, base, summary, groupCols,
+      IncrementalAgg.Spec("quantile", Seq(valueCol)), derive)
+
+  /** The one [[Registration]] builder: what a summary of `spec`'s kind
+    * can serve, named by the spec's stored columns. Count/sum kinds
+    * register sum/min/max maps (a kind without extrema stands down on a
+    * min/max query as a missing column); KMV kinds capture each
+    * measure's base type; quantile registers its bucket columns as
+    * derived groups and its not-null filter as a base filter. */
+  private[graft] def registerSpec(spark: SparkSession, store: TableStore, base: String,
+      summary: String, groupCols: Seq[String], spec: IncrementalAgg.Spec,
+      derive: Seq[(String, String)]): Unit = {
+    def named(on: Boolean, prefix: String): Map[String, String] =
+      if (on) spec.values.map(c => c -> (prefix + spec.suffix(c))).toMap else Map.empty
+    val sums = !spec.kmv && !spec.quantile
+    val (derived, filters) =
+      if (spec.quantile) quantileTemplates(store, base, spec.values.head, derive)
+      else (deriveTemplates(store, base, derive), Nil)
+    lazy val schema = store.readTable(base).schema
+    registerEntry(spark, Registration(store, base, summary, spec.keys(groupCols),
+      named(sums, "sum_"), named(sums, "min_"), named(sums, "max_"),
+      kmv = named(spec.kmv, "kmv_"), kmvK = if (spec.kmv) spec.k else 0,
+      kmvTypes = if (spec.kmv) spec.values.map(c => c -> schema(c).dataType).toMap else Map.empty,
+      derive = derived, baseFilters = filters))
+  }
+
+  /** A quantile summary's derived-group and base-filter templates: the
+    * bucket columns valueSketch computes, plus any user derivations. */
+  private def quantileTemplates(store: TableStore, base: String, valueCol: String,
+      derive: Seq[(String, String)]): (Map[String, DeriveTemplate], Seq[DeriveTemplate]) = {
     val baseDf = store.readTable(base)
     // C47×C41g: user-derived group columns (day → to_date(ts)) compose
     // with the bucket derivations — "p99 per day, maintained". Strict
@@ -324,12 +338,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
           .filter(org.apache.spark.sql.functions.col("__x").isNotNull))
       .select((derive.map(_._1) ++ Seq("bin_id", "bin_upper")).map(c =>
         org.apache.spark.sql.functions.col(graft.Identifiers.quote(c))): _*)
-    val (derived, filters) = templatesFromPlan(
-      probe, derive.map(_._1) ++ Seq("bin_id", "bin_upper"))
-    registerEntry(spark, Registration(store, base, summary,
-      groupCols ++ Seq("bin_id", "bin_upper"),
-      Map.empty, Map.empty, Map.empty,
-      derive = derived, baseFilters = filters))
+    templatesFromPlan(probe, derive.map(_._1) ++ Seq("bin_id", "bin_upper"))
   }
 
   /** Normalized templates for named output columns of a probe plan,

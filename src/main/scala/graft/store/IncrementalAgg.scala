@@ -4,29 +4,34 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** C41: incremental maintenance of a grouped COUNT/SUM summary table
-  * from the base table's change-data-feed (C25) — the materialized-view
-  * upkeep every warehouse runs ("keep the per-segment totals current")
-  * without ever re-scanning the base.
+/** C41: incremental maintenance of grouped summary tables from the base
+  * table's change-data-feed (C25) — the materialized-view upkeep every
+  * warehouse runs, without re-scanning the base.
   *
-  * Scale design: each [[maintain]] call costs O(changes), never
-  * O(base) — `readChanges` already reads only the symmetric-difference
-  * files of the two generations, the per-group delta REDUCES from that
-  * change-sized relation (map-side combine), and the write path is a
-  * keyed upsert + keyed delete, which on a bucketed summary rewrites
-  * only the buckets the touched groups hash into. A 100-row upsert
-  * into a 100 TB base touches a handful of files end-to-end. COUNT and
-  * SUM are the self-maintainable aggregates (a delta is ±1 / ±value
-  * regardless of history); MIN/MAX are deliberately out — a deleted
-  * extremum needs a base rescan, which is a different operator.
+  * Every summary kind is a measure [[Spec]]; each measure is a bootstrap
+  * aggregate, a signed change-feed delta and a merge of that delta into
+  * the stored value. One [[summarize]], one fold and one crash-safe
+  * watermark protocol serve all seven kinds: `sum`/`multi` (count +
+  * exact DECIMAL(18,2) sum), `minmax`/`multiminmax` (+ min + max),
+  * `distinct`/`distinctmulti` (KMV registers) and `quantile` (counter
+  * rows per sketch bucket). Single-measure kinds store `<m>_val`, multi
+  * kinds `<m>_<c>`.
   *
-  * Exactness: sums are DECIMAL(18,2) (order-independent under any
-  * partitioning), and the maintained table is bit-identical to a full
-  * recompute of [[summarize]] over the final base state — the driver
-  * oracle and IncrementalAggSpec both state exactly that. Group
-  * columns are summary PRIMARY KEY columns and therefore non-null by
-  * contract; an in-plan assert_true fires on a NULL group value rather
-  * than silently diverging from the recompute.
+  * Scale design: count, sum and bucket counters are invertible, so a
+  * fold costs O(changes) — `readChanges` reads only the two
+  * generations' symmetric-difference files, the per-group delta reduces
+  * from that, and the write is ONE keyed [[TableStore.applyChanges]]
+  * that rewrites only the touched buckets of a bucketed summary. MIN/MAX
+  * and KMV only GROW under inserts, so their fold also RESCANS the
+  * groups a delete touched — bounded by those groups' rows, never the
+  * base.
+  *
+  * Exactness: the maintained table is bit-identical to a full recompute
+  * of [[summarize]] over the final base state — the driver oracle and
+  * IncrementalAggSpec both state exactly that. Group columns are
+  * summary PRIMARY KEY columns and therefore non-null by contract; an
+  * in-plan assert_true fires on a NULL group value rather than silently
+  * diverging from the recompute.
   */
 object IncrementalAgg {
 
@@ -40,41 +45,125 @@ object IncrementalAgg {
   def derivedView(df: DataFrame, derive: Seq[(String, String)]): DataFrame =
     derive.foldLeft(df) { case (d, (n, e)) => d.withColumn(n, expr(e)) }
 
-  /** The summary this module maintains: one row per group with the
-    * row count and the exact DECIMAL(18,2) sum of `valueCol`. Used
-    * once at bootstrap (the only full base scan) and by the
-    * reconciliation spec. */
-  def summarize(base: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame =
-    base.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
+  private val dec = DecimalType(18, 2)
+  private val Kinds = Seq("sum", "minmax", "multi", "multiminmax", "distinct", "distinctmulti", "quantile")
+
+  /** +1 for rows a change adds (insert, update post-image), −1 otherwise. */
+  private def sign: Column =
+    when(col("_change_type").isin("insert", "update_postimage"), lit(1L)).otherwise(lit(-1L))
+
+  /** Sketch registers persist as a comma-joined ascending decimal
+    * string — store tables are SQL-typed (no arrays), and the CSV form
+    * is itself oracle-derivable (DuckDB string_agg over the same
+    * ordered hashes). Empty sketch (a group of all-NULL values) is the
+    * empty string. */
+  private def kmvToStr(a: Column): Column = array_join(a.cast("array<string>"), ",")
+  private def kmvFromStr(s: Column): Column =
+    when(length(s) === 0, array().cast("array<bigint>"))
+      .otherwise(split(s, ",").cast("array<bigint>"))
+
+  /** One stored measure column: its bootstrap aggregate, its signed
+    * change-feed delta aggregate, how a delta merges into the stored
+    * value (stored, delta) → new, and its value on a dying group. */
+  private final case class Cell(name: String, agg: Column, delta: Column,
+      merge: (Column, Column) => Column, dead: Column)
+
+  /** A summary kind as a measure spec. Built only from the seven kind
+    * strings; `values` are the measured base columns, `k` the KMV
+    * register count (ignored by the other kinds). Construction rejects
+    * an unknown kind and a wrong value-column arity. */
+  private[graft] final case class Spec(kind: String, values: Seq[String], k: Int = 64) {
+    if (!Kinds.contains(kind)) throw new IllegalArgumentException(
+      s"unknown summary kind '$kind' (${Kinds.mkString("|")})")
+    private val multi = Set("multi", "multiminmax", "distinctmulti")(kind)
+    if (multi) require(values.nonEmpty, s"summary kind '$kind' needs at least one value column")
+    else require(values.size == 1, s"summary kind '$kind' takes exactly one value column")
+    private val extrema = Set("minmax", "multiminmax")(kind)
+    private[graft] val kmv = Set("distinct", "distinctmulti")(kind)
+    private[graft] val quantile = kind == "quantile"
+
+    /** Stored-column suffix of value column `c`. */
+    private[graft] def suffix(c: String): String = if (multi) c else "val"
+
+    /** Every measure folds by adding its signed delta — no group a
+      * delete touched ever needs a rescan. */
+    def invertible: Boolean = !extrema && !kmv
+
+    /** The summary's primary key: a quantile row is one bucket of a group. */
+    def keys(groupCols: Seq[String]): Seq[String] =
+      if (quantile) groupCols ++ Seq("bin_id", "bin_upper") else groupCols
+
+    /** The relation the measures aggregate: `df`, or for quantile the
+      * non-null observations' sketch buckets (`keep`: extra columns to
+      * carry, e.g. the feed's `_change_type`). */
+    private[IncrementalAgg] def measured(df: DataFrame, groupCols: Seq[String],
+        keep: Seq[String]): DataFrame =
+      if (!quantile) df
+      else graft.operators.Analytics.withSketchBuckets(
+        df.select((groupCols ++ keep).map(col) :+
+          graft.operators.Analytics.sketchUnits(values.head).as("__x"): _*)
+          .filter(col("__x").isNotNull))
+
+    /** The stored measure columns after `n_rows`, in column order. */
+    private[IncrementalAgg] lazy val cells: Seq[Cell] = if (quantile) Nil else values.flatMap { c =>
+      val s = suffix(c)
+      val v = col(c).cast(dec)
+      val nullDec = lit(null).cast(dec)
+      if (kmv) Seq(Cell("kmv_" + s,
+        kmvToStr(graft.plans.GraftFunctions.kmvSketch(col(c), k)),
+        graft.plans.GraftFunctions.kmvSketch(when(sign === 1L, col(c)), k),
+        // register union: sorted distinct merge truncated to k — EXACT,
+        // the union's k smallest distinct hashes of any row split are
+        // the whole's
+        (cur, ins) => kmvToStr(slice(array_sort(array_distinct(concat(
+          coalesce(kmvFromStr(cur), array().cast("array<bigint>")), ins))), 1, k)),
+        lit(null).cast("string")))
+      else Seq(
         // the NON-NULL count: what Average divides by and what count(v)
         // means — n_rows alone cannot serve either when v has NULLs
-        count(col(valueCol)).as("nn_val"),
-        sum(col(valueCol).cast(DecimalType(18, 2))).as("sum_val"))
+        Cell("nn_" + s, count(col(c)), sum(when(col(c).isNotNull, sign).otherwise(0L)),
+          (cur, d) => coalesce(cur, lit(0L)) + d, lit(0L)),
+        Cell("sum_" + s, sum(v), sum(sign * v),
+          (cur, d) => (coalesce(cur, lit(0).cast(dec)) + d).cast(dec), nullDec)) ++
+        // least/greatest skip nulls (null only when BOTH sides are) —
+        // exactly the tighten-or-keep semantics growth needs
+        (if (!extrema) Nil else Seq(
+          Cell("min_" + s, min(v), min(when(sign === 1L, v)),
+            (cur, d) => least(cur, d).cast(dec), nullDec),
+          Cell("max_" + s, max(v), max(when(sign === 1L, v)),
+            (cur, d) => greatest(cur, d).cast(dec), nullDec)))
+    }
+  }
 
-  /** Post-maintenance rows for every group the feed touched, with the
-    * zero-count groups flagged `__dead` — the source relation of ONE
-    * [[TableStore.applyChanges]] commit. Eagerly checkpointed: the
-    * plan reads the summary's live data directory and the mutation
-    * retires files out of it, so a lazy re-evaluation mid-commit would
-    * read the half-updated table (the L16 checkpoint idiom). */
-  private def mergedDelta(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCol: String, fromGen: Int, toGen: Int,
-      derive: Seq[(String, String)] = Nil): DataFrame = {
-    val ch = derivedView(store.readChanges(base, fromGen, toGen), derive)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    // the null-group guard rides the count delta (null on success → +0)
-    // so column pruning cannot drop it
-    val guard = coalesce(assert_true(
-      groupCols.map(col(_).isNotNull).reduce(_ && _),
-      lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
-        "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
-    val delta = ch
-      .groupBy(groupCols.map(col): _*)
-      .agg((sum(sign) + first(guard)).as("__dn"),
-        sum(when(col(valueCol).isNotNull, sign).otherwise(0L)).as("__dnn"),
-        sum(sign * col(valueCol).cast(DecimalType(18, 2))).as("__dsum"))
+  /** One row per `spec.keys(groupCols)`: `n_rows`, then the spec's
+    * measure columns — the bootstrap and the fold's rescan. */
+  private[graft] def summarize(spec: Spec, base: DataFrame, groupCols: Seq[String]): DataFrame =
+    spec.measured(base, groupCols, Nil)
+      .groupBy(spec.keys(groupCols).map(col): _*)
+      .agg(count(lit(1)).as("n_rows"), spec.cells.map(m => m.agg.as(m.name)): _*)
+
+  /** The one fold: post-maintenance rows for every group the range
+    * touched, zero-count groups flagged `__dead` — the source of ONE
+    * [[TableStore.applyChanges]] commit. Invertible specs merge the
+    * feed's per-group deltas (add/subtract). The others take grown ∪
+    * rescan ∪ dead: insert-only groups merge their deltas; groups a
+    * delete touched re-derive from the base PINNED AT `toGen` (the live
+    * table would leak a concurrent writer's rows past the watermark and
+    * double-apply them next fold), semi-joined to exactly those groups;
+    * a touched group with no rows left dies. `fromGen` None (a vacuum
+    * removed the watermark's snapshot) is that rescan branch with every
+    * group touched.
+    *
+    * Checkpoints: the result (the commit retires files its lazy plan
+    * reads) and, on the rescan path, the delta and the rescan (each
+    * feeds two branches; AQE's stage reuse does not span this DAG).
+    * They are local — not replicated, so losing an executor fails the
+    * fold; the one-commit intent protocol keeps that safe, because the
+    * next call refolds the same range. */
+  private def fold(store: TableStore, base: String, summary: String, spec: Spec,
+      groupCols: Seq[String], derive: Seq[(String, String)],
+      fromGen: Option[Int], toGen: Int): DataFrame = {
+    val keys = spec.keys(groupCols)
     val cur = store.readTable(summary)
     val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
     // a negative post-count means the feed and the summary disagree
@@ -82,35 +171,45 @@ object IncrementalAgg {
     // instead of silently dropping the group; the guard rides n_rows
     // (null on success → +0) so pruning cannot elide it
     val negGuard = coalesce(assert_true(nRows >= 0,
-      lit(s"incremental aggregate: negative row count maintaining '$summary' from " +
-        s"the change feed of '$base' — feed and summary are inconsistent")).cast("long"),
-      lit(0L))
-    delta.join(cur,
-        groupCols.map(c => delta(c) <=> cur(c)).reduce(_ && _), "left")
-      .select(groupCols.map(delta(_)) :+
-        (nRows + negGuard).as("n_rows") :+
-        (coalesce(cur("nn_val"), lit(0L)) + col("__dnn")).as("nn_val") :+
-        (coalesce(cur("sum_val"), lit(0).cast(DecimalType(18, 2))) + col("__dsum"))
-          .cast(DecimalType(18, 2)).as("sum_val"): _*)
-      .withColumn("__dead", col("n_rows") === 0L)
-      .localCheckpoint(true)
-  }
-
-  /** Fold the change feed of `base` between two committed generations
-    * into the `summary` store table (schema = [[summarize]]'s, PK =
-    * `groupCols`). Inserts and update-postimages count +1/+value,
-    * deletes and update-preimages −1/−value; groups whose count
-    * reaches zero are deleted from the summary. The whole fold is ONE
-    * [[TableStore.applyChanges]] commit (upsert live + delete dead
-    * atomically — two commits would expose dead groups with stale
-    * counts to a reader landing between them, permanently so on a
-    * crash). A feed with no rows (e.g. a pure rewrite: compaction,
-    * Z-order) commits nothing. */
-  def maintain(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCol: String, fromGen: Int, toGen: Int,
-      derive: Seq[(String, String)] = Nil): Unit = {
-    val merged = mergedDelta(store, base, summary, groupCols, valueCol, fromGen, toGen, derive)
-    if (!merged.isEmpty) store.applyChanges(summary, merged, "__dead", groupCols)
+      lit(s"incremental aggregate: negative ${if (spec.quantile) "bucket" else "row"} " +
+        s"count maintaining '$summary' from the change feed of '$base' — feed and " +
+        "summary are inconsistent")).cast("long"), lit(0L))
+    def merged(d: DataFrame): DataFrame =
+      d.join(cur, keys.map(c => d(c) <=> cur(c)).reduce(_ && _), "left")
+        .select(keys.map(d(_)) :+ (nRows + negGuard).as("n_rows") :++
+          spec.cells.map(m => m.merge(cur(m.name), col("__d_" + m.name)).as(m.name)): _*)
+    def delta(from: Int): DataFrame = {
+      val ch = spec.measured(derivedView(store.readChanges(base, from, toGen), derive),
+        groupCols, Seq("_change_type"))
+      // the null-group guard rides the count delta (null on success →
+      // +0) so column pruning cannot drop it
+      val guard = coalesce(assert_true(
+        groupCols.map(col(_).isNotNull).reduce(_ && _),
+        lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
+          "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
+      ch.groupBy(keys.map(col): _*)
+        .agg((sum(sign) + first(guard)).as("__dn"),
+          spec.cells.map(m => m.delta.as("__d_" + m.name)) ++
+            (if (spec.invertible) Nil
+            else Seq(sum(when(sign === -1L, 1L).otherwise(0L)).as("__dels"))): _*)
+    }
+    def pinned = derivedView(store.readTableAt(base, toGen), derive)
+    def withRescan(grown: Option[DataFrame], touched: DataFrame, scope: DataFrame): DataFrame = {
+      val rescan = summarize(spec, scope, groupCols).localCheckpoint(true)
+      val dead = touched.join(rescan.select(keys.map(col): _*), keys, "left_anti")
+        .select(keys.map(col) :+ lit(0L).as("n_rows") :++ spec.cells.map(m => m.dead.as(m.name)): _*)
+      grown.fold(rescan)(_.unionByName(rescan)).unionByName(dead)
+    }
+    val rows = fromGen match {
+      case Some(from) if spec.invertible => merged(delta(from))
+      case Some(from) =>
+        val d = delta(from).localCheckpoint(true)
+        val touched = d.filter(col("__dels") > 0L).select(keys.map(col): _*)
+        withRescan(Some(merged(d.filter(col("__dels") === 0L))), touched,
+          pinned.join(touched, groupCols, "left_semi"))
+      case None => withRescan(None, cur.select(keys.map(col): _*), pinned)
+    }
+    rows.withColumn("__dead", col("n_rows") === 0L).localCheckpoint(true)
   }
 
   private def appliedKey(base: String) = s"graft.maint.$base.applied"
@@ -153,7 +252,7 @@ object IncrementalAgg {
     * if the summary advanced past `sgen` it did (advance the
     * watermark), otherwise it never committed (drop the intent and the
     * next call refolds from the old watermark). Decidable both ways
-    * BECAUSE maintenance is one commit; this is why [[maintain]] must
+    * BECAUSE maintenance is one commit; this is why the fold must
     * never be split back into upsert+delete. */
   private def recover(store: TableStore, base: String, summary: String): Unit = {
     val props = store.properties(summary)
@@ -166,6 +265,56 @@ object IncrementalAgg {
       else store.setProperties(summary, Map.empty,
         remove = Seq(pendingKey(base), sgenKey(base)))
     }
+  }
+
+  /** The crash-safe driver behind every `maintain*ToCurrent` (protocol:
+    * [[maintainToCurrent]]); a range whose fold has no rows (e.g. a pure
+    * rewrite: compaction, Z-order) only advances the watermark. */
+  private[graft] def maintainSpec(store: TableStore, base: String, summary: String,
+      spec: Spec, groupCols: Seq[String], derive: Seq[(String, String)]): Unit = {
+    recover(store, base, summary)
+    val applied = store.properties(summary).get(appliedKey(base)).map(_.toInt)
+      .getOrElse(throw new IllegalStateException(
+        s"no maintenance watermark for '$base' on '$summary' — seed it with " +
+          "markMaintained at the generation the summary was bootstrapped from"))
+    val gens = store.snapshots(base).map(_._1)
+    val cur = gens.last
+    if (cur <= applied) return
+    val rows = fold(store, base, summary, spec, groupCols, derive,
+      Some(applied).filter(gens.contains), cur)
+    if (!rows.isEmpty) {
+      store.setProperties(summary, Map(pendingKey(base) -> cur.toString,
+        sgenKey(base) -> store.snapshots(summary).last._1.toString))
+      store.applyChanges(summary, rows, "__dead", spec.keys(groupCols))
+    }
+    markMaintained(store, base, summary, cur)
+  }
+
+  // ── the public per-kind entry points (delegates over one Spec) ──────
+
+  /** The C41 canonical summary: one row per group with the row count,
+    * the non-null count `nn_val` and the exact DECIMAL(18,2) sum
+    * `sum_val` of `valueCol`. Used once at bootstrap (the only full base
+    * scan) and by the reconciliation spec. */
+  def summarize(base: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame =
+    summarize(Spec("sum", Seq(valueCol)), base, groupCols)
+
+  /** Fold the change feed of `base` between two committed generations
+    * into the `summary` store table (schema = [[summarize]]'s, PK =
+    * `groupCols`). Inserts and update-postimages count +1/+value,
+    * deletes and update-preimages −1/−value; groups whose count
+    * reaches zero are deleted from the summary. The whole fold is ONE
+    * [[TableStore.applyChanges]] commit (upsert live + delete dead
+    * atomically — two commits would expose dead groups with stale
+    * counts to a reader landing between them, permanently so on a
+    * crash). A feed with no rows (e.g. a pure rewrite: compaction,
+    * Z-order) commits nothing. */
+  def maintain(store: TableStore, base: String, summary: String,
+      groupCols: Seq[String], valueCol: String, fromGen: Int, toGen: Int,
+      derive: Seq[(String, String)] = Nil): Unit = {
+    val rows = fold(store, base, summary, Spec("sum", Seq(valueCol)), groupCols, derive,
+      Some(fromGen), toGen)
+    if (!rows.isEmpty) store.applyChanges(summary, rows, "__dead", groupCols)
   }
 
   /** S36's crash-safe driver: fold everything committed to `base`
@@ -185,115 +334,28 @@ object IncrementalAgg {
   def maintainToCurrent(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCol: String,
       derive: Seq[(String, String)] = Nil): Unit =
-    maintainProtocol(store, base, summary) { (applied, cur) =>
-      val merged = mergedDelta(store, base, summary, groupCols, valueCol, applied, cur, derive)
-      if (merged.isEmpty) None
-      else Some(() => store.applyChanges(summary, merged, "__dead", groupCols))
-    }
+    maintainSpec(store, base, summary, Spec("sum", Seq(valueCol)), groupCols, derive)
 
-  /** The reusable crash-safety half of [[maintainToCurrent]]: `fold`
-    * inspects the pinned range and returns None (nothing to commit —
-    * the watermark just advances) or the ONE summary commit to run
-    * between the write-ahead intent and the watermark advance. */
-  private def maintainProtocol(store: TableStore, base: String, summary: String)(
-      fold: (Int, Int) => Option[() => Unit]): Unit = {
-    recover(store, base, summary)
-    val applied = store.properties(summary).get(appliedKey(base)).map(_.toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"no maintenance watermark for '$base' on '$summary' — seed it with " +
-          "markMaintained at the generation the summary was bootstrapped from"))
-    val cur = store.snapshots(base).last._1
-    if (cur <= applied) return
-    fold(applied, cur) match {
-      case None => markMaintained(store, base, summary, cur)
-      case Some(commit) =>
-        store.setProperties(summary, Map(pendingKey(base) -> cur.toString,
-          sgenKey(base) -> store.snapshots(summary).last._1.toString))
-        commit()
-        markMaintained(store, base, summary, cur)
-    }
-  }
-
-  // ── C41c: multi-measure summaries ───────────────────────────────────
-
-  /** One summary maintaining SEVERAL measures: n_rows plus an exact
-    * DECIMAL(18,2) `sum_<c>` per value column — one maintenance fold
-    * and one table where N single-measure summaries would cost N folds
-    * and N change-feed reads per commit. The TPC-H-Q1 shape ("per
+  /** One summary maintaining SEVERAL measures: n_rows plus `nn_<c>` and
+    * an exact DECIMAL(18,2) `sum_<c>` per value column — one maintenance
+    * fold and one table where N single-measure summaries would cost N
+    * folds and N change-feed reads per commit. The TPC-H-Q1 shape ("per
     * flag: row count, sum of quantity, sum of price, averages") is one
     * of these. */
   def summarizeMulti(base: DataFrame, groupCols: Seq[String],
-      valueCols: Seq[String]): DataFrame = {
-    require(valueCols.nonEmpty, "summarizeMulti: need at least one value column")
-    base.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
-        valueCols.flatMap(c => Seq(
-          count(col(c)).as("nn_" + c),
-          sum(col(c).cast(DecimalType(18, 2))).as("sum_" + c))): _*)
-  }
-
-  /** [[mergedDelta]] generalized over the measure list — the same
-    * change-feed algebra, one signed decimal delta per measure. */
-  private def mergedMultiDelta(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCols: Seq[String],
-      fromGen: Int, toGen: Int, derive: Seq[(String, String)] = Nil): DataFrame = {
-    val ch = derivedView(store.readChanges(base, fromGen, toGen), derive)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    val guard = coalesce(assert_true(
-      groupCols.map(col(_).isNotNull).reduce(_ && _),
-      lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
-        "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
-    val dec = DecimalType(18, 2)
-    val delta = ch.groupBy(groupCols.map(col): _*)
-      .agg((sum(sign) + first(guard)).as("__dn"),
-        valueCols.flatMap(c => Seq(
-          sum(when(col(c).isNotNull, sign).otherwise(0L)).as("__dnn_" + c),
-          sum(sign * col(c).cast(dec)).as("__d_" + c))): _*)
-    val cur = store.readTable(summary)
-    val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
-    val negGuard = coalesce(assert_true(nRows >= 0,
-      lit(s"incremental aggregate: negative row count maintaining '$summary' from " +
-        s"the change feed of '$base' — feed and summary are inconsistent")).cast("long"),
-      lit(0L))
-    delta.join(cur,
-        groupCols.map(c => delta(c) <=> cur(c)).reduce(_ && _), "left")
-      .select(groupCols.map(delta(_)) :+
-        (nRows + negGuard).as("n_rows") :++
-        valueCols.flatMap(c => Seq(
-          (coalesce(cur("nn_" + c), lit(0L)) + col("__dnn_" + c)).as("nn_" + c),
-          (coalesce(cur("sum_" + c), lit(0).cast(dec)) + col("__d_" + c))
-            .cast(dec).as("sum_" + c))): _*)
-      .withColumn("__dead", col("n_rows") === 0L)
-      .localCheckpoint(true)
-  }
+      valueCols: Seq[String]): DataFrame =
+    summarize(Spec("multi", valueCols), base, groupCols)
 
   /** [[maintainToCurrent]] for a [[summarizeMulti]] summary — same
     * durable watermark/intent protocol, one fold for all measures. */
   def maintainMultiToCurrent(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCols: Seq[String],
       derive: Seq[(String, String)] = Nil): Unit =
-    maintainProtocol(store, base, summary) { (applied, cur) =>
-      val merged = mergedMultiDelta(store, base, summary, groupCols, valueCols, applied, cur, derive)
-      if (merged.isEmpty) None
-      else Some(() => store.applyChanges(summary, merged, "__dead", groupCols))
-    }
-
-  // ── C41d: distinct-count (KMV sketch) summaries ─────────────────────
-
-  /** Sketch registers persist as a comma-joined ascending decimal
-    * string — store tables are SQL-typed (no arrays), and the CSV form
-    * is itself oracle-derivable (DuckDB string_agg over the same
-    * ordered hashes). Empty sketch (a group of all-NULL values) is the
-    * empty string. */
-  private def kmvToStr(a: Column): Column = array_join(a.cast("array<string>"), ",")
-  private def kmvFromStr(s: Column): Column =
-    when(length(s) === 0, array().cast("array<bigint>"))
-      .otherwise(split(s, ",").cast("array<bigint>"))
+    maintainSpec(store, base, summary, Spec("multi", valueCols), groupCols, derive)
 
   /** The C41d summary: one row per group with the row count and the
-    * portable KMV distinct-count registers of `valueCol` (the k
-    * smallest distinct md5-derived 32-bit hashes of its string
+    * portable KMV distinct-count registers `kmv_val` of `valueCol` (the
+    * k smallest distinct md5-derived 32-bit hashes of its string
     * rendering — [[graft.plans.KmvCore]]). COUNT is self-maintainable;
     * the sketch only GROWS under inserts (exact set union), so
     * [[maintainDistinctToCurrent]] merges insert-only groups from the
@@ -301,80 +363,14 @@ object IncrementalAgg {
     * protocol applied to cardinality. */
   def summarizeDistinct(base: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int = 64): DataFrame =
-    base.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
-        kmvToStr(graft.plans.GraftFunctions.kmvSketch(col(valueCol), k)).as("kmv_val"))
-
-  /** Post-maintenance rows for every group the feed touched. Insert-
-    * only groups: count delta + register union (sorted distinct merge
-    * truncated to k — EXACT, the union's k smallest distinct hashes of
-    * any row split are the whole's). Groups any delete touched:
-    * re-derive from the base pinned at the fold's target generation,
-    * restricted to exactly those groups. */
-  private def mergedDistinctDelta(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCol: String, k: Int,
-      fromGen: Int, toGen: Int, derive: Seq[(String, String)] = Nil): DataFrame = {
-    val ch = derivedView(store.readChanges(base, fromGen, toGen), derive)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    val guard = coalesce(assert_true(
-      groupCols.map(col(_).isNotNull).reduce(_ && _),
-      lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
-        "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
-    // r16 (guide §1.2/§2.2 — profiled: the rescan families re-ran the
-    // change-feed aggregate and the base rescan once per CONSUMING
-    // branch; AQE's stage reuse does not span the grown/touched/dead
-    // DAG here): materialize the O(changes) delta ONCE, eagerly — the
-    // three branches then read memory instead of re-scanning the feed
-    val delta = ch.groupBy(groupCols.map(col): _*)
-      .agg((sum(sign) + first(guard)).as("__dn"),
-        graft.plans.GraftFunctions.kmvSketch(
-          when(sign === 1L, col(valueCol)), k).as("__ins"),
-        sum(when(sign === -1L, 1L).otherwise(0L)).as("__dels"))
-      .localCheckpoint(true)
-    val cur = store.readTable(summary)
-    val grown = delta.filter(col("__dels") === 0L)
-    val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
-    val negGuard = coalesce(assert_true(nRows >= 0,
-      lit(s"incremental aggregate: negative row count maintaining '$summary' from " +
-        s"the change feed of '$base' — feed and summary are inconsistent")).cast("long"),
-      lit(0L))
-    val curArr = coalesce(kmvFromStr(cur("kmv_val")), array().cast("array<bigint>"))
-    val grownRows = grown.join(cur,
-        groupCols.map(c => grown(c) <=> cur(c)).reduce(_ && _), "left")
-      .select(groupCols.map(grown(_)) :+
-        (nRows + negGuard).as("n_rows") :+
-        kmvToStr(slice(array_sort(array_distinct(
-          concat(curArr, col("__ins")))), 1, k)).as("kmv_val"): _*)
-    val touched = delta.filter(col("__dels") > 0L).select(groupCols.map(col): _*)
-    // r16: the rescan feeds BOTH the union and the dead anti-join —
-    // materialized once so the pinned base is scanned once per fold
-    val rescan = summarizeDistinct(
-      derivedView(store.readTableAt(base, toGen), derive)
-        .join(touched, groupCols, "left_semi"),
-      groupCols, valueCol, k)
-      .localCheckpoint(true)
-    val dead = touched.join(rescan.select(groupCols.map(col): _*), groupCols, "left_anti")
-      .select(groupCols.map(col) :+ lit(0L).as("n_rows") :+
-        lit(null).cast("string").as("kmv_val"): _*)
-    grownRows.unionByName(rescan).unionByName(dead)
-      .withColumn("__dead", col("n_rows") === 0L)
-      .localCheckpoint(true)
-  }
+    summarize(Spec("distinct", Seq(valueCol), k), base, groupCols)
 
   /** [[maintainToCurrent]] for a [[summarizeDistinct]] summary — same
     * durable watermark/intent protocol; `k` must match the bootstrap's. */
   def maintainDistinctToCurrent(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCol: String, k: Int = 64,
       derive: Seq[(String, String)] = Nil): Unit =
-    maintainProtocol(store, base, summary) { (applied, cur) =>
-      val merged = mergedDistinctDelta(
-        store, base, summary, groupCols, valueCol, k, applied, cur, derive)
-      if (merged.isEmpty) None
-      else Some(() => store.applyChanges(summary, merged, "__dead", groupCols))
-    }
-
-  // ── C41g: quantile-sketch summaries ─────────────────────────────────
+    maintainSpec(store, base, summary, Spec("distinct", Seq(valueCol), k), groupCols, derive)
 
   /** The C41g summary: the A46 integer log-histogram
     * ([[graft.operators.Analytics.valueSketch]]'s bucket definition,
@@ -391,240 +387,45 @@ object IncrementalAgg {
     * before bucketing, which is what [[graft.plans.SummaryRewrite
     * .registerQuantile]] registers as the summary's BASE FILTER. */
   def summarizeQuantile(base: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame =
-    graft.operators.Analytics.withSketchBuckets(
-        base.select(groupCols.map(col) :+
-          graft.operators.Analytics.sketchUnits(valueCol).as("__x"): _*)
-          .filter(col("__x").isNotNull))
-      .groupBy(groupCols.map(col) :+ col("bin_id") :+ col("bin_upper"): _*)
-      .agg(count(lit(1)).as("n_rows"))
-
-  /** Post-maintenance rows for every (group, bucket) the feed touched
-    * — the C41 counter fold with the bucket as a derived group column:
-    * inserts +1, deletes −1 on the observation's bucket, dead buckets
-    * (count 0) deleted. O(changes), never a rescan. `derive` (C47)
-    * projects user-derived group columns (e.g. day → to_date(ts))
-    * before bucketing — the "p99 per day, maintained" MV. */
-  private def mergedQuantileDelta(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCol: String, fromGen: Int, toGen: Int,
-      derive: Seq[(String, String)] = Nil): DataFrame = {
-    val allGroups = groupCols ++ Seq("bin_id", "bin_upper")
-    val ch = graft.operators.Analytics.withSketchBuckets(
-      derivedView(store.readChanges(base, fromGen, toGen), derive)
-        .select(groupCols.map(col) :+ col("_change_type") :+
-          graft.operators.Analytics.sketchUnits(valueCol).as("__x"): _*)
-        .filter(col("__x").isNotNull))
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    val guard = coalesce(assert_true(
-      groupCols.map(col(_).isNotNull).reduce(_ && _),
-      lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
-        "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
-    val delta = ch.groupBy(allGroups.map(col): _*)
-      .agg((sum(sign) + first(guard)).as("__dn"))
-    val cur = store.readTable(summary)
-    val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
-    val negGuard = coalesce(assert_true(nRows >= 0,
-      lit(s"incremental aggregate: negative bucket count maintaining '$summary' from " +
-        s"the change feed of '$base' — feed and summary are inconsistent")).cast("long"),
-      lit(0L))
-    delta.join(cur,
-        allGroups.map(c => delta(c) <=> cur(c)).reduce(_ && _), "left")
-      .select(allGroups.map(delta(_)) :+
-        (nRows + negGuard).as("n_rows"): _*)
-      .withColumn("__dead", col("n_rows") === 0L)
-      .localCheckpoint(true)
-  }
+    summarize(Spec("quantile", Seq(valueCol)), base, groupCols)
 
   /** [[maintainToCurrent]] for a [[summarizeQuantile]] summary — same
     * durable watermark/intent protocol; the summary's PK must be
-    * groupCols ++ (bin_id, bin_upper). */
+    * groupCols ++ (bin_id, bin_upper). `derive` (C47) projects
+    * user-derived group columns (e.g. day → to_date(ts)) before
+    * bucketing — the "p99 per day, maintained" MV. */
   def maintainQuantileToCurrent(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCol: String,
       derive: Seq[(String, String)] = Nil): Unit =
-    maintainProtocol(store, base, summary) { (applied, cur) =>
-      val merged = mergedQuantileDelta(
-        store, base, summary, groupCols, valueCol, applied, cur, derive)
-      if (merged.isEmpty) None
-      else Some(() => store.applyChanges(summary, merged, "__dead",
-        groupCols ++ Seq("bin_id", "bin_upper")))
-    }
-
-  // ── C41d × C41c: multi-measure distinct-count (KMV) summaries ───────
+    maintainSpec(store, base, summary, Spec("quantile", Seq(valueCol)), groupCols, derive)
 
   /** [[summarizeDistinct]] over SEVERAL measures: n_rows plus a
     * `kmv_<c>` register column per value column — one maintenance fold
     * and one table where N single-measure distinct summaries would
     * cost N change-feed reads per commit. */
   def summarizeDistinctMulti(base: DataFrame, groupCols: Seq[String],
-      valueCols: Seq[String], k: Int = 64): DataFrame = {
-    require(valueCols.nonEmpty, "summarizeDistinctMulti: need at least one value column")
-    base.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
-        valueCols.map(c => kmvToStr(
-          graft.plans.GraftFunctions.kmvSketch(col(c), k)).as("kmv_" + c)): _*)
-  }
-
-  /** [[mergedDistinctDelta]] generalized over the measure list: groups
-    * with only inserts union registers PER measure (exact set
-    * algebra), groups any delete touched re-derive from the base
-    * pinned at the fold's target generation. `derive` (C47) projects
-    * user-derived group columns over the feed AND the rescan reads,
-    * exactly like the single-measure path. */
-  private def mergedDistinctMultiDelta(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCols: Seq[String], k: Int,
-      fromGen: Int, toGen: Int, derive: Seq[(String, String)] = Nil): DataFrame = {
-    val ch = derivedView(store.readChanges(base, fromGen, toGen), derive)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    val guard = coalesce(assert_true(
-      groupCols.map(col(_).isNotNull).reduce(_ && _),
-      lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
-        "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
-    // r16: one eager delta materialization for the three branches (see
-    // mergedDistinctDelta)
-    val delta = ch.groupBy(groupCols.map(col): _*)
-      .agg((sum(sign) + first(guard)).as("__dn"),
-        valueCols.map(c => graft.plans.GraftFunctions.kmvSketch(
-          when(sign === 1L, col(c)), k).as("__ins_" + c)) :+
-          sum(when(sign === -1L, 1L).otherwise(0L)).as("__dels"): _*)
-      .localCheckpoint(true)
-    val cur = store.readTable(summary)
-    val grown = delta.filter(col("__dels") === 0L)
-    val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
-    val negGuard = coalesce(assert_true(nRows >= 0,
-      lit(s"incremental aggregate: negative row count maintaining '$summary' from " +
-        s"the change feed of '$base' — feed and summary are inconsistent")).cast("long"),
-      lit(0L))
-    val grownRows = grown.join(cur,
-        groupCols.map(c => grown(c) <=> cur(c)).reduce(_ && _), "left")
-      .select(groupCols.map(grown(_)) :+
-        (nRows + negGuard).as("n_rows") :++
-        valueCols.map { c =>
-          val curArr = coalesce(kmvFromStr(cur("kmv_" + c)), array().cast("array<bigint>"))
-          kmvToStr(slice(array_sort(array_distinct(
-            concat(curArr, col("__ins_" + c)))), 1, k)).as("kmv_" + c)
-        }: _*)
-    val touched = delta.filter(col("__dels") > 0L).select(groupCols.map(col): _*)
-    // r16: materialized once — union + dead anti-join share one base scan
-    val rescan = summarizeDistinctMulti(
-      derivedView(store.readTableAt(base, toGen), derive)
-        .join(touched, groupCols, "left_semi"),
-      groupCols, valueCols, k)
-      .localCheckpoint(true)
-    val dead = touched.join(rescan.select(groupCols.map(col): _*), groupCols, "left_anti")
-      .select(groupCols.map(col) :+ lit(0L).as("n_rows") :++
-        valueCols.map(c => lit(null).cast("string").as("kmv_" + c)): _*)
-    grownRows.unionByName(rescan).unionByName(dead)
-      .withColumn("__dead", col("n_rows") === 0L)
-      .localCheckpoint(true)
-  }
+      valueCols: Seq[String], k: Int = 64): DataFrame =
+    summarize(Spec("distinctmulti", valueCols, k), base, groupCols)
 
   /** [[maintainToCurrent]] for a [[summarizeDistinctMulti]] summary. */
   def maintainDistinctMultiToCurrent(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCols: Seq[String], k: Int = 64,
       derive: Seq[(String, String)] = Nil): Unit =
-    maintainProtocol(store, base, summary) { (applied, cur) =>
-      val merged = mergedDistinctMultiDelta(
-        store, base, summary, groupCols, valueCols, k, applied, cur, derive)
-      if (merged.isEmpty) None
-      else Some(() => store.applyChanges(summary, merged, "__dead", groupCols))
-    }
-
-  // ── C41c × C41b: multi-measure min/max summaries ────────────────────
+    maintainSpec(store, base, summary, Spec("distinctmulti", valueCols, k), groupCols, derive)
 
   /** [[summarizeMulti]] extended with per-measure extrema: n_rows plus
-    * `sum_<c>`, `min_<c>`, `max_<c>` for every value column — ONE
-    * summary (and one maintenance fold) serving the full TPC-H-Q1
+    * `nn_<c>`, `sum_<c>`, `min_<c>`, `max_<c>` for every value column —
+    * ONE summary (and one maintenance fold) serving the full TPC-H-Q1
     * aggregate menu (count/sum/avg/min/max over several measures). */
   def summarizeMultiMinMax(base: DataFrame, groupCols: Seq[String],
-      valueCols: Seq[String]): DataFrame = {
-    require(valueCols.nonEmpty, "summarizeMultiMinMax: need at least one value column")
-    val dec = DecimalType(18, 2)
-    base.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
-        valueCols.flatMap(c => Seq(
-          count(col(c)).as("nn_" + c),
-          sum(col(c).cast(dec)).as("sum_" + c),
-          min(col(c).cast(dec)).as("min_" + c),
-          max(col(c).cast(dec)).as("max_" + c))): _*)
-  }
-
-  /** [[mergedMinMaxDelta]] generalized over the measure list: groups
-    * with only inserts fold incrementally (sums add, extrema tighten
-    * via least/greatest PER measure), groups any delete touched
-    * re-derive from the base pinned at the fold's target generation —
-    * the C41b rescan protocol, one fold for all measures. */
-  private def mergedMultiMinMaxDelta(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCols: Seq[String],
-      fromGen: Int, toGen: Int, derive: Seq[(String, String)] = Nil): DataFrame = {
-    val ch = derivedView(store.readChanges(base, fromGen, toGen), derive)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    val guard = coalesce(assert_true(
-      groupCols.map(col(_).isNotNull).reduce(_ && _),
-      lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
-        "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
-    val dec = DecimalType(18, 2)
-    def v(c: String) = col(c).cast(dec)
-    // r16: one eager delta materialization for the three branches (see
-    // mergedDistinctDelta)
-    val delta = ch.groupBy(groupCols.map(col): _*)
-      .agg((sum(sign) + first(guard)).as("__dn"),
-        valueCols.flatMap(c => Seq(
-          sum(when(col(c).isNotNull, sign).otherwise(0L)).as("__dnn_" + c),
-          sum(sign * v(c)).as("__d_" + c),
-          min(when(sign === 1L, v(c))).as("__imin_" + c),
-          max(when(sign === 1L, v(c))).as("__imax_" + c))) :+
-          sum(when(sign === -1L, 1L).otherwise(0L)).as("__dels"): _*)
-      .localCheckpoint(true)
-    val cur = store.readTable(summary)
-    val grown = delta.filter(col("__dels") === 0L)
-    val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
-    val negGuard = coalesce(assert_true(nRows >= 0,
-      lit(s"incremental aggregate: negative row count maintaining '$summary' from " +
-        s"the change feed of '$base' — feed and summary are inconsistent")).cast("long"),
-      lit(0L))
-    val grownRows = grown.join(cur,
-        groupCols.map(c => grown(c) <=> cur(c)).reduce(_ && _), "left")
-      .select(groupCols.map(grown(_)) :+
-        (nRows + negGuard).as("n_rows") :++
-        valueCols.flatMap(c => Seq(
-          (coalesce(cur("nn_" + c), lit(0L)) + col("__dnn_" + c)).as("nn_" + c),
-          (coalesce(cur("sum_" + c), lit(0).cast(dec)) + col("__d_" + c))
-            .cast(dec).as("sum_" + c),
-          least(cur("min_" + c), col("__imin_" + c)).cast(dec).as("min_" + c),
-          greatest(cur("max_" + c), col("__imax_" + c)).cast(dec).as("max_" + c))): _*)
-    val touched = delta.filter(col("__dels") > 0L).select(groupCols.map(col): _*)
-    // r16: materialized once — union + dead anti-join share one base scan
-    val rescan = summarizeMultiMinMax(
-      derivedView(store.readTableAt(base, toGen), derive)
-        .join(touched, groupCols, "left_semi"),
-      groupCols, valueCols)
-      .localCheckpoint(true)
-    val dead = touched.join(rescan.select(groupCols.map(col): _*), groupCols, "left_anti")
-      .select(groupCols.map(col) :+ lit(0L).as("n_rows") :++
-        valueCols.flatMap(c => Seq(
-          lit(0L).as("nn_" + c),
-          lit(null).cast(dec).as("sum_" + c),
-          lit(null).cast(dec).as("min_" + c),
-          lit(null).cast(dec).as("max_" + c))): _*)
-    grownRows.unionByName(rescan).unionByName(dead)
-      .withColumn("__dead", col("n_rows") === 0L)
-      .localCheckpoint(true)
-  }
+      valueCols: Seq[String]): DataFrame =
+    summarize(Spec("multiminmax", valueCols), base, groupCols)
 
   /** [[maintainToCurrent]] for a [[summarizeMultiMinMax]] summary. */
   def maintainMultiMinMaxToCurrent(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCols: Seq[String],
       derive: Seq[(String, String)] = Nil): Unit =
-    maintainProtocol(store, base, summary) { (applied, cur) =>
-      val merged = mergedMultiMinMaxDelta(
-        store, base, summary, groupCols, valueCols, applied, cur, derive)
-      if (merged.isEmpty) None
-      else Some(() => store.applyChanges(summary, merged, "__dead", groupCols))
-    }
-
-  // ── C41b: min/max summaries ─────────────────────────────────────────
+    maintainSpec(store, base, summary, Spec("multiminmax", valueCols), groupCols, derive)
 
   /** The extended summary: [[summarize]]'s count/sum plus the exact
     * DECIMAL(18,2) min and max of `valueCol` per group. COUNT/SUM are
@@ -634,92 +435,12 @@ object IncrementalAgg {
     * change feed and RESCANS just the groups the feed deleted from —
     * bounded by the affected groups' rows, never the base. */
   def summarizeMinMax(base: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame =
-    base.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"),
-        count(col(valueCol)).as("nn_val"),
-        sum(col(valueCol).cast(DecimalType(18, 2))).as("sum_val"),
-        min(col(valueCol).cast(DecimalType(18, 2))).as("min_val"),
-        max(col(valueCol).cast(DecimalType(18, 2))).as("max_val"))
-
-  /** Post-maintenance rows for every group the feed touched, min/max
-    * included. Groups with ONLY inserts fold incrementally (count/sum
-    * deltas; min/max tighten via least/greatest). Groups with any
-    * delete or update-preimage row re-derive from the CURRENT base
-    * restricted to exactly those groups (a deleted extremum cannot be
-    * maintained from the summary — the next-best value lives only in
-    * the base). Eagerly checkpointed like [[mergedDelta]]: the plan
-    * reads both the summary's and the base's live directories and the
-    * mutation rewrites the summary out from under a lazy plan. */
-  private def mergedMinMaxDelta(store: TableStore, base: String, summary: String,
-      groupCols: Seq[String], valueCol: String, fromGen: Int, toGen: Int,
-      derive: Seq[(String, String)] = Nil): DataFrame = {
-    val ch = derivedView(store.readChanges(base, fromGen, toGen), derive)
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    val guard = coalesce(assert_true(
-      groupCols.map(col(_).isNotNull).reduce(_ && _),
-      lit(s"incremental aggregate: NULL group value in change feed of '$base' — " +
-        "group columns are summary PK columns and must be non-null")).cast("long"), lit(0L))
-    val v = col(valueCol).cast(DecimalType(18, 2))
-    // r16: one eager delta materialization for the three branches (see
-    // mergedDistinctDelta)
-    val delta = ch.groupBy(groupCols.map(col): _*)
-      .agg((sum(sign) + first(guard)).as("__dn"),
-        sum(when(col(valueCol).isNotNull, sign).otherwise(0L)).as("__dnn"),
-        sum(sign * v).as("__dsum"),
-        min(when(sign === 1L, v)).as("__imin"),
-        max(when(sign === 1L, v)).as("__imax"),
-        sum(when(sign === -1L, 1L).otherwise(0L)).as("__dels"))
-      .localCheckpoint(true)
-    val cur = store.readTable(summary)
-    val grown = delta.filter(col("__dels") === 0L)
-    val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
-    val negGuard = coalesce(assert_true(nRows >= 0,
-      lit(s"incremental aggregate: negative row count maintaining '$summary' from " +
-        s"the change feed of '$base' — feed and summary are inconsistent")).cast("long"),
-      lit(0L))
-    val dec = DecimalType(18, 2)
-    val grownRows = grown.join(cur,
-        groupCols.map(c => grown(c) <=> cur(c)).reduce(_ && _), "left")
-      .select(groupCols.map(grown(_)) :+
-        (nRows + negGuard).as("n_rows") :+
-        (coalesce(cur("nn_val"), lit(0L)) + col("__dnn")).as("nn_val") :+
-        (coalesce(cur("sum_val"), lit(0).cast(dec)) + col("__dsum")).cast(dec).as("sum_val") :+
-        // least/greatest skip nulls (null only when BOTH sides are) —
-        // exactly the tighten-or-keep semantics growth needs
-        least(cur("min_val"), col("__imin")).cast(dec).as("min_val") :+
-        greatest(cur("max_val"), col("__imax")).cast(dec).as("max_val"): _*)
-    // groups the feed deleted from: re-derive from the base PINNED AT
-    // toGen (the fold's watermark target — reading the live table would
-    // leak a concurrent base writer's newer rows past the watermark and
-    // double-apply them on the next fold), restricted to exactly those
-    // groups (semi-join — prunes on a bucketed/clustered base); a group
-    // with no surviving rows emits NO rescan row and must die — recover
-    // it from the delta side
-    val touched = delta.filter(col("__dels") > 0L).select(groupCols.map(col): _*)
-    // r16: materialized once — union + dead anti-join share one base scan
-    val rescan = summarizeMinMax(
-      derivedView(store.readTableAt(base, toGen), derive)
-        .join(touched, groupCols, "left_semi"),
-      groupCols, valueCol)
-      .localCheckpoint(true)
-    val dead = touched.join(rescan.select(groupCols.map(col): _*), groupCols, "left_anti")
-      .select(groupCols.map(col) :+ lit(0L).as("n_rows") :+ lit(0L).as("nn_val") :+
-        lit(null).cast(dec).as("sum_val") :+ lit(null).cast(dec).as("min_val") :+
-        lit(null).cast(dec).as("max_val"): _*)
-    grownRows.unionByName(rescan).unionByName(dead)
-      .withColumn("__dead", col("n_rows") === 0L)
-      .localCheckpoint(true)
-  }
+    summarize(Spec("minmax", Seq(valueCol)), base, groupCols)
 
   /** [[maintainToCurrent]] for a [[summarizeMinMax]] summary — same
     * durable watermark/intent protocol, min/max-aware fold. */
   def maintainMinMaxToCurrent(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCol: String,
       derive: Seq[(String, String)] = Nil): Unit =
-    maintainProtocol(store, base, summary) { (applied, cur) =>
-      val merged = mergedMinMaxDelta(store, base, summary, groupCols, valueCol, applied, cur, derive)
-      if (merged.isEmpty) None
-      else Some(() => store.applyChanges(summary, merged, "__dead", groupCols))
-    }
+    maintainSpec(store, base, summary, Spec("minmax", Seq(valueCol)), groupCols, derive)
 }

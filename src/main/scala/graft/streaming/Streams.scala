@@ -1585,20 +1585,8 @@ object Streams {
       summary: String,
       groupCols: Seq[String],
       valueCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // first trigger: the caller bootstrapped the summary in sync
-          // with the base's current generation — seed the watermark
-          // there (idempotent: seeded once, before the first upsert)
-          if (graft.store.IncrementalAgg.maintainedGen(store, base, summary).isEmpty)
-            graft.store.IncrementalAgg.markMaintained(
-              store, base, summary, store.snapshots(base).last._1)
-          store.upsert(base, batch)
-          graft.store.IncrementalAgg.maintainToCurrent(
-            store, base, summary, groupCols, valueCol)
-        }
-    }
+    summarySink(stream, store, base, summary)(
+      () => graft.store.IncrementalAgg.maintainToCurrent(store, base, summary, groupCols, valueCol))
 
   /** S36b: [[summaryMaintenanceSink]] for a C41b min/max summary
     * ([[graft.store.IncrementalAgg.summarizeMinMax]]) — identical
@@ -1613,17 +1601,8 @@ object Streams {
       summary: String,
       groupCols: Seq[String],
       valueCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          if (graft.store.IncrementalAgg.maintainedGen(store, base, summary).isEmpty)
-            graft.store.IncrementalAgg.markMaintained(
-              store, base, summary, store.snapshots(base).last._1)
-          store.upsert(base, batch)
-          graft.store.IncrementalAgg.maintainMinMaxToCurrent(
-            store, base, summary, groupCols, valueCol)
-        }
-    }
+    summarySink(stream, store, base, summary)(
+      () => graft.store.IncrementalAgg.maintainMinMaxToCurrent(store, base, summary, groupCols, valueCol))
 
   /** S36c: [[summaryMaintenanceSink]] for a C41d distinct-count
     * summary ([[graft.store.IncrementalAgg.summarizeDistinct]]) —
@@ -1641,17 +1620,8 @@ object Streams {
       groupCols: Seq[String],
       valueCol: String,
       k: Int = 64): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          if (graft.store.IncrementalAgg.maintainedGen(store, base, summary).isEmpty)
-            graft.store.IncrementalAgg.markMaintained(
-              store, base, summary, store.snapshots(base).last._1)
-          store.upsert(base, batch)
-          graft.store.IncrementalAgg.maintainDistinctToCurrent(
-            store, base, summary, groupCols, valueCol, k)
-        }
-    }
+    summarySink(stream, store, base, summary)(
+      () => graft.store.IncrementalAgg.maintainDistinctToCurrent(store, base, summary, groupCols, valueCol, k))
 
   /** S36d: [[summaryMaintenanceSink]] for a C41e multi-measure MIN/MAX
     * summary ([[graft.store.IncrementalAgg.summarizeMultiMinMax]]) —
@@ -1664,17 +1634,8 @@ object Streams {
       summary: String,
       groupCols: Seq[String],
       valueCols: Seq[String]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("update").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          if (graft.store.IncrementalAgg.maintainedGen(store, base, summary).isEmpty)
-            graft.store.IncrementalAgg.markMaintained(
-              store, base, summary, store.snapshots(base).last._1)
-          store.upsert(base, batch)
-          graft.store.IncrementalAgg.maintainMultiMinMaxToCurrent(
-            store, base, summary, groupCols, valueCols)
-        }
-    }
+    summarySink(stream, store, base, summary)(
+      () => graft.store.IncrementalAgg.maintainMultiMinMaxToCurrent(store, base, summary, groupCols, valueCols))
 
   /** S36e: [[summaryMaintenanceSink]] for a C41g quantile-sketch
     * summary ([[graft.store.IncrementalAgg.summarizeQuantile]]) — the
@@ -1692,6 +1653,18 @@ object Streams {
       summary: String,
       groupCols: Seq[String],
       valueCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    summarySink(stream, store, base, summary)(
+      () => graft.store.IncrementalAgg.maintainQuantileToCurrent(store, base, summary, groupCols, valueCol))
+
+  /** The one body behind every `summary*MaintenanceSink`: each non-empty
+    * micro-batch upserts into the base, then runs `fold` (the kind's
+    * watermark-driven maintainer). First trigger: the caller
+    * bootstrapped the summary in sync with the base's current
+    * generation — seed the watermark there (idempotent: seeded once,
+    * before the first upsert). */
+  private def summarySink(stream: DataFrame, store: graft.store.TableStore,
+      base: String, summary: String)(
+      fold: () => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.outputMode("update").foreachBatch {
       (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
@@ -1699,8 +1672,7 @@ object Streams {
             graft.store.IncrementalAgg.markMaintained(
               store, base, summary, store.snapshots(base).last._1)
           store.upsert(base, batch)
-          graft.store.IncrementalAgg.maintainQuantileToCurrent(
-            store, base, summary, groupCols, valueCol)
+          fold()
         }
     }
 

@@ -4,16 +4,27 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ↔ Expression bridge for graft's custom Catalyst expressions.
+/** graft's one door into Spark's `private[sql]` API: Column ↔
+  * Expression for the custom Catalyst expressions, DataFrames over
+  * custom logical plans, and the scan/footer/listener internals below.
   *
   * Spark 4 hides Column construction from raw expressions behind
   * `private[sql] ExpressionUtils` (the Connect refactor); a library
   * shipping native expressions reaches it from an org.apache.spark.sql
   * subpackage — the established pattern for Spark-native extensions.
+  * All graft logic stays in the `graft` packages.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a custom [[org.apache.spark.sql.catalyst.plans
+    * .logical.LogicalPlan]] node — Spark exposes no public constructor
+    * for this (`Dataset.ofRows` is private[sql]). */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Block until queued listener events are delivered (`listenerBus` is
     * private[spark]) — Bench reads per-query task metrics from a

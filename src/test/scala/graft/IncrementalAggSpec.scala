@@ -1971,7 +1971,7 @@ class IncrementalAggSpec extends AnyFunSuite {
           expand)
       }
       def scans(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] =
-        org.apache.spark.sql.graftglue.Glue.ofRows(spark, p)
+        org.apache.spark.sql.graftx.bridge.ofRows(spark, p)
           .queryExecution.optimizedPlan.collect {
             case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
               fs.location.rootPaths.map(_.toString)
