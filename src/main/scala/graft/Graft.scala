@@ -483,15 +483,19 @@ final case class Graft(
 
     /** C46e: the MV ADVISOR — the inverse of [[explain]]: given an
       * aggregate query over a managed table, the `define(...)` argument
-      * sets that would make it serve. Each entry names the base table,
-      * the group columns (query groupings + filter columns +
-      * COUNT(DISTINCT) columns — the last served EXACTLY via the C44q
-      * path, never swapped for a sketch), derived columns for
-      * expression groupings, the value columns and the kind
+      * sets that would make it serve. The query may be any shape the
+      * rewrite serves: a plain scan, grouping sets, a star of dimension
+      * joins (recommending on the fact table) or grouping sets over a
+      * star. Each entry names the base table, the group columns (fact
+      * groupings + join keys + filter columns + COUNT(DISTINCT)
+      * columns — the last served EXACTLY via the C44q path, never
+      * swapped for a sketch), derived columns for expression
+      * groupings, the value columns and the kind
       * (sum/multi/minmax/multiminmax/distinct/distinctmulti). A query
       * mixing sketch and arithmetic measures yields two entries. Empty:
-      * nothing recommendable (no aggregate over a single managed table,
-      * or an unservable aggregate shape). Metadata-only. */
+      * nothing recommendable (no aggregate over a managed fact table, a
+      * dim-side or mixed measure, or an unservable aggregate shape).
+      * Metadata-only. */
     def recommend(df: DataFrame): Seq[(String, graft.plans.SummaryRewrite.Recommendation)] =
       graft.plans.SummaryRewrite.recommend(df).flatMap { rec =>
         val names = store.tableNames().filter(n =>

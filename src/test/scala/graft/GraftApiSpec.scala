@@ -512,6 +512,8 @@ class GraftApiSpec extends AnyFunSuite {
           .toDF("k", "grp", "sub", "v"), Seq("k"))
       g.create.tableFromDataFrame("other",
         Seq((1L, 5.0)).toDF("k", "w"), Seq("k"))
+      g.create.tableFromDataFrame("grp_dim",
+        Seq(("a", "hot"), ("b", "cold"), ("c", "cold")).toDF("grp", "klass"), Seq("grp"))
       g.summaries.define("s_g", "base", Seq("grp"), Seq("v"))
       g.summaries.define("s_other", "other", Seq("k"), Seq("w"))
       def reason(df: org.apache.spark.sql.DataFrame, summary: String): String =
@@ -538,11 +540,40 @@ class GraftApiSpec extends AnyFunSuite {
       assert(reason(base.groupBy("grp")
           .agg(min(col("v").cast(DecimalType(18, 2))).as("lo")), "s_g")
         .startsWith("missing summary column"))
+      // the same reasons over every other shape the rewrite serves: a
+      // rollup, a star (joined back to a dim on the group column) and a
+      // rollup over that star. SQL over temp views: the Dataset API's
+      // rollup-over-join trips Spark's DetectAmbiguousSelfJoin check
+      base.createOrReplaceTempView("c46d_base")
+      g.read.table("grp_dim").createOrReplaceTempView("c46d_dim")
+      val star = "c46d_base JOIN c46d_dim USING (grp)"
+      val shapes = Seq("rollup" -> ("c46d_base", "ROLLUP(%s)"),
+        "star" -> (star, "klass, %s"), "rollup over star" -> (star, "ROLLUP(klass, %s)"))
+      def sq(shape: (String, String), by: String = "grp", where: String = "",
+          aggs: String = "count(1) AS n, sum(cast(v as decimal(18,2))) AS s") =
+        spark.sql(s"SELECT $aggs FROM ${shape._1} $where GROUP BY ${shape._2.format(by)}")
+      shapes.foreach { case (name, shape) =>
+        def r(df: org.apache.spark.sql.DataFrame): String = reason(df, "s_g")
+        assert(r(sq(shape)) == "served", s"$name: ${r(sq(shape))}")
+        val mismatch = r(sq(shape, by = "sub", aggs = "count(1) AS n"))
+        assert(mismatch.startsWith("grouping mismatch"), s"$name: $mismatch")
+        val pred = r(sq(shape, where = "WHERE v > 15"))
+        assert(pred.startsWith("unservable predicate"), s"$name: $pred")
+        val unservable = r(sq(shape, aggs = "sum(cast(k as decimal(18,2))) AS sk"))
+        assert(unservable.startsWith("unservable aggregate"), s"$name: $unservable")
+        val missing = r(sq(shape, aggs = "min(cast(v as decimal(18,2))) AS lo"))
+        assert(missing.startsWith("missing summary column"), s"$name: $missing")
+      }
       // stale after an unmaintained commit, served again after maintain
       g.write.insert("base", Seq((4L, "c", "x", 40.0)).toDF("k", "grp", "sub", "v"))
       assert(reason(q(g.read.table("base")), "s_g").startsWith("stale"))
+      shapes.foreach { case (name, shape) =>
+        val stale = reason(sq(shape), "s_g")
+        assert(stale.startsWith("stale"), s"$name: $stale")
+      }
       g.summaries.maintain("s_g")
       assert(reason(q(g.read.table("base")), "s_g") == "served")
+      shapes.foreach { case (name, shape) => assert(reason(sq(shape), "s_g") == "served", name) }
       // probing must not disturb normal serving (plan caches intact)
       assert(q(g.read.table("base")).collect().length == 3)
     } finally { g.summaries.detach("base"); g.summaries.detach("other"); g.close() }
@@ -660,6 +691,17 @@ class GraftApiSpec extends AnyFunSuite {
       val r6 = g.summaries.recommend(q6)
       assert(r6.size == 1 && r6.head._1 == "ev" &&
         r6.head._2.groupCols == Seq("etype"), r6.toString)
+      // grouping sets over the STAR: a rollup of the dim attribute and
+      // the join key reads as the same canonical shape the rewrite serves
+      // (SQL over temp views: the Dataset API's rollup-over-join trips
+      // Spark's DetectAmbiguousSelfJoin check)
+      g.read.table("ev").createOrReplaceTempView("c46eb_ev")
+      g.read.table("etype_dim").createOrReplaceTempView("c46eb_dim")
+      def q7 = spark.sql("""SELECT klass, etype, count(1) AS n,
+        sum(cast(v as decimal(18,2))) AS s FROM c46eb_ev JOIN c46eb_dim USING (etype)
+        GROUP BY ROLLUP(klass, etype)""")
+      val r7 = g.summaries.recommend(q7)
+      assert(r7.size == 1 && r7.head._1 == "ev", r7.toString)
       // the C46e closed loop, now over a join: define(returned args) →
       // the star query serves with the fact never scanned
       defineRec("adv5", r5.head)
@@ -668,13 +710,19 @@ class GraftApiSpec extends AnyFunSuite {
         s"the recommended define must serve the star: ${q5.queryExecution.optimizedPlan}")
       assert(scans(q6).forall(_.contains("adv5")),
         s"the recommended define must serve the rollup: ${q6.queryExecution.optimizedPlan}")
+      defineRec("adv7", r7.head)
+      assert(!scans(q7).exists(_.contains("/ev/")) && scans(q7).exists(_.contains("adv7")),
+        s"the recommended define must serve the rollup over the star: ${q7.queryExecution.optimizedPlan}")
       // values survive on the recommended route
       g.summaries.detach("ev")
       val raw5 = q5.orderBy("klass").collect().map(_.toString).toSeq
       val raw6 = q6.collect().map(_.toString).toSeq.sorted
+      val raw7 = q7.collect().map(_.toString).toSeq.sorted
       g.summaries.attach("adv5")
       assert(q5.orderBy("klass").collect().map(_.toString).toSeq == raw5)
       assert(q6.collect().map(_.toString).toSeq.sorted == raw6)
+      g.summaries.attach("adv7")
+      assert(q7.collect().map(_.toString).toSeq.sorted == raw7)
       // a dim-side measure stays unrecommendable (it cannot serve)
       def qBad = {
         val f = g.read.table("ev"); val d = g.read.table("etype_dim")

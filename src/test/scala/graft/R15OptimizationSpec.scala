@@ -128,7 +128,7 @@ class R15OptimizationSpec extends AnyFunSuite {
           assert(!src.contains("BenchSetup"), "Verify must not touch BenchSetup")
       }
     } finally it.close()
-    assert(arming.sorted == Seq("Bench.scala", "ProfileBench.scala"),
+    assert(arming.sorted == Seq("Bench.scala"),
       s"unexpected BenchSetup arming sites: $arming")
   }
 
