@@ -421,7 +421,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run (the
     // driver never sets it, so driver benches always run the full set)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
@@ -429,21 +429,7 @@ object Bench {
     val selected = only.map(o => headline.filter { case (n, a) =>
       o.contains(n) || o.contains(a) }).getOrElse(headline)
     val withStream = only.forall(_.contains("stream_minhash"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // fork-free local filesystem (r15): without libhadoop the stock
-      // local FS forks chmod/ls per file op — see NioLocalFileSystem
-      .config(graft.store.NioLocalFileSystem.ConfKey,
-        graft.store.NioLocalFileSystem.ConfValue)
-      .config(graft.store.NioLocalFileSystem.AbstractConfKey,
-        graft.store.NioLocalFileSystem.AbstractConfValue)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, cpus)
 
     // r16 (VERDICT r15 #1): honest timed spans. The r15 clone cache —
     // which replaced lifecycle bootstraps INSIDE the timed span with

@@ -1,26 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // fork-free local filesystem (r15): without libhadoop the stock
-      // local FS forks chmod/ls per file op — see NioLocalFileSystem
-      .config(graft.store.NioLocalFileSystem.ConfKey,
-        graft.store.NioLocalFileSystem.ConfValue)
-      .config(graft.store.NioLocalFileSystem.AbstractConfKey,
-        graft.store.NioLocalFileSystem.AbstractConfValue)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus)
     new java.io.File(outDir).mkdirs()
     // Canonicalize timestamps to NTZ (session TZ is UTC, so values are
     // unchanged): the DuckDB oracle produces naive timestamps, and a

@@ -9,7 +9,7 @@ package graft.plans
   *    ordered pairs per group. The whole-stage-codegen path cannot call
   *    into a Scala closure without defeating the generated loop, so its
   *    Java source mirrors this contract instead of invoking it; PairsSpec
-  *    pins the two paths equal (GRAFT_PAIRS_NO_CODEGEN A/B).
+  *    pins the two paths equal (a `spark.sql.codegen.wholeStage` A/B).
   *  - STREAMING: S6 (Streams.minhashCandidates) holds a time-evicted
   *    signature buffer per band bucket in keyed state and folds each
   *    arrival through [[againstBuffer]] — the incremental emission whose

@@ -188,10 +188,6 @@ case class PairsWithinGroupsExec(
 
   override def needCopyResult: Boolean = true // out rows reuse the projection buffer
 
-  /** A/B escape hatch (bench comparisons): GRAFT_PAIRS_NO_CODEGEN=1
-    * falls back to the interpreted doExecute. */
-  override def supportCodegen: Boolean = !sys.env.contains("GRAFT_PAIRS_NO_CODEGEN")
-
   override protected def doProduce(ctx: CodegenContext): String = {
     val input = ctx.addMutableState("scala.collection.Iterator", "pairsInput",
       v => s"$v = inputs[0];", forceInline = true)
@@ -237,8 +233,10 @@ case class PairsWithinGroupsExec(
        |    $i++;
        |    $j = $i + 1;
        |  }
-       |  // group exhausted — buffer the next run of equal keys
-       |  if ($lookahead == null && !$input.hasNext()) { $buffer.clear(); return; }
+       |  // group exhausted — buffer the next run of equal keys; on end of
+       |  // input fall THROUGH (break, not return) so a parent's trailing
+       |  // code after this loop (an aggregate's finish) stays reachable
+       |  if ($lookahead == null && !$input.hasNext()) { $buffer.clear(); break; }
        |  if ($lookahead == null) $lookahead = (InternalRow) $input.next();
        |  $key = $keyProj.apply($lookahead).copy();
        |  $buffer.clear();

@@ -56,6 +56,13 @@ object TableStore {
       })
   }
 
+  /** One committed generation: its number, the schema/PK/layout its
+    * files are read under, and its file set as data-dir-relative keys.
+    * `newest` = the table's latest generation, whose files live in
+    * data/ by the commit protocol. */
+  private[store] final case class Generation(gen: Int, meta: Meta, rels: Seq[String],
+      newest: Boolean)
+
   /** Dense `_pk` identity for an insert batch, scale-safe.
     *
     * The obvious `row_number() over (order by hash)` funnels the whole
@@ -119,7 +126,7 @@ final class TableStore(
     root: String,
     audit: String => Unit = TableStore.defaultAudit,
     clock: () => Long = () => System.currentTimeMillis()) {
-  import TableStore.Meta
+  import TableStore.{Generation, Meta}
 
   /** The store's root directory (bench bootstrap cloning needs the
     * table dir location; see CoreQueries.bootstrapBase). */
@@ -542,7 +549,7 @@ final class TableStore(
     if (m.columns.exists(_._1 == column)) throw errors.TableAlreadyExists(s"$name.$column")
     writeMeta(name, m.copy(columns = m.columns :+ (column -> SqlType.parse(sqlType))))
     audit(s"add column $name.$column $sqlType")
-    commitSnapshot(name, nextGen(name), Some(lastCommittedRels(name)))
+    commitSnapshot(name, nextGen(name), generation(name).rels)
   }
 
   /** Column type/nullability change (reference modify.column alter,
@@ -605,7 +612,7 @@ final class TableStore(
       columns = m.columns.filterNot(_._1 == column),
       primaryKey = m.primaryKey.filterNot(_ == column)))
     audit(s"drop column $name.$column")
-    commitSnapshot(name, nextGen(name), Some(lastCommittedRels(name)))
+    commitSnapshot(name, nextGen(name), generation(name).rels)
   }
 
   /** Add/drop the primary key (reference modify.primary_key,
@@ -624,7 +631,7 @@ final class TableStore(
     writeMeta(name, m.copy(primaryKey = primaryKey))
     audit(if (primaryKey.isEmpty) s"drop primary key $name"
           else s"set primary key $name (${primaryKey.mkString(", ")})")
-    commitSnapshot(name, nextGen(name), Some(lastCommittedRels(name)))
+    commitSnapshot(name, nextGen(name), generation(name).rels)
   }
 
   /** Rows violating PK uniqueness: one hash aggregation on the key. */
@@ -680,7 +687,7 @@ final class TableStore(
           s"$bad existing rows violate '$expression' on $name")
       writeMeta(name, m.copy(checks = m.checks :+ (constraint -> expression)))
       audit(s"add check $name.$constraint: $expression")
-      commitSnapshot(name, nextGen(name), Some(lastCommittedRels(name)))
+      commitSnapshot(name, nextGen(name), generation(name).rels)
     }
 
   def dropCheckConstraint(name: String, constraint: String): Unit =
@@ -690,7 +697,7 @@ final class TableStore(
         throw errors.UndefinedCheckConstraint(name, constraint)
       writeMeta(name, m.copy(checks = m.checks.filterNot(_._1 == constraint)))
       audit(s"drop check $name.$constraint")
-      commitSnapshot(name, nextGen(name), Some(lastCommittedRels(name)))
+      commitSnapshot(name, nextGen(name), generation(name).rels)
     }
 
   /** Pre-flight audit for a PROPOSED constraint: the rows that would
@@ -797,9 +804,10 @@ final class TableStore(
     * data.tmp swap as every rewrite. The 100 TB version runs per-bucket
     * incrementally; locally one job covers the whole table. */
   def compact(name: String, rowsPerFile: Long = 1000000L): Unit = withCommitLock(name) {
-    val m = meta(name)
-    if (!hasDataFiles(name)) return
-    val df = read(name)
+    val g = generation(name)
+    if (g.rels.isEmpty) return
+    val m = g.meta
+    val df = readGen(name, g)
     if (m.buckets > 0)
       // repartition on the bucket expression co-locates each bucket into
       // one task → one file per bucket directory after partitionBy
@@ -813,24 +821,10 @@ final class TableStore(
 
   /** Raw table scan reconciled to the meta schema (null-fill added
     * columns, drop dropped ones, cast to meta types). */
-  def read(name: String): DataFrame = {
-    val m = meta(name)
-    if (!hasDataFiles(name))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.sparkSchema)
-    // merged footer schema (cached): files written before a
-    // metadata-only addColumn lack the new column; the merged schema
-    // keeps it visible (they read as null).
-    val raw = mergedScan(name, Seq(dataPath(name)), basePath = false)
-    alignTo(raw, m)
-  }
+  def read(name: String): DataFrame = readGen(name, generation(name))
 
-  private def hasDataFiles(name: String): Boolean = {
-    val p = dataPath(name)
-    if (!fs.exists(p)) return false
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) return true
-    false
-  }
+  private def readGen(name: String, g: Generation): DataFrame =
+    alignTo(scan(name, g, g.rels), g.meta)
 
   private def alignTo(df: DataFrame, m: Meta, extra: Seq[Column] = Nil): DataFrame = {
     import org.apache.spark.sql.types.TimestampNTZType
@@ -879,16 +873,17 @@ final class TableStore(
     // under the lock: analyze read-modify-writes stats.json, and an
     // unlocked run could resurrect entries a concurrent dropColumn
     // scrubbed (or clobber a vacuum's trim)
-    val m = meta(name)
+    val g = generation(name)
+    val m = g.meta
     val cols0 = if (columns.nonEmpty) columns else m.primaryKey
     if (cols0.isEmpty) throw errors.UndefinedPrimaryKey(name)
     val missing = cols0.filterNot(m.columns.map(_._1).contains)
     if (missing.nonEmpty) throw errors.ColumnDoesNotExist(name, missing)
     val dataDir = dataPath(name)
-    val present = if (hasDataFiles(name)) listDataFiles(name) else Seq.empty
     // stats are keyed by the data-dir-RELATIVE path (bucket dir included):
     // basenames collide across __bucket=N dirs, see FileStats.fileKey
-    val presentKeys = present.map(p => FileStats.relativeKey(dataDir, p)).toSet
+    val present = g.rels
+    val presentKeys = present.toSet
     val existing = FileStats.read(fs, statsPath(name)).getOrElse(Map.empty)
     // entries for files a retained SNAPSHOT still references outlive the
     // files' retirement from data/ (rel paths are never reused and files
@@ -958,12 +953,11 @@ final class TableStore(
               cs.bloom.exists(b => graft.plans.BloomSketch.bitsOf(b) == bloomBits)
           })
       }
-    val toScan = present.filterNot(p => kept.contains(FileStats.relativeKey(dataDir, p)))
+    val toScan = present.filterNot(kept.contains)
     val scanned: Map[String, FileStats.FileStat] =
       if (toScan.isEmpty) Map.empty
       else {
-        val raw = mergedScan(name, toScan, basePath = true)
-        val aligned = alignTo(raw, m, extra = Seq(input_file_name().as("__file")))
+        val aligned = alignTo(scan(name, g, toScan), m, extra = Seq(input_file_name().as("__file")))
         val aggs = statKeys.flatMap { sk =>
           Seq(min(sk.value).cast("string").as(s"__min_${sk.key}"),
             max(sk.value).cast("string").as(s"__max_${sk.key}"),
@@ -1009,7 +1003,7 @@ final class TableStore(
     // flat-layout seed file) — record rows=0 so pruning can drop them too
     val empty = statKeys.map(sk =>
       sk.key -> FileStats.ColStat(None, None, 0L, Some(sk.dom))).toMap
-    val empties = toScan.map(p => FileStats.relativeKey(dataDir, p) -> FileStats.FileStat(0L, empty)).toMap
+    val empties = toScan.map(_ -> FileStats.FileStat(0L, empty)).toMap
     FileStats.write(fs, statsPath(name), forSnapshots ++ empties ++ kept ++ scanned)
   }
 
@@ -1028,18 +1022,11 @@ final class TableStore(
     * scan proportional to the un-analyzed tail — the same contract as
     * incremental analyze itself. */
   def countRows(name: String): Long = {
-    val dataDir = dataPath(name)
-    meta(name) // existence check → TableDoesNotExist like every read
-    if (!hasDataFiles(name)) return 0L
-    val present = listDataFiles(name)
+    val g = generation(name) // existence check → TableDoesNotExist like every read
     val stats = FileStats.read(fs, statsPath(name)).getOrElse(Map.empty)
-    val (covered, uncovered) =
-      present.partition(p => stats.contains(FileStats.relativeKey(dataDir, p)))
-    val fromStats = covered.iterator
-      .map(p => stats(FileStats.relativeKey(dataDir, p)).rows).sum
-    val scanned =
-      if (uncovered.isEmpty) 0L
-      else mergedScan(name, uncovered, basePath = true).count()
+    val (covered, uncovered) = g.rels.partition(stats.contains)
+    val fromStats = covered.iterator.map(stats(_).rows).sum
+    val scanned = if (uncovered.isEmpty) 0L else scan(name, g, uncovered).count()
     fromStats + scanned
   }
 
@@ -1081,8 +1068,9 @@ final class TableStore(
         case other => throw errors.InvalidValue(c, s"cluster unsupported for type $other")
       }
     }
-    if (!hasDataFiles(name)) return
-    val df = read(name)
+    val g = generation(name)
+    if (g.rels.isEmpty) return
+    val df = readGen(name, g)
     val aggs = columns.flatMap(c =>
       Seq(min(linear(c)).as(s"__lo_$c"), max(linear(c)).as(s"__hi_$c")))
     val bounds = df.agg(aggs.head, aggs.tail: _*).collect()(0)
@@ -1113,29 +1101,33 @@ final class TableStore(
   // ── snapshots (time travel) ─────────────────────────────────────────────
   //
   // Every mutation commits a GENERATION: a manifest (history/m<N>.json)
-  // listing the table's current file set (data-dir-relative paths) plus
-  // the schema at commit time, and — for rewrites — the replaced
+  // listing the table's file set (data-dir-relative paths) plus the
+  // schema at commit time, and — for rewrites — the replaced
   // files/bucket-dirs MOVED (renamed, never copied) to history/g<N>/
-  // under their original relative paths instead of being deleted.
+  // under their original relative paths instead of being deleted. The
+  // newest manifest IS the table: current reads, keyed mutations and
+  // every commit take the file set from it, never from a listing of
+  // data/ (only [[repair]] re-lists, to fold in what a crash stranded).
   // Because part-file names embed a job UUID, a relative path is never
   // reused, so a snapshot read resolves each manifest entry to either
-  // data/<rel> (still current) or the unique history/g<M>/<rel> that
-  // removed it. Cost model at 100 TB: commits add one O(#files) driver
-  // listing + an O(replaced) rename pass (no data copied, no extra
-  // write amplification); concurrent readers of generation N keep
-  // working through a rewrite because their files are renamed within
-  // the same filesystem, not destroyed — the gap [[vacuum]] closes on
-  // the old immediate-delete behavior.
+  // data/<rel> (in the newest manifest) or the unique history/g<M>/<rel>
+  // that removed it. Cost model at 100 TB: a commit writes one
+  // O(#files) manifest derived from what it wrote and retired, plus an
+  // O(replaced) rename pass (no data copied, no extra write
+  // amplification); concurrent readers of generation N keep working
+  // through a rewrite because their files are renamed within the same
+  // filesystem, not destroyed — the gap [[vacuum]] closes on the old
+  // immediate-delete behavior.
   //
   // Commit concurrency: the contract is SINGLE WRITER PER TABLE,
   // ENFORCED by the create-exclusive commit.lock (see withCommitLock) —
   // a second concurrent committer fails loudly with ConcurrentWrite
   // instead of silently losing a manifest to the nextGen race. The lock
-  // is also what makes the INCREMENTAL manifest form sound: appends and
-  // metadata-only DDL derive their manifest as previous-manifest + the
-  // writer's own committed-file delta (O(batch)), because under the
-  // lock the previous manifest IS the current file set. Rewrites keep
-  // the re-listing form — they already paid a listing.
+  // is also what makes the INCREMENTAL manifest form sound: every
+  // commit derives its manifest as previous-manifest + the writer's own
+  // delta (appends and metadata-only DDL add files or nothing; rewrites
+  // swap the files they retired for the files they staged), because
+  // under the lock the previous manifest IS the current file set.
   //
   // Snapshot reads PRUNE like current reads (round 6): the manifest
   // pins the schema and primary key at commit (so bucket pruning hashes
@@ -1216,24 +1208,23 @@ final class TableStore(
   }
 
   /** Write generation `gen`'s manifest: the table's file set + schema.
-    * tmp+rename like stats.json; a torn manifest can only lose the
-    * snapshot, never corrupt current reads.
+    * tmp+rename like stats.json, so a torn write never becomes a
+    * generation.
     *
-    * `files = None` RE-LISTS the data dir (rewrites — they already paid
-    * a listing, and listing is correct under any writer). `files =
-    * Some(rels)` is the INCREMENTAL form for appends and metadata-only
-    * DDL: the caller derives the set as previous-manifest + its own
-    * committed-file delta, so a high-frequency small-append stream pays
-    * O(batch) upkeep per commit instead of O(#files). The incremental
-    * form is sound because the commit lock serializes writers: the
-    * previous manifest IS the current file set. */
-  private def commitSnapshot(name: String, gen: Int, files: Option[Seq[String]] = None): Unit = {
+    * `files` is the caller's DERIVED file set: previous manifest plus
+    * its own delta (appends and metadata-only DDL add files or nothing;
+    * rewrites replace what they retired with what they staged), so no
+    * commit lists data/ — only [[repair]] passes a fresh listing, to
+    * fold in files a crashed writer stranded. Deriving is sound because
+    * the commit lock serializes writers: the previous manifest IS the
+    * current file set. */
+  private def commitSnapshot(name: String, gen: Int, files: Seq[String]): Unit = {
     val o = mapper.createObjectNode()
     o.put("gen", gen)
     o.put("ts", clock())
     o.set("meta", metaNode(meta(name)): JsonNode)
     val arr = o.putArray("files")
-    files.getOrElse(currentRels(name)).foreach(arr.add)
+    files.foreach(arr.add)
     fs.mkdirs(historyPath(name))
     val dst = manifestPath(name, gen)
     val tmp = new Path(dst.getParent, dst.getName + ".tmp")
@@ -1356,26 +1347,30 @@ final class TableStore(
     }
   }
 
-  /** The current file set as data-dir-relative keys (one listing). */
-  private def currentRels(name: String): Seq[String] =
-    if (!fs.exists(dataPath(name))) Seq.empty
-    else listDataFiles(name).map(p => FileStats.relativeKey(dataPath(name), p))
-
-  /** The last committed manifest's file set, or a fresh listing when no
-    * manifest exists yet (pre-history table) — the base an incremental
-    * commit extends. */
-  private def lastCommittedRels(name: String): Seq[String] =
-    manifestGens(name).lastOption match {
-      case Some(g) => readManifest(name, g)._2
-      case None    => currentRels(name)
+  /** The table as of `asOf` (its manifest's meta), or CURRENT: the
+    * newest manifest's file set under the live meta. A table never
+    * committed (a fresh create's flat seed file) falls back to one
+    * listing of data/ as generation 0. */
+  private def generation(name: String, asOf: Option[Int] = None): Generation = {
+    val newest = manifestGens(name).lastOption
+    asOf match {
+      case Some(g) =>
+        val (mAt, rels) = readManifest(name, g)
+        Generation(g, mAt, rels, newest.contains(g))
+      case None =>
+        val m = meta(name)
+        Generation(newest.getOrElse(0), m, newest.fold(listDataFiles(name))(readManifest(name, _)._2),
+          newest = true)
     }
+  }
 
   /** Parse generation `gen`'s manifest → (schema at commit, file set). */
   private def readManifest(name: String, gen: Int): (Meta, Seq[String]) = {
-    if (!exists(name)) throw errors.TableDoesNotExist(name)
-    if (!fs.exists(manifestPath(name, gen)))
-      throw errors.InvalidValue("asOf", s"no snapshot $gen for table $name (never committed or vacuumed)")
-    val in = fs.open(manifestPath(name, gen))
+    val in = try fs.open(manifestPath(name, gen)) catch {
+      case _: java.io.FileNotFoundException =>
+        if (!exists(name)) throw errors.TableDoesNotExist(name)
+        throw errors.InvalidValue("asOf", s"no snapshot $gen for table $name (never committed or vacuumed)")
+    }
     val node = try mapper.readTree(in) finally in.close()
     val mAt = parseMeta(node.get("meta"))
     val rels = (0 until node.get("files").size()).map(node.get("files").get(_).asText())
@@ -1396,20 +1391,16 @@ final class TableStore(
     * `gen` — the file set and schema its manifest recorded, whether the
     * files still live in data/ or were since moved to the history tree
     * by later rewrites. Raises on a vacuumed (or never-committed)
-    * generation. One recursive listing of data/ + history/ resolves all
-    * entries (O(#files) driver metadata, no per-file RPCs). */
-  def readTableAt(name: String, gen: Int): DataFrame = {
-    val (mAt, rels) = readManifest(name, gen)
-    snapshotScan(name, gen, mAt, rels)
-  }
+    * generation. The same [[scan]] a current read takes. */
+  def readTableAt(name: String, gen: Int): DataFrame = readGen(name, generation(name, Some(gen)))
 
-  /** Resolve each manifest entry of generation `gen` to a readable
-    * absolute path: data/<rel> while current, else the unique
-    * history/g<M>/<rel> (M > gen) that retired it. One recursive listing
-    * of data/ + history/ resolves all entries (O(#files) driver
-    * metadata, no per-file RPCs). */
-  private def resolveSnapshotFiles(name: String, gen: Int, rels: Seq[String]): Seq[String] = {
-    val current: Set[String] = currentRels(name).toSet
+  /** Resolve each manifest entry of an OLDER generation `gen` to its
+    * readable absolute path: data/<rel> while the newest manifest holds
+    * it, else the unique history/g<M>/<rel> (M > gen) that retired it.
+    * One recursive listing of history/ resolves all entries (O(#files)
+    * driver metadata, no per-file RPCs). */
+  private def resolveSnapshotFiles(name: String, gen: Int, rels: Seq[String]): Map[String, Path] = {
+    val current: Set[String] = generation(name).rels.toSet
     // removal index: relative path -> the generation that retired it
     val removed = scala.collection.mutable.Map.empty[String, Int]
     if (fs.exists(historyPath(name)))
@@ -1417,76 +1408,92 @@ final class TableStore(
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
         .foreach { s =>
           val g = s.getPath.getName.stripPrefix("g").toInt
-          val it = fs.listFiles(s.getPath, true)
-          while (it.hasNext) {
-            val p = it.next().getPath
-            if (p.getName.endsWith(".parquet"))
-              removed += FileStats.relativeKey(s.getPath, p) -> g
-          }
+          parquetFiles(s.getPath).foreach(rel => removed += rel -> g)
         }
     rels.map { rel =>
-      if (current.contains(rel)) new Path(dataPath(name), rel).toString
+      rel -> (if (current.contains(rel)) new Path(dataPath(name), rel)
       else removed.get(rel).filter(_ > gen) match {
-        case Some(g) => new Path(removedPath(name, g), rel).toString
+        case Some(g) => new Path(removedPath(name, g), rel)
         case None => throw errors.InvalidValue("asOf",
           s"snapshot $gen of table $name is no longer reconstructable ($rel vacuumed)")
-      }
-    }
+      })
+    }.toMap
   }
 
-  /** Scan `rels` of generation `gen` aligned to the snapshot schema. */
-  private def snapshotScan(name: String, gen: Int, mAt: Meta, rels: Seq[String]): DataFrame = {
+  /** THE scan of a committed generation — current reads, snapshot
+    * reads, the change feed, analyze, countRows and the keyed-mutation
+    * scan all take it: `rels` (the generation's whole file set, or a
+    * pruned subset) under the merged footer schema of the WHOLE set,
+    * unaligned. Spark plans from the named files and lists nothing
+    * (see bridge.committedParquetScan). The newest generation's files
+    * live in data/ by the commit protocol, so its scan is rooted at
+    * data/ — the identity [[dataLocation]] promises plan rules — and
+    * `__bucket` comes from the files' paths; an older generation's
+    * files resolve to their data/ or history/g<M> homes. `bucketed`
+    * advertises the PK-hash layout as HashPartitioning (the caller
+    * guarantees every file name embeds its bucket id). */
+  private def scan(name: String, g: Generation, rels: Seq[String],
+      bucketed: Boolean = false): DataFrame = {
     if (rels.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], mAt.sparkSchema)
-    // per-(table, gen) schema cache: a snapshot's rel set is immutable,
-    // so its merged schema never invalidates (file LOCATIONS may still
-    // move from data/ into history/g<N> — the schema does not)
-    val paths = resolveSnapshotFiles(name, gen, rels)
-    val schema = snapshotSchemaCache.computeIfAbsent((name, gen), _ =>
-      mergedSchemaOf(paths.map(new Path(_))))
-    val raw = spark.read.schema(schema).parquet(paths: _*)
-    alignTo(raw, mAt)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], g.meta.sparkSchema)
+    val path: String => Path =
+      if (g.newest) rel => fs.makeQualified(new Path(dataPath(name), rel))
+      else resolveSnapshotFiles(name, g.gen, g.rels).andThen(fs.makeQualified(_))
+    val leaves =
+      if (g.newest) Seq(fs.makeQualified(dataPath(name)) -> rels.map(r => fileStatus(path(r))))
+      else rels.map { r => val p = path(r); p -> Seq(fileStatus(p)) }
+    org.apache.spark.sql.graftx.bridge.committedParquetScan(spark, leaves,
+      mergedSchema(name, g.rels, path),
+      if (bucketed) Some((g.meta.buckets, g.meta.primaryKey)) else None)
   }
 
-  /** [[prunedRead]] for a snapshot read (C23 × C20/C20b): the same two
-    * cuts — bucket pruning, then per-file stats — applied to the
-    * MANIFEST's file set under the SNAPSHOT's schema and primary key.
-    * Sound because both inputs are immutable once written: a rel path is
-    * never reused, so a stats entry describes its file forever, and a
-    * bucketed table's PK cannot change (setPrimaryKey/dropColumn refuse),
-    * so the snapshot's bucket dirs were hashed by the same key the
-    * pruner uses. Files without stats are kept; the caller re-applies
-    * the full predicate. */
-  private def prunedSnapshotRead(name: String, gen: Int, mAt: Meta,
-      rels: Seq[String], where: String): DataFrame = {
-    def emptyDf =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], mAt.sparkSchema)
-    if (rels.isEmpty) return emptyDf
-    // parse the predicate against an empty frame OF THE SNAPSHOT SCHEMA
-    // so pruning decides the file set BEFORE any parquet resolution —
-    // file resolution (one recursive history listing) and the scan's
-    // schema merge then each run ONCE, over the survivors only
-    val pred = emptyDf.filter(Filters.parseWhere(emptyDf, where, dtoColsOf(mAt)))
+  /** File-level pruning for a where-d read of generation `g`, two
+    * independent cuts composed over its manifest's file set:
+    *
+    *  1. BUCKET pruning (bucketed tables, no stats needed): when the
+    *     predicate pins every PK column with top-level equality/IN
+    *     conjuncts, the PK hash determines the only `__bucket=` dirs
+    *     that can hold matches — the read-side twin of the mutation
+    *     path's bucket pruning. An equality read on a 100 TB bucketed
+    *     table touches 1/buckets of the files with zero maintenance.
+    *  2. STATS pruning (any layout, after analyze): drop every file
+    *     whose [min,max]/null stats prove it cannot match.
+    *
+    * Returns (after bucket cut, after zone-map/Bloom cut); None when the
+    * predicate doesn't resolve to a prunable condition. The predicate is
+    * parsed against an empty frame of the generation's schema, so
+    * pruning decides the file set before any scan is built. Sound for
+    * snapshots too: a rel path is never reused, so a stats entry
+    * describes its file forever, and a bucketed table's PK cannot
+    * change (setPrimaryKey/dropColumn refuse), so the generation's
+    * bucket dirs were hashed by the key its meta names. Files without
+    * stats are kept, and the caller re-applies the full predicate —
+    * pruning only shrinks the scan, never the answer. */
+  private def prune(name: String, g: Generation, where: String): Option[(Seq[String], Seq[String])] = {
+    val emptyDf =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], g.meta.sparkSchema)
+    // resolve the predicate through the analyzer so the pruners see real
+    // Catalyst comparisons over AttributeReferences (the raw Column is
+    // an unresolved ColumnNode tree in Spark 4)
+    val pred = emptyDf.filter(Filters.parseWhere(emptyDf, where, dtoColsOf(g.meta)))
       .queryExecution.analyzed
       .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
-      .getOrElse(return snapshotScan(name, gen, mAt, rels))
-    val types = typesWithDerived(mAt)
-    val afterBuckets = allowedBuckets(mAt, pred, types) match {
-      case Some(ids) => rels.filter { rel =>
+      .getOrElse(return None)
+    val types = typesWithDerived(g.meta)
+    val afterBuckets = allowedBuckets(g.meta, pred, types) match {
+      case Some(ids) => g.rels.filter { rel =>
         val dir = rel.takeWhile(_ != '/')
         !dir.startsWith(BucketCol + "=") ||
           scala.util.Try(dir.stripPrefix(BucketCol + "=").toLong).toOption.forall(ids.contains)
       }
-      case None => rels
+      case None => g.rels
     }
-    val stats = FileStats.read(fs, statsPath(name))
-    val surviving = stats match {
+    val surviving = FileStats.read(fs, statsPath(name)) match {
       case Some(st) => afterBuckets.filter(rel =>
         st.get(rel).forall(s => FileStats.mayMatch(pred, s, types)))
       case None => afterBuckets
     }
-    if (surviving.isEmpty) emptyDf
-    else snapshotScan(name, gen, mAt, surviving)
+    Some((afterBuckets, surviving))
   }
 
   /** Timestamp form of [[readTableAt]]: the latest generation committed
@@ -1513,8 +1520,9 @@ final class TableStore(
     * renames, zero bytes of data copied or rewritten — restoring a
     * 100 TB table after a bad load costs the same as the bad load's
     * commit did. Every other snapshot stays resolvable: a renamed-back
-    * file is current again (resolution checks data/ first), and if a
-    * later rewrite re-retires it, the rel path again has one home.
+    * file is in the newest manifest again (resolution places those in
+    * data/), and if a later rewrite re-retires it, the rel path again
+    * has one home.
     * Stats-sidecar entries are keyed by rel path over immutable bytes,
     * so pruning survives the round trip untouched.
     *
@@ -1523,15 +1531,15 @@ final class TableStore(
   def restore(name: String, gen: Int): Unit = withCommitLock(name) {
     val (mAt, rels) = readManifest(name, gen)
     val target = rels.toSet
+    val current = generation(name).rels
     val g = nextGen(name)
     // (a) files added after `gen` retire into this restore's tree
-    currentRels(name).filterNot(target.contains).foreach { rel =>
+    current.filterNot(target.contains).foreach { rel =>
       retire(name, g, new Path(dataPath(name), rel))
     }
     // (b) snapshot files later rewrites retired rename back home;
     // one history walk locates each (unique — rel paths have one home)
-    val current = currentRels(name).toSet
-    val missing = rels.filterNot(current.contains)
+    val missing = rels.filterNot(current.toSet.contains)
     if (missing.nonEmpty) {
       val homes = scala.collection.mutable.Map.empty[String, Path]
       if (fs.exists(historyPath(name)))
@@ -1557,7 +1565,7 @@ final class TableStore(
     // the snapshot's meta comes back with its data: schema, primary
     // key and bucket count must describe the restored file set
     writeMeta(name, mAt)
-    commitSnapshot(name, g)
+    commitSnapshot(name, g, rels)
     audit(s"restore $name to generation $gen (as generation $g)")
   }
 
@@ -1596,13 +1604,14 @@ final class TableStore(
     * DDL generation therefore diffs empty. Classification is directed
     * FROM → TO; `fromGen == toGen` yields an empty feed. */
   def readChanges(name: String, fromGen: Int, toGen: Int): DataFrame = {
-    val (mFrom, relsFrom) = readManifest(name, fromGen)
-    val (mTo, relsTo) = readManifest(name, toGen)
-    val toSet = relsTo.toSet
-    val fromSet = relsFrom.toSet
+    val from = generation(name, Some(fromGen))
+    val to = generation(name, Some(toGen))
+    val (mFrom, mTo) = (from.meta, to.meta)
+    val toSet = to.rels.toSet
+    val fromSet = from.rels.toSet
     val pre = alignTo(
-      snapshotScan(name, fromGen, mFrom, relsFrom.filterNot(toSet.contains)), mTo)
-    val post = snapshotScan(name, toGen, mTo, relsTo.filterNot(fromSet.contains))
+      alignTo(scan(name, from, from.rels.filterNot(toSet.contains)), mFrom), mTo)
+    val post = alignTo(scan(name, to, to.rels.filterNot(fromSet.contains)), mTo)
     val cols = mTo.columns.map(_._1)
     val ct = "_change_type"
     def packed(df: DataFrame, as: String): DataFrame =
@@ -1671,12 +1680,11 @@ final class TableStore(
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
       .filter(_.getPath.getName.stripPrefix("g").toInt <= cutoff)
       .foreach(s => fs.delete(s.getPath, true))
-    // trim stats entries whose files no retained snapshot (nor the
-    // current set) references anymore — the sidecar's retention tracks
+    // trim stats entries whose files no retained snapshot (the newest
+    // included) references anymore — the sidecar's retention tracks
     // the snapshots' (see analyze), so vacuum bounds its growth too
     FileStats.read(fs, statsPath(name)).foreach { st =>
-      val live: Set[String] = currentRels(name).toSet ++
-        manifestGens(name).flatMap(g => readManifest(name, g)._2)
+      val live: Set[String] = manifestGens(name).flatMap(g => readManifest(name, g)._2).toSet
       val keptStats = st.filter { case (f, _) => live.contains(f) }
       if (keptStats.size != st.size)
         FileStats.write(fs, statsPath(name), keptStats)
@@ -1717,86 +1725,19 @@ final class TableStore(
     rows.toDF("gen", "n_files", "bytes")
   }
 
-  /** File-level pruning for a keyed read, two independent cuts composed:
-    *
-    *  1. BUCKET pruning (bucketed tables, no stats needed): when the
-    *     predicate pins every PK column with top-level equality/IN
-    *     conjuncts, the PK hash determines the only `__bucket=` dirs
-    *     that can hold matches — the read-side twin of the mutation
-    *     path's bucket pruning. An equality read on a 100 TB bucketed
-    *     table touches 1/buckets of the files with zero maintenance.
-    *  2. STATS pruning (any layout, after analyze): drop every file
-    *     whose [min,max]/null stats prove it cannot match.
-    *
-    * Files without stats are kept by cut 2, and the full predicate is
-    * re-applied by the caller — pruning only shrinks the scan, never
-    * the answer. */
-  /** The layered file-cut pipeline shared by [[prunedRead]] and the
-    * pruning report: (all files, after bucket cut, after zone-map/Bloom
-    * cut). None when the table has no files or the predicate doesn't
-    * resolve to a prunable condition. */
-  private def pruneStages(name: String, m: Meta, where: String): Option[(Seq[Path], Seq[Path], Seq[Path])] = {
-    val base = read(name)
-    if (!hasDataFiles(name)) return None
-    // resolve the predicate through the analyzer so the pruners see real
-    // Catalyst comparisons over AttributeReferences (the raw Column is
-    // an unresolved ColumnNode tree in Spark 4)
-    val pred = base.filter(Filters.parseWhere(base, where, dtoColsOf(m)))
-      .queryExecution.analyzed
-      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
-      .getOrElse(return None)
-    val types = typesWithDerived(m)
-    val all = listDataFiles(name)
-    val afterBuckets = allowedBuckets(m, pred, types) match {
-      case Some(ids) => all.filter { p =>
-        val dir = p.getParent.getName
-        !dir.startsWith(BucketCol + "=") || ids.contains(dir.stripPrefix(BucketCol + "=").toLong)
-      }
-      case None => all
-    }
-    val stats = FileStats.read(fs, statsPath(name))
-    val surviving = stats match {
-      case Some(st) => afterBuckets.filter(p =>
-        st.get(FileStats.relativeKey(dataPath(name), p))
-          .forall(s => FileStats.mayMatch(pred, s, types)))
-      case None => afterBuckets
-    }
-    Some((all, afterBuckets, surviving))
-  }
-
   /** C35: pruning report — how many data files each skip layer leaves
     * for a `where`, WITHOUT reading any data (driver-side metadata
-    * only, the same code path real reads take): total → after PK-hash
+    * only, the same [[prune]] real reads take): total → after PK-hash
     * bucket cut (C20b) → after zone-map/Bloom cut (C20/C27). The
     * operational "will this point read be fast, and which layer is
     * doing the work" probe; a report showing no cut says to analyze,
     * rebucket or recluster BEFORE burning a cluster-wide scan. */
   def explainPruning(name: String, where: String): Map[String, Long] = {
-    val m = meta(name)
-    pruneStages(name, m, where) match {
-      case Some((all, buckets, stats)) => Map(
-        "total_files" -> all.length.toLong,
-        "after_bucket_prune" -> buckets.length.toLong,
-        "after_stats_prune" -> stats.length.toLong)
-      case None =>
-        val n = if (hasDataFiles(name)) listDataFiles(name).length.toLong else 0L
-        Map("total_files" -> n, "after_bucket_prune" -> n, "after_stats_prune" -> n)
-    }
-  }
-
-  private def prunedRead(name: String, m: Meta, where: String): DataFrame = {
-    val base = read(name)
-    val (all, surviving) = pruneStages(name, m, where) match {
-      case Some((a, _, s)) => (a, s)
-      case None => return base
-    }
-    if (surviving.length == all.length) base
-    else if (surviving.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.sparkSchema)
-    else {
-      val raw = mergedScan(name, surviving, basePath = true)
-      alignTo(raw, m)
-    }
+    val g = generation(name)
+    val (buckets, stats) = prune(name, g, where).getOrElse((g.rels, g.rels))
+    Map("total_files" -> g.rels.length.toLong,
+      "after_bucket_prune" -> buckets.length.toLong,
+      "after_stats_prune" -> stats.length.toLong)
   }
 
   /** Bucket ids a predicate can possibly hit: requires a bucketed table
@@ -1870,41 +1811,47 @@ final class TableStore(
     }.toOption
   }
 
-  /** r16: embed each bucket's id into its part-file names (Spark's
-    * `_00003` bucketed-file convention) right after a bucketed
-    * partitionBy write — FileSourceScanExec groups a bucketed scan's
-    * files by the id parsed from the NAME, which is what lets
+  /** The files a write left in staging dir `dir`, as dir-relative keys
+    * under their FINAL names — the delta its commit derives the
+    * manifest from. r16: each bucket's id is embedded into its part-file
+    * names (Spark's `_00003` bucketed-file convention) right after a
+    * bucketed partitionBy write — FileSourceScanExec groups a bucketed
+    * scan's files by the id parsed from the NAME, which is what lets
     * [[prunedMutation]] claim the layout as a Catalyst
     * HashPartitioning. Renames happen pre-commit inside the staging
     * dir, so manifests and the stats sidecar only ever record the
     * final names. */
-  private def embedBucketIds(dir: Path): Unit = {
-    if (!fs.exists(dir)) return
-    fs.listStatus(dir).foreach { d =>
-      if (d.isDirectory && d.getPath.getName.startsWith(BucketCol + "=")) {
-        val id = d.getPath.getName.substring(BucketCol.length + 1).toInt
-        val suffix = f"_$id%05d"
-        fs.listStatus(d.getPath).foreach { f =>
-          val n = f.getPath.getName
-          if (!f.isDirectory && n.endsWith(".parquet") && !n.contains(suffix)) {
-            val dot = n.indexOf('.')
-            val renamed =
-              if (dot < 0) n + suffix
-              else n.substring(0, dot) + suffix + n.substring(dot)
-            if (!fs.rename(f.getPath, new Path(d.getPath, renamed)))
-              throw new IllegalStateException(s"bucket-id rename failed: ${f.getPath}")
-          }
-        }
+  private def stagedFiles(dir: Path): Seq[String] =
+    parquetFiles(dir).map { rel =>
+      val (bucketDir, n) = rel.splitAt(rel.indexOf('/') + 1)
+      if (!bucketDir.startsWith(BucketCol + "=")) rel
+      else {
+        val suffix = f"_${bucketDir.stripPrefix(BucketCol + "=").stripSuffix("/").toInt}%05d"
+        val dot = n.indexOf('.')
+        val renamed = bucketDir +
+          (if (n.contains(suffix)) n else if (dot < 0) n + suffix
+          else n.substring(0, dot) + suffix + n.substring(dot))
+        if (renamed != rel && !fs.rename(new Path(dir, rel), new Path(dir, renamed)))
+          throw new IllegalStateException(s"bucket-id rename failed: $dir/$rel")
+        renamed
       }
     }
-  }
 
-  private def listDataFiles(name: String): Seq[Path] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Path]
-    val it = fs.listFiles(dataPath(name), true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet")) out += p
+  /** A fresh LISTING of data/ as relative keys: [[repair]]'s input and
+    * the file set of a table that never committed. Nothing else lists
+    * data/ — the newest manifest is the table. */
+  private def listDataFiles(name: String): Seq[String] = parquetFiles(dataPath(name))
+
+  /** The parquet files under `dir` as dir-relative keys (one recursive
+    * listing; empty when `dir` does not exist). */
+  private def parquetFiles(dir: Path): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (fs.exists(dir)) {
+      val it = fs.listFiles(dir, true)
+      while (it.hasNext) {
+        val p = it.next().getPath
+        if (p.getName.endsWith(".parquet")) out += FileStats.relativeKey(dir, p)
+      }
     }
     out.toSeq
   }
@@ -1915,29 +1862,50 @@ final class TableStore(
   // "true")`, and Spark's mergeSchema path launches a DISTRIBUTED footer
   // job per read (SchemaMergeUtils.mergeSchemasInParallel) — measured at
   // 16-23 jobs (~0.5-1 s plus driver gaps) per summary-lifecycle bench
-  // entry. Footers of immutable files never change and rel paths are
-  // never reused (append part-names embed the job UUID; retired files
-  // keep their paths under history/g<N>), so per-file schemas are
-  // cacheable by path forever. The TABLE-level merged schema changes
-  // only when the file set changes, and every file-set change commits a
-  // manifest generation (data writes, DDL, restore, foreign writers
-  // alike) — so (newest manifest gen, file-set hash) keys it. Reads now
-  // pass the merged schema EXPLICITLY: Spark skips footer I/O at
-  // planning, missing columns null-fill exactly as under mergeSchema,
-  // and partition-column (__bucket) discovery appends the same column
-  // it would have (probe-verified). Incompatible footers still throw
-  // the same failed-to-merge error, now driver-side.
+  // entry. Files are immutable and rel paths never reused (append
+  // part-names embed the job UUID; retired files keep their paths under
+  // history/g<N>), so per-file statuses and footer schemas are cacheable
+  // by path forever. A generation's merged schema is a function of its
+  // FILE SET alone, so the one merged-schema cache is keyed by the set
+  // (table data dir + every rel, digested): current and snapshot reads
+  // share it, a new commit's set is a new key, and a re-created table —
+  // whose part-file names carry fresh job UUIDs — can never hit a stale
+  // entry. A false miss only recomputes. Scans pass the merged schema
+  // EXPLICITLY: Spark skips footer I/O at planning, missing columns
+  // null-fill exactly as under mergeSchema, and a pruned SUBSET read
+  // under the whole set's schema equals mergeSchema over the subset
+  // followed by [[alignTo]] (columns only other files carry read as
+  // null either way; shared columns must agree or the whole-set merge
+  // would have thrown). Incompatible footers still throw the same
+  // failed-to-merge error, now driver-side.
+  private val statusCache =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.hadoop.fs.FileStatus]()
   private val fileSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  private val tableSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, String, StructType)]()
-  private val snapshotSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), StructType]()
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  private def fileStatus(p: Path): org.apache.hadoop.fs.FileStatus =
+    statusCache.computeIfAbsent(p.toString, _ => fs.getFileStatus(p))
 
   private def footerSchema(p: Path): StructType =
     fileSchemaCache.computeIfAbsent(p.toString, _ =>
       org.apache.spark.sql.graftx.bridge.parquetFooterSchema(
-        spark, spark.sparkContext.hadoopConfiguration, fs.getFileStatus(p)))
+        spark, spark.sparkContext.hadoopConfiguration, fileStatus(p)))
+
+  /** Merged footer schema of the file set `rels` of table `name`, each
+    * rel read from `path(rel)` on a miss. */
+  private def mergedSchema(name: String, rels: Seq[String], path: String => Path): StructType = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    (dataLocation(name) +: rels).foreach(r =>
+      md.update((r + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val key = java.util.Base64.getEncoder.encodeToString(md.digest())
+    Option(schemaCache.get(key)).getOrElse {
+      val s = mergedSchemaOf(rels.map(path))
+      schemaCache.put(key, s)
+      s
+    }
+  }
 
   private def mergedSchemaOf(paths: Seq[Path]): StructType = {
     // r16 (VERDICT r15 #3): the cold-miss path was O(#files) SERIAL
@@ -1964,44 +1932,6 @@ final class TableStore(
       org.apache.spark.sql.graftx.bridge.mergeSchemas(spark, a, b))
   }
 
-  /** Merged schema of the CURRENT data files, cached per committed
-    * generation (any writer's commit — this store or a foreign one —
-    * writes a new manifest, so the key observes them all). The file-set
-    * hash guards the windows a generation number alone cannot see
-    * (e.g. the pre-first-commit seed file of a re-created table after
-    * a failed create): part-file names embed job UUIDs, so a different
-    * file SET always perturbs the hash; a false miss only recomputes. */
-  private def currentMergedSchema(name: String, files: Seq[Path]): StructType = {
-    val gen = manifestGens(name).lastOption.getOrElse(0)
-    // r16 (VERDICT r15 #6): MD5 over the ordered path list instead of a
-    // 32-bit List.hashCode — closes the (already astronomically
-    // unlikely) same-gen set collision for free
-    val md = java.security.MessageDigest.getInstance("MD5")
-    files.foreach(p => md.update(p.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    val setHash = java.util.Base64.getEncoder.encodeToString(md.digest())
-    val cached = tableSchemaCache.get(name)
-    if (cached != null && cached._1 == gen && cached._2 == setHash) cached._3
-    else {
-      val s = mergedSchemaOf(files)
-      tableSchemaCache.put(name, (gen, setHash, s))
-      s
-    }
-  }
-
-  /** Raw scan of current-layout `paths` (all of data/, or a pruned
-    * subset) under the table's cached merged schema — replaces the
-    * mergeSchema read. A SUBSET read under the full-set schema is
-    * equivalent to mergeSchema over the subset followed by [[alignTo]]:
-    * columns only the other files carry read as null either way, and
-    * shared columns must agree on the merged type or the full-set merge
-    * would have thrown. */
-  private def mergedScan(name: String, paths: Seq[Path], basePath: Boolean): DataFrame = {
-    val schema = currentMergedSchema(name, listDataFiles(name))
-    val r0 = spark.read.schema(schema)
-    val r = if (basePath) r0.option("basePath", dataPath(name).toString) else r0
-    r.parquet(paths.map(_.toString): _*)
-  }
-
   /** Projection / where / order / limit read surface (reference
     * read.table, core/read.py:23). PK columns are always included, like
     * the reference returns them as the dataframe index. The where string
@@ -2012,10 +1942,12 @@ final class TableStore(
     * projection/filter/order compose over the table as it WAS, with
     * validation against the snapshot's schema AND the snapshot's
     * primary key (a later setPrimaryKey must not change what a snapshot
-    * projection returns). Snapshot reads prune like current reads —
-    * bucket dirs by the snapshot's PK hash, files by the stats sidecar
-    * (entries are keyed by never-reused relative paths over immutable
-    * files, so they stay valid for retired files). */
+    * projection returns). A current read is the same code path as a
+    * snapshot read of the newest generation: one [[prune]] over the
+    * manifest's file set — bucket dirs by the generation's PK hash,
+    * files by the stats sidecar (entries are keyed by never-reused
+    * relative paths over immutable files, so they stay valid for
+    * retired files) — then one [[scan]] of the survivors. */
   def readTable(
       name: String,
       columns: Seq[String] = Seq.empty,
@@ -2024,19 +1956,11 @@ final class TableStore(
       orderBy: Seq[String] = Seq.empty,
       orderDesc: Boolean = false,
       asOf: Option[Int] = None): DataFrame = {
+    val g = generation(name, asOf)
+    val m = g.meta
     // a where-d read consults file statistics (if analyzed) to skip
-    // whole files before Spark ever lists them into the scan
-    var (m, df) = asOf match {
-      case Some(g) =>
-        val (mAt, rels) = readManifest(name, g)
-        (mAt, where match {
-          case Some(w) => prunedSnapshotRead(name, g, mAt, rels, w)
-          case None    => snapshotScan(name, g, mAt, rels)
-        })
-      case None =>
-        val m0 = meta(name)
-        (m0, where.map(w => prunedRead(name, m0, w)).getOrElse(read(name)))
-    }
+    // whole files before the scan is built
+    var df = alignTo(scan(name, g, where.flatMap(prune(name, g, _)).fold(g.rels)(_._2)), m)
     where.foreach(w => df = df.filter(Filters.parseWhere(df, w, dtoColsOf(m))))
     val avail = df.columns.toSeq // snapshot schema when asOf is set
     if (columns.nonEmpty) {
@@ -2171,34 +2095,27 @@ final class TableStore(
       // manifest is derived as previous-manifest + delta (O(batch)), not
       // by re-listing the table (O(#files)). Part-file names embed the
       // job UUID, so renames cannot collide with existing files.
-      val prevRels = lastCommittedRels(name)
+      val prevRels = generation(name).rels
       val tmp = new Path(tablePath(name), "append.tmp")
       fs.delete(tmp, true)
-      if (m.buckets > 0) {
+      if (m.buckets > 0)
         appended.withColumn(BucketCol, bucketExpr(m))
           .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-        embedBucketIds(tmp)
-      } else
+      else
         appended.write.mode("overwrite").parquet(tmp.toString)
       val newRels = scala.collection.mutable.ArrayBuffer.empty[String]
       // on any move failure, UNDO the already-moved part of the batch:
-      // half-moved files are visible to current reads but in no manifest,
-      // so leaving them would silently diverge snapshots from current
-      // reads for every later incremental commit. (A process CRASH in
+      // half-moved files sit in data/ in no manifest — invisible to
+      // readers, but [[repair]] would fold them in. (A process CRASH in
       // this window can still strand them — that's what the lock the
       // crash leaves behind plus [[repair]] are for.)
       try {
-        val it = fs.listFiles(tmp, true)
-        while (it.hasNext) {
-          val p = it.next().getPath
-          if (p.getName.endsWith(".parquet")) {
-            val rel = FileStats.relativeKey(tmp, p)
-            val dst = new Path(dataPath(name), rel)
-            fs.mkdirs(dst.getParent)
-            if (!fs.rename(p, dst))
-              throw new IllegalStateException(s"append move failed for table $name: $rel")
-            newRels += rel
-          }
+        stagedFiles(tmp).foreach { rel =>
+          val dst = new Path(dataPath(name), rel)
+          fs.mkdirs(dst.getParent)
+          if (!fs.rename(new Path(tmp, rel), dst))
+            throw new IllegalStateException(s"append move failed for table $name: $rel")
+          newRels += rel
         }
       } catch {
         case e: Throwable =>
@@ -2208,7 +2125,7 @@ final class TableStore(
       }
       fs.delete(tmp, true)
       // appends remove nothing; the commit extends the previous file set
-      commitSnapshot(name, nextGen(name), Some(prevRels ++ newRels))
+      commitSnapshot(name, nextGen(name), prevRels ++ newRels)
     }
 
     try stageAndCommit(m)
@@ -2236,9 +2153,11 @@ final class TableStore(
   /** Recovery after a writer CRASHED mid-commit (the lock it left
     * behind names it): drop stale staging dirs and commit a fresh
     * RE-LISTED manifest, folding any files a crashed append moved into
-    * data/ but never committed back into snapshot history. Re-listing
-    * is correct under the lock (it just pays O(#files) where appends
-    * pay O(batch)) — EXCEPT after a rewrite that crashed mid-swap:
+    * data/ but never committed into the table — readers plan from the
+    * newest manifest, so until this commit no reader sees them. The one
+    * commit that lists data/; re-listing is correct under the lock (it
+    * just pays O(#files) where other commits derive their file set) —
+    * EXCEPT after a rewrite that crashed mid-swap:
     * data/ is gone (retired into history/g<N>) and the replacement
     * sits in data.tmp, so re-listing would commit the broken (empty)
     * state as the newest generation and a later vacuum would delete
@@ -2262,7 +2181,7 @@ final class TableStore(
     fs.delete(dataTmp, true)
     fs.delete(new Path(tablePath(name), "append.tmp"), true)
     audit(s"repair $name (re-listed manifest)")
-    commitSnapshot(name, nextGen(name))
+    commitSnapshot(name, nextGen(name), listDataFiles(name))
   }
 
   /** One-pass validation of a batch against the table's declared types:
@@ -2594,9 +2513,10 @@ final class TableStore(
       source: DataFrame,
       keys: Seq[String],
       mayAddTimeCols: Boolean)(algebra: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val prunable = m.buckets > 0 && keys.sorted == m.primaryKey.sorted && hasDataFiles(name)
+    val g = generation(name)
+    val prunable = m.buckets > 0 && keys.sorted == m.primaryKey.sorted && g.rels.nonEmpty
     if (!prunable) {
-      rewrite(name, algebra(read(name), source), mayAddTimeCols)
+      rewrite(name, algebra(readGen(name, g), source), mayAddTimeCols)
       return
     }
     // source bucket ids: bounded by the bucket count, so the collect is
@@ -2611,16 +2531,12 @@ final class TableStore(
     // stream straight from parquet with no table-side shuffle, at any
     // scale. The claim is honest because bucketExpr IS Spark's
     // partition-id expression (Murmur3 pmod) and every file's name
-    // embeds its bucket id (embedBucketIds). Files from a
-    // pre-convention writer (no parseable id) fall back to the plain
-    // merged scan — correctness never depends on the claim.
-    val allFiles = listDataFiles(name)
-    val raw = (if (allFiles.nonEmpty &&
-        allFiles.forall(p => org.apache.spark.sql.graftx.bridge.hasBucketId(p.getName)))
-      org.apache.spark.sql.graftx.bridge.bucketedParquetScan(spark,
-        dataPath(name).toString, currentMergedSchema(name, allFiles),
-        BucketCol, m.buckets, m.primaryKey)
-    else mergedScan(name, Seq(dataPath(name)), basePath = true))
+    // embeds its bucket id (stagedFiles). A manifest naming a file
+    // without a parseable id (a pre-convention writer's) falls back to
+    // the unclaimed scan — correctness never depends on the claim.
+    val named = g.rels.forall(r =>
+      org.apache.spark.sql.graftx.bridge.hasBucketId(new Path(r).getName))
+    val raw = scan(name, g, g.rels, bucketed = named)
       .filter(col(BucketCol).isin(srcBuckets.toIndexedSeq: _*)) // partition-pruned scan
     val affected = alignTo(raw, m)
     val result = algebra(affected, source)
@@ -2634,27 +2550,26 @@ final class TableStore(
     val tmp = new Path(tablePath(name), "data.tmp")
     result.withColumn(BucketCol, bucketExpr(m2))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-    embedBucketIds(tmp)
-    val written: Map[String, Path] = fs.listStatus(tmp)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(BucketCol + "="))
-      .map(s => s.getPath.getName -> s.getPath).toMap
-    val gen = nextGen(name)
+    val staged = stagedFiles(tmp)
+    def dirOf(rel: String) = rel.takeWhile(_ != '/')
+    val written = staged.map(dirOf).toSet
     // swap every SOURCE-TOUCHED bucket, not just the dirs the result
     // wrote: a delete that empties a bucket produces NO output dir, but
     // its old files must still retire — iterating written dirs alone
     // would leave the deleted rows silently live
-    (srcBuckets.map(b => s"$BucketCol=$b") ++ written.keys).distinct.foreach { dirName =>
+    val swapped = srcBuckets.map(b => s"$BucketCol=$b").toSet ++ written
+    val gen = nextGen(name)
+    swapped.foreach { dirName =>
       val dst = new Path(dataPath(name), dirName)
       // replaced bucket dirs RETIRE into the generation's history tree
       // (rename, not delete) so concurrent/snapshot readers keep working
       if (fs.exists(dst)) retire(name, gen, dst)
-      written.get(dirName).foreach { srcPath =>
-        if (!fs.rename(srcPath, dst))
-          throw new IllegalStateException(s"bucket swap failed for table $name: $dirName")
-      }
+      if (written(dirName) && !fs.rename(new Path(tmp, dirName), dst))
+        throw new IllegalStateException(s"bucket swap failed for table $name: $dirName")
     }
     fs.delete(tmp, true)
-    commitSnapshot(name, gen)
+    // the new file set: the untouched buckets' files plus what was staged
+    commitSnapshot(name, gen, g.rels.filterNot(r => swapped(dirOf(r))) ++ staged)
     // stats entries for the retired buckets' files stay in the sidecar:
     // keyed by never-reused rel paths, they keep pruning SNAPSHOT reads;
     // the new files simply aren't pruned until the next analyze
@@ -2706,12 +2621,12 @@ final class TableStore(
   private def overwriteData(name: String, df: DataFrame): Unit = {
     val m = meta(name)
     val tmp = new Path(tablePath(name), "data.tmp")
-    if (m.buckets > 0) {
+    if (m.buckets > 0)
       df.withColumn(BucketCol, bucketExpr(m))
         .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-      embedBucketIds(tmp)
-    } else
+    else
       df.write.mode("overwrite").parquet(tmp.toString)
+    val staged = stagedFiles(tmp)
     val dst = dataPath(name)
     val gen = nextGen(name)
     // the whole replaced data dir RETIRES into history/g<gen>/ (one
@@ -2723,7 +2638,7 @@ final class TableStore(
     }
     if (!fs.rename(tmp, dst))
       throw new IllegalStateException(s"atomic swap failed for table $name")
-    commitSnapshot(name, gen)
+    commitSnapshot(name, gen, staged)
     // old-file stats entries are retained for snapshot pruning (see
     // prunedMutation); new files are unpruned until the next analyze
   }

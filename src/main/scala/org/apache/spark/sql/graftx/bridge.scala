@@ -69,48 +69,58 @@ object bridge {
       b: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     a.merge(b, spark.sessionState.conf.caseSensitiveAnalysis)
 
-  /** r16 (guide §3.4, shuffle-free joins): a parquet scan of a
-    * PK-hash-bucketed store table that ADVERTISES its layout as a
-    * Catalyst output partitioning. The store writes bucketed tables as
+  /** A parquet scan over a COMMITTED file set that Spark plans without
+    * listing anything: `leaves` names every file (with its status)
+    * under each root, and the file index is seeded from a status cache
+    * holding exactly those files. A root is either a table's data
+    * directory — partition discovery then reads `__bucket=<id>` from
+    * the files' paths, and the relation's root path is the table's
+    * identity for plan rules — or a single file (a snapshot file in
+    * the history tree). Schema as a `spark.read.schema(dataSchema)`
+    * read would give it.
+    *
+    * r16 (guide §3.4, shuffle-free joins): `bucketing = Some((n, pk))`
+    * ADVERTISES a PK-hash-bucketed layout as a Catalyst output
+    * partitioning. The store writes bucketed tables as
     * `__bucket=<pmod(hash(pk), n)>/part-…_<bucketid>.parquet` — rows
     * are physically grouped by the SAME hash Spark's HashPartitioning
-    * computes (Murmur3, seed 42) — so a scan built over a
-    * [[HadoopFsRelation]] with a [[BucketSpec]] honestly reports
-    * `HashPartitioning(pk, n)`: EnsureRequirements then exchanges only
-    * the OTHER side of a keyed-mutation join and the table side streams
-    * straight from parquet — no table-side shuffle at any scale. The
-    * plain DataFrameReader cannot express this (bucket metadata lives
-    * in the catalog for saveAsTable tables only), hence the bridge.
-    *
-    * The caller guarantees every data file's name embeds its bucket id
-    * (Spark's `_00003` convention — BucketingUtils parses it back). */
-  def bucketedParquetScan(
+    * computes (Murmur3, seed 42) — so a relation with a [[BucketSpec]]
+    * honestly reports `HashPartitioning(pk, n)`: EnsureRequirements
+    * then exchanges only the OTHER side of a keyed-mutation join and
+    * the table side streams straight from parquet — no table-side
+    * shuffle at any scale. The plain DataFrameReader cannot express
+    * this (bucket metadata lives in the catalog for saveAsTable tables
+    * only), hence the bridge. The caller guarantees every file's name
+    * embeds its bucket id (Spark's `_00003` convention — BucketingUtils
+    * parses it back). */
+  def committedParquetScan(
       spark: org.apache.spark.sql.SparkSession,
-      dataDir: String,
+      leaves: Seq[(org.apache.hadoop.fs.Path, Seq[org.apache.hadoop.fs.FileStatus])],
       dataSchema: org.apache.spark.sql.types.StructType,
-      partitionCol: String,
-      numBuckets: Int,
-      bucketCols: Seq[String]): org.apache.spark.sql.DataFrame = {
+      bucketing: Option[(Int, Seq[String])]): org.apache.spark.sql.DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.spark.sql.execution.datasources._
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val full = StructType(dataSchema.fields :+ StructField(partitionCol, IntegerType))
-    val index = new InMemoryFileIndex(cs,
-      Seq(new org.apache.hadoop.fs.Path(dataDir)),
-      Map("basePath" -> dataDir), Some(full))
+    val byRoot = leaves.map { case (root, files) => root -> files.toArray }.toMap
+    val seeded = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byRoot.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(cs, leaves.map(_._1), Map.empty, None, seeded)
     val relation = HadoopFsRelation(
       location = index,
-      partitionSchema = StructType(Seq(StructField(partitionCol, IntegerType))),
-      dataSchema = dataSchema,
-      bucketSpec = Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        numBuckets, bucketCols, Nil)),
+      partitionSchema = index.partitionSchema,
+      dataSchema = dataSchema.asNullable,
+      bucketSpec = bucketing.map { case (n, cols) =>
+        org.apache.spark.sql.catalyst.catalog.BucketSpec(n, cols, Nil) },
       fileFormat = new parquet.ParquetFileFormat(),
       options = Map.empty)(cs)
     org.apache.spark.sql.classic.Dataset.ofRows(cs, LogicalRelation(relation))
   }
 
   /** True iff `fileName` carries a parseable Spark bucket id — the
-    * guard [[bucketedParquetScan]] callers use to fall back to a plain
+    * guard [[committedParquetScan]] callers use to fall back to an unclaimed
     * scan on any file a pre-convention writer produced. */
   def hasBucketId(fileName: String): Boolean =
     org.apache.spark.sql.execution.datasources.BucketingUtils

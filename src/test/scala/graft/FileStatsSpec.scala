@@ -25,7 +25,7 @@ class FileStatsSpec extends AnyFunSuite {
   private val types = Map[String, DataType](
     "k" -> LongType, "s" -> StringType, "d" -> DateType, "ts" -> TimestampType)
 
-  /** Resolve a where string to a Catalyst predicate like prunedRead does. */
+  /** Resolve a where string to a Catalyst predicate like TableStore.prune does. */
   private def pred(where: String) =
     df.filter(Filters.parseWhere(df, where)).queryExecution.analyzed
       .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }

@@ -78,4 +78,22 @@ class PairsSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("maxGroupRows") || err.getCause.getMessage.contains("maxGroupRows"))
   }
+
+  test("an aggregate over the pairs compiles as one codegen stage and equals the interpreted path") {
+    // the parent aggregate appends its finish after the operator's
+    // produce loop; that loop must fall through at end of input or
+    // Janino rejects the stage as unreachable code
+    def agg(conf: String, value: String): Seq[org.apache.spark.sql.Row] = {
+      val prev = spark.conf.getOption(conf)
+      spark.conf.set(conf, value)
+      try Pairs.withinGroups(sample, Seq("k1", "k2"), "id", Seq("w"))
+        .groupBy("k1", "k2")
+        .agg(count(lit(1)).as("n"), sum(col("a_w") + col("b_w")).as("s"))
+        .orderBy("k1", "k2").collect().toSeq
+      finally prev.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+    }
+    val compiled = agg("spark.sql.codegen.fallback", "false")
+    assert(compiled.nonEmpty)
+    assert(compiled == agg("spark.sql.codegen.wholeStage", "false"))
+  }
 }

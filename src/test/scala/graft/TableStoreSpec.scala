@@ -387,7 +387,7 @@ class TableStoreSpec extends AnyFunSuite {
     val df = spark.range(0, 4000).select(col("id").as("k"),
       (pmod(hash(col("id")), lit(8)).cast("long") * 100000L + col("id")).as("v"))
     store.insert("t", df)
-    // r16 invariant (embedBucketIds): every part-file name embeds the
+    // r16 invariant (stagedFiles): every part-file name embeds the
     // bucket id of the dir it lives in — the naming contract the
     // HashPartitioning-advertising mutation scan depends on
     val parts = store.readTable("t").inputFiles.map(_.split("/").takeRight(2))
@@ -904,11 +904,14 @@ class TableStoreSpec extends AnyFunSuite {
   }
 
   test("incremental append manifests equal a re-listing across a 4-batch load") {
-    val store = newStore()
+    val root = Files.createTempDirectory("graft_test_").toString
+    val store = new TableStore(spark, root)
     store.createTable("t", Seq("k" -> "int", "v" -> "int"), Seq("k"), buckets = 4)
     def listed(): Set[String] = {
-      val dir = store.readTable("t").inputFiles
-      dir.map(_.split("/t/data/").last).toSet
+      import scala.jdk.CollectionConverters._
+      val data = java.nio.file.Paths.get(root, "t", "data")
+      java.nio.file.Files.walk(data).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).map(p => data.relativize(p).toString).toSet
     }
     var prev = Set.empty[String]
     (0 until 4).foreach { b =>
@@ -952,16 +955,33 @@ class TableStoreSpec extends AnyFunSuite {
     store.createTable("t", Seq("k" -> "int"), Seq("k"))
     store.insert("t", Seq(1, 2).toDF("k"))
     // simulate the crash window: a batch file moved into data/ whose
-    // manifest commit never happened — current reads see it, snapshots
-    // don't, and incremental commits would omit it forever
+    // manifest commit never happened — no reader sees it, and
+    // incremental commits would omit it forever
     val tmpOut = Files.createTempDirectory("graft_orphan_").toString
     Seq(3).toDF("k").coalesce(1).write.mode("overwrite").parquet(tmpOut)
     val part = new java.io.File(tmpOut).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(root, "t", "data", part.getName))
-    assert(store.read("t").count() == 3)
+    // the newest manifest IS the table: no reader sees the uncommitted orphan
+    assert(store.read("t").count() == 2)
     assert(store.readTableAt("t", store.snapshots("t").last._1).count() == 2)
+    assert(store.readTable("t", where = Some("k >= 0")).count() == 2)
+    assert(store.countRows("t") == 2)
+    assert(store.explainPruning("t", "k >= 0")("total_files") ==
+      store.readTableAt("t", store.snapshots("t").last._1).inputFiles.length)
+    // nor does a keyed write: an upsert commits only what it derived from
+    // the committed files (a flat rewrite retires the orphan with data/)
+    store.createTable("u", Seq("k" -> "int"), Seq("k"))
+    store.insert("u", Seq(1, 2).toDF("k"))
+    val uOut = Files.createTempDirectory("graft_orphan_").toString
+    Seq(3).toDF("k").coalesce(1).write.mode("overwrite").parquet(uOut)
+    val uPart = new java.io.File(uOut).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(uPart.toPath,
+      java.nio.file.Paths.get(root, "u", "data", uPart.getName))
+    store.upsert("u", Seq(4).toDF("k"))
+    assert(store.readTable("u", orderBy = Seq("k")).as[Int].collect().toSeq == Seq(1, 2, 4))
     store.repair("t")
     assert(store.readTableAt("t", store.snapshots("t").last._1).count() == 3)
     // and later incremental appends keep carrying the recovered file
