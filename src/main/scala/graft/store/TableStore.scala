@@ -59,9 +59,11 @@ object TableStore {
   /** One committed generation: its number, the schema/PK/layout its
     * files are read under, and its file set as data-dir-relative keys.
     * `newest` = the table's latest generation, whose files live in
-    * data/ by the commit protocol. */
+    * data/ by the commit protocol; `current` = read as the live table
+    * (no `asOf`), the only reading a plan rule may answer from a
+    * summary of the table. */
   private[store] final case class Generation(gen: Int, meta: Meta, rels: Seq[String],
-      newest: Boolean)
+      newest: Boolean, current: Boolean)
 
   /** Dense `_pk` identity for an insert batch, scale-safe.
     *
@@ -1233,6 +1235,7 @@ final class TableStore(
     out.close()
     if (!fs.rename(tmp, dst))
       throw new IllegalStateException(s"manifest commit failed: $dst")
+    evictUnder(dataPath(name), files.toSet.contains)
     commitEpoch.incrementAndGet()
     maybeAutoAnalyze(name)
     firePostCommitHooks(name)
@@ -1356,11 +1359,11 @@ final class TableStore(
     asOf match {
       case Some(g) =>
         val (mAt, rels) = readManifest(name, g)
-        Generation(g, mAt, rels, newest.contains(g))
+        Generation(g, mAt, rels, newest.contains(g), current = false)
       case None =>
         val m = meta(name)
         Generation(newest.getOrElse(0), m, newest.fold(listDataFiles(name))(readManifest(name, _)._2),
-          newest = true)
+          newest = true, current = true)
     }
   }
 
@@ -1426,12 +1429,17 @@ final class TableStore(
     * pruned subset) under the merged footer schema of the WHOLE set,
     * unaligned. Spark plans from the named files and lists nothing
     * (see bridge.committedParquetScan). The newest generation's files
-    * live in data/ by the commit protocol, so its scan is rooted at
-    * data/ — the identity [[dataLocation]] promises plan rules — and
-    * `__bucket` comes from the files' paths; an older generation's
-    * files resolve to their data/ or history/g<M> homes. `bucketed`
-    * advertises the PK-hash layout as HashPartitioning (the caller
-    * guarantees every file name embeds its bucket id). */
+    * live in data/ by the commit protocol; an older generation's files
+    * resolve to their data/ or history/g<M> homes. Only a CURRENT read
+    * of the WHOLE file set is rooted at data/ — the identity
+    * [[dataLocation]] promises plan rules, which may answer such a scan
+    * from a summary of the live table — and `__bucket` then comes from
+    * the files' paths. Every other scan (a pruned subset, countRows'
+    * unanalyzed tail, analyze's rescan, any `asOf` or change-feed
+    * side, even of the newest generation) is rooted at its files, so
+    * no rule mistakes it for the table. `bucketed` advertises the
+    * PK-hash layout as HashPartitioning (whole current scans only; the
+    * caller guarantees every file name embeds its bucket id). */
   private def scan(name: String, g: Generation, rels: Seq[String],
       bucketed: Boolean = false): DataFrame = {
     if (rels.isEmpty)
@@ -1440,7 +1448,8 @@ final class TableStore(
       if (g.newest) rel => fs.makeQualified(new Path(dataPath(name), rel))
       else resolveSnapshotFiles(name, g.gen, g.rels).andThen(fs.makeQualified(_))
     val leaves =
-      if (g.newest) Seq(fs.makeQualified(dataPath(name)) -> rels.map(r => fileStatus(path(r))))
+      if (g.current && rels == g.rels)
+        Seq(fs.makeQualified(dataPath(name)) -> rels.map(r => fileStatus(path(r))))
       else rels.map { r => val p = path(r); p -> Seq(fileStatus(p)) }
     org.apache.spark.sql.graftx.bridge.committedParquetScan(spark, leaves,
       mergedSchema(name, g.rels, path),
@@ -1679,7 +1688,7 @@ final class TableStore(
     fs.listStatus(historyPath(name))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
       .filter(_.getPath.getName.stripPrefix("g").toInt <= cutoff)
-      .foreach(s => fs.delete(s.getPath, true))
+      .foreach { s => fs.delete(s.getPath, true); evictUnder(s.getPath) }
     // trim stats entries whose files no retained snapshot (the newest
     // included) references anymore — the sidecar's retention tracks
     // the snapshots' (see analyze), so vacuum bounds its growth too
@@ -1865,12 +1874,16 @@ final class TableStore(
   // entry. Files are immutable and rel paths never reused (append
   // part-names embed the job UUID; retired files keep their paths under
   // history/g<N>), so per-file statuses and footer schemas are cacheable
-  // by path forever. A generation's merged schema is a function of its
-  // FILE SET alone, so the one merged-schema cache is keyed by the set
-  // (table data dir + every rel, digested): current and snapshot reads
-  // share it, a new commit's set is a new key, and a re-created table —
-  // whose part-file names carry fresh job UUIDs — can never hit a stale
-  // entry. A false miss only recomputes. Scans pass the merged schema
+  // by path until the path goes away: a commit forgets the data/ paths
+  // its file set no longer holds (retired files reappear, if read, under
+  // their history path) and vacuum the history trees it deletes. A
+  // generation's merged schema is a function of its FILE SET alone, so
+  // the one merged-schema cache holds, per table, the last set read
+  // (digest of every rel) with its schema: current reads hit it, a new
+  // commit's set or a snapshot read of another generation replaces it
+  // (re-merged from the per-file footer cache), and a re-created table
+  // — whose part-file names carry fresh job UUIDs — can never hit a
+  // stale entry. A false miss only recomputes. Scans pass the merged schema
   // EXPLICITLY: Spark skips footer I/O at planning, missing columns
   // null-fill exactly as under mergeSchema, and a pruned SUBSET read
   // under the whole set's schema equals mergeSchema over the subset
@@ -1883,7 +1896,17 @@ final class TableStore(
   private val fileSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
+
+  /** Forget the cached statuses and footers of every path under `dir`
+    * whose `dir`-relative key `keep` rejects. */
+  private def evictUnder(dir: Path, keep: String => Boolean = _ => false): Unit = {
+    val prefix = fs.makeQualified(dir).toString + "/"
+    val gone: java.util.function.Predicate[String] =
+      k => k.startsWith(prefix) && !keep(k.substring(prefix.length))
+    statusCache.keySet.removeIf(gone)
+    fileSchemaCache.keySet.removeIf(gone)
+  }
 
   private def fileStatus(p: Path): org.apache.hadoop.fs.FileStatus =
     statusCache.computeIfAbsent(p.toString, _ => fs.getFileStatus(p))
@@ -1897,12 +1920,11 @@ final class TableStore(
     * rel read from `path(rel)` on a miss. */
   private def mergedSchema(name: String, rels: Seq[String], path: String => Path): StructType = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    (dataLocation(name) +: rels).foreach(r =>
-      md.update((r + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    val key = java.util.Base64.getEncoder.encodeToString(md.digest())
-    Option(schemaCache.get(key)).getOrElse {
+    rels.foreach(r => md.update((r + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    val digest = java.util.Base64.getEncoder.encodeToString(md.digest())
+    Option(schemaCache.get(dataLocation(name))).filter(_._1 == digest).map(_._2).getOrElse {
       val s = mergedSchemaOf(rels.map(path))
-      schemaCache.put(key, s)
+      schemaCache.put(dataLocation(name), (digest, s))
       s
     }
   }

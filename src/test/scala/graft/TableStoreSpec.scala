@@ -1337,4 +1337,30 @@ class TableStoreSpec extends AnyFunSuite {
     assert(after == before + 1,
       s"post-clear commit should add one unanalyzed (unprunable) file: $before -> $after")
   }
+
+  test("only a current read of the whole file set is answered from a summary") {
+    val g = Graft(spark, Files.createTempDirectory("graft_served_").toString)
+    try {
+      g.create.tableFromDataFrame("t",
+        Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0)).toDF("k", "grp", "v"), Seq("k"))
+      g.maintenance.analyze("t")
+      // C28 hybrid: 3 rows from the stats sidecar + a scan of the 2 unanalyzed ones
+      g.write.insert("t", Seq((4L, "b", 40.0), (5L, "c", 50.0)).toDF("k", "grp", "v"))
+      g.summaries.define("s", "t", Seq("grp"), Seq("v"))
+      g.summaries.maintain("s")
+      assert(g.read.count("t") == 5)
+      assert(g.read.count("t") == g.read.table("t").count())
+      // a frame pinned to the newest generation keeps that generation's
+      // rows when it runs after an append and a maintain
+      val latest = g.read.snapshots("t").map(_._1).max
+      val pinned = g.read.tableAt("t", latest)
+      val pinnedAsOf = g.read.table("t", asOf = Some(latest))
+      g.write.insert("t", Seq((6L, "c", 60.0)).toDF("k", "grp", "v"))
+      g.summaries.maintain("s")
+      assert(pinned.count() == 5)
+      assert(pinnedAsOf.count() == 5)
+      assert(g.read.changes("t", latest, latest + 1).count() == 1)
+      assert(g.read.count("t") == 6)
+    } finally { g.summaries.detach("t"); g.close() }
+  }
 }
