@@ -315,10 +315,10 @@ object Bench {
     minhash ++ funnel ++ budget ++ cdc ++ mir ++ mms
   }
   /** Write-path rider (r16, VERDICT r15 #1): after the lifecycle
-    * bootstraps moved out of the graded spans, the staged-append bulk
-    * write (TableStore.insert: source validation riding the staged
-    * write, append.tmp staging, per-file rename moves, incremental
-    * manifest commit) had no graded signal left beyond cmt8's 64-row
+    * bootstraps moved out of the graded spans, the bulk append write
+    * (TableStore.insert: source validation riding the write, files
+    * written in place under data/, incremental manifest commit) had
+    * no graded signal left beyond cmt8's 64-row
     * loop. This entry grades it directly: a typed CREATE (empty —
     * schema from the source projection) plus ONE bulk INSERT of the
     * full lineitem table at the bench SF into a fresh store. Nothing

@@ -265,19 +265,21 @@ final case class Graft(
     def clearAutoAnalyze(name: String): Unit = st(name).clearAutoAnalyze(pn(name))
     /** Drop snapshot history older than the last `keepLast` generations. */
     /** Vacuum dry-run (C40) — what a vacuum at this retention would
-      * free, per retired generation tree; see TableStore.vacuumDryRun. */
+      * free, per generation that replaced the files; see
+      * TableStore.vacuumDryRun. */
     def vacuumDryRun(name: String, keepLast: Int = 1): DataFrame =
       st(name).vacuumDryRun(pn(name), keepLast)
 
     def vacuum(name: String, keepLast: Int = 1): Unit =
       st(name).vacuum(pn(name), keepLast)
     /** Roll the table back to snapshot `gen` (data + schema) as a NEW
-      * generation — metadata-only renames, no data copied. */
+      * generation — one manifest, no data copied or moved. */
     def restore(name: String, gen: Int): Unit = st(name).restore(pn(name), gen)
-    /** Post-crash recovery: re-list and commit a fresh manifest (run
-      * after clearing a dead APPEND writer's commit lock). */
+    /** Post-crash recovery: roll back to the newest committed generation,
+      * deleting what a dead writer left uncommitted (run after clearing
+      * its commit lock). */
     def repair(name: String): Unit = st(name).repair(pn(name))
-    /** Change the PK-hash bucket count (0 = flat) — one staged rewrite;
+    /** Change the PK-hash bucket count (0 = flat) — one rewrite;
       * older snapshots keep pruning under their own layout. */
     def rebucket(name: String, buckets: Int): Unit = st(name).rebucket(pn(name), buckets)
     /** File counts each skip layer leaves for a WHERE (metadata-only) —

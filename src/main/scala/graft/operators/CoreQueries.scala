@@ -108,7 +108,7 @@ object CoreQueries {
   // C23: snapshot read (time travel) — every mutation commits a
   // generation; a reader pinned to the pre-mutation generation sees the
   // original state even though later mutations rewrote or deleted its
-  // files (they retire into history/, they are not destroyed). The
+  // files (they stay on disk until a vacuum expires the snapshot). The
   // oracle is the ORIGINAL cast relation: the snapshot must match it
   // despite an update (+1000 on 200 keys) and a merge that deleted 100
   // keys having been committed after it.
@@ -158,11 +158,11 @@ object CoreQueries {
 
   // C29: restore (rollback) — the snapshot surface's WRITE half: after
   // a bad update and a destructive merge, restore re-points the CURRENT
-  // table at the first generation's data and schema (zero-copy renames,
+  // table at the first generation's data and schema (one manifest,
   // committed as a new generation — see TableStore.restore). The oracle
   // is the ORIGINAL cast relation read from the LIVE table, not a
   // snapshot: the rollback itself must be what made current == original.
-  // Bucketed store so the rename-back path crosses bucket dirs.
+  // Bucketed store so the restored file set spans bucket dirs.
   def restoreRead(s: SparkSession, dir: String): DataFrame = {
     val store = newStore(s, "restore")
     store.createTable("cust", Seq(

@@ -154,9 +154,10 @@ object IncrementalAgg {
     * removed the watermark's snapshot) is that rescan branch with every
     * group touched.
     *
-    * Checkpoints: the result (the commit retires files its lazy plan
-    * reads) and, on the rescan path, the delta and the rescan (each
-    * feeds two branches; AQE's stage reuse does not span this DAG).
+    * Checkpoints: the result (the emptiness probe, the keyed write's
+    * source-bucket collect and its write each read it) and, on the
+    * rescan path, the delta and the rescan (each feeds two branches;
+    * AQE's stage reuse does not span this DAG).
     * They are local — not replicated, so losing an executor fails the
     * fold; the one-commit intent protocol keeps that safe, because the
     * next call refolds the same range. */

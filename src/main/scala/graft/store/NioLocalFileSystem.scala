@@ -32,7 +32,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * libhadoop-equipped install) the stock implementations never hit the
   * Shell fallback and this class is simply not registered.
   */
-class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+class NioLocalFileSystem(raw: NioRawLocalFileSystem) extends LocalFileSystem(raw) {
+  def this() = this(new NioRawLocalFileSystem)
+}
 
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 

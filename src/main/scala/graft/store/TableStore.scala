@@ -34,7 +34,8 @@ import graft.types.{Infer, SqlType}
   *    Locally the whole table is rewritten; the algebra itself is
   *    partition-agnostic, so a production store would rewrite only the
   *    files whose key ranges intersect the source keys.
-  *  - atomic swap: new data is written to `data.tmp` then renamed.
+  *  - atomic commit: new files are written in place under `data/`
+  *    and become the table only when the generation's manifest lands.
   */
 object TableStore {
   /** buckets = 0 → flat layout; buckets > 0 → data partitioned into
@@ -56,14 +57,11 @@ object TableStore {
       })
   }
 
-  /** One committed generation: its number, the schema/PK/layout its
-    * files are read under, and its file set as data-dir-relative keys.
-    * `newest` = the table's latest generation, whose files live in
-    * data/ by the commit protocol; `current` = read as the live table
-    * (no `asOf`), the only reading a plan rule may answer from a
-    * summary of the table. */
-  private[store] final case class Generation(gen: Int, meta: Meta, rels: Seq[String],
-      newest: Boolean, current: Boolean)
+  /** One committed generation: the schema/PK/layout its files are read
+    * under, and its file set as data-dir-relative keys. `current` = read
+    * as the live table (no `asOf`), the only reading a plan rule may
+    * answer from a summary of the table. */
+  private[store] final case class Generation(meta: Meta, rels: Seq[String], current: Boolean)
 
   /** Dense `_pk` identity for an insert batch, scale-safe.
     *
@@ -202,8 +200,6 @@ final class TableStore(
   private[graft] val PropsVersion = "graft.props.version"
   private def manifestPath(name: String, gen: Int) =
     new Path(historyPath(name), f"m$gen%06d.json")
-  private def removedPath(name: String, gen: Int) =
-    new Path(historyPath(name), f"g$gen%06d")
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val BucketCol = "__bucket"
@@ -313,9 +309,8 @@ final class TableStore(
 
   /** Remove a stale commit lock left by a crashed writer. Only call once
     * the holder recorded in the ConcurrentWrite error is known dead — a
-    * live holder whose lock is cleared is back to the silent race. If
-    * the dead writer was an APPEND, follow with [[repair]]: it may have
-    * moved batch files into data/ without committing their manifest. */
+    * live holder whose lock is cleared is back to the silent race. Then
+    * [[repair]] deletes the files the dead writer left uncommitted. */
   def clearCommitLock(name: String): Unit = fs.delete(lockPath(name), false)
 
   /** Columns of SQL type DATETIMEOFFSET: comparisons, ORDER BY sort
@@ -520,10 +515,6 @@ final class TableStore(
     writeMeta(name, m)
     audit(s"create table $name (${m.columns.map { case (n, t) => s"$n ${t.render}" }.mkString(", ")})" +
       (if (pk0.nonEmpty) s" primary key (${pk0.mkString(", ")})" else ""))
-    if (buckets == 0)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.sparkSchema)
-        .write.mode("overwrite").parquet(dataPath(name).toString)
-    // bucketed: no seed file — the first insert creates the partition dirs
   }
 
   /** Inferred-schema create (reference create.table_from_dataframe,
@@ -802,9 +793,9 @@ final class TableStore(
   /** Compact small files (append-heavy tables accumulate one file per
     * insert): rewrite the table so each bucket holds ONE file (bucketed
     * layout) or the data dir holds ceil(rows/rowsPerFile) files (flat).
-    * Contents and metadata are unchanged; goes through the same staged
-    * data.tmp swap as every rewrite. The 100 TB version runs per-bucket
-    * incrementally; locally one job covers the whole table. */
+    * Contents and metadata are unchanged; committed like every rewrite
+    * (new files in place, one manifest). The 100 TB version runs
+    * per-bucket incrementally; locally one job covers the whole table. */
   def compact(name: String, rowsPerFile: Long = 1000000L): Unit = withCommitLock(name) {
     val g = generation(name)
     if (g.rels.isEmpty) return
@@ -888,12 +879,13 @@ final class TableStore(
     val presentKeys = present.toSet
     val existing = FileStats.read(fs, statsPath(name)).getOrElse(Map.empty)
     // entries for files a retained SNAPSHOT still references outlive the
-    // files' retirement from data/ (rel paths are never reused and files
-    // are immutable, so an entry stays true forever) — they are what
-    // lets a snapshot read prune like a current read. The manifest walk
-    // runs only when retired entries actually exist (rewrites); on an
-    // append stream nothing retires, keeping incremental analyze
-    // O(batch) instead of O(#generations × #files) JSON parsing.
+    // files' removal from the current file set (rel paths are never
+    // reused and files are immutable, so an entry stays true forever) —
+    // they are what lets a snapshot read prune like a current read. The
+    // manifest walk runs only when retired entries actually exist
+    // (rewrites); on an append stream nothing leaves the file set,
+    // keeping incremental analyze O(batch) instead of O(#generations ×
+    // #files) JSON parsing.
     val retired = existing.filter { case (f, _) => !presentKeys.contains(f) }
     val forSnapshots =
       if (retired.isEmpty) retired
@@ -1001,8 +993,8 @@ final class TableStore(
           key -> FileStats.FileStat(r.getAs[Long]("__rows"), cs)
         }.toMap
       }
-    // scanned files the aggregation never saw are EMPTY (e.g. the
-    // flat-layout seed file) — record rows=0 so pruning can drop them too
+    // scanned files the aggregation never saw are EMPTY (e.g. an empty
+    // insert batch's file) — record rows=0 so pruning can drop them too
     val empty = statKeys.map(sk =>
       sk.key -> FileStats.ColStat(None, None, 0L, Some(sk.dom))).toMap
     val empties = toScan.map(_ -> FileStats.FileStat(0L, empty)).toMap
@@ -1104,22 +1096,21 @@ final class TableStore(
   //
   // Every mutation commits a GENERATION: a manifest (history/m<N>.json)
   // listing the table's file set (data-dir-relative paths) plus the
-  // schema at commit time, and — for rewrites — the replaced
-  // files/bucket-dirs MOVED (renamed, never copied) to history/g<N>/
-  // under their original relative paths instead of being deleted. The
-  // newest manifest IS the table: current reads, keyed mutations and
-  // every commit take the file set from it, never from a listing of
-  // data/ (only [[repair]] re-lists, to fold in what a crash stranded).
-  // Because part-file names embed a job UUID, a relative path is never
-  // reused, so a snapshot read resolves each manifest entry to either
-  // data/<rel> (in the newest manifest) or the unique history/g<M>/<rel>
-  // that removed it. Cost model at 100 TB: a commit writes one
-  // O(#files) manifest derived from what it wrote and retired, plus an
-  // O(replaced) rename pass (no data copied, no extra write
-  // amplification); concurrent readers of generation N keep working
-  // through a rewrite because their files are renamed within the same
-  // filesystem, not destroyed — the gap [[vacuum]] closes on the old
-  // immediate-delete behavior.
+  // schema at commit time. The manifest's tmp-write + rename is the
+  // ONLY commit point: writers put their new files straight into data/
+  // under final, never-reused names (part-file names embed the write's
+  // job UUID), and a replaced file stays where it is — the next
+  // manifest simply stops naming it. The newest manifest IS the table:
+  // current reads, keyed mutations and every commit take the file set
+  // from it, never from a listing of data/, so a file no manifest names
+  // (a crashed or failed writer's) is invisible, and [[repair]] deletes
+  // it. Every retained generation's files live at data/<rel>, so a
+  // snapshot read is the same scan as a current read. Cost model at
+  // 100 TB: a commit writes one O(#files) manifest derived from the
+  // previous one and what it wrote — no data copied, no file moved;
+  // concurrent readers of generation N keep working through a rewrite
+  // because their files are not touched until [[vacuum]] expires every
+  // manifest that names them.
   //
   // Commit concurrency: the contract is SINGLE WRITER PER TABLE,
   // ENFORCED by the create-exclusive commit.lock (see withCommitLock) —
@@ -1128,13 +1119,13 @@ final class TableStore(
   // is also what makes the INCREMENTAL manifest form sound: every
   // commit derives its manifest as previous-manifest + the writer's own
   // delta (appends and metadata-only DDL add files or nothing; rewrites
-  // swap the files they retired for the files they staged), because
+  // swap the files they replace for the files they wrote), because
   // under the lock the previous manifest IS the current file set.
   //
   // Snapshot reads PRUNE like current reads (round 6): the manifest
   // pins the schema and primary key at commit (so bucket pruning hashes
   // the right key over the snapshot's dirs), and the stats sidecar
-  // retains entries for retired-but-still-referenced files (rel paths
+  // retains entries for replaced-but-still-referenced files (rel paths
   // are never reused and files immutable, so an entry stays true
   // forever; analyze and vacuum trim entries no retained snapshot
   // references).
@@ -1147,7 +1138,7 @@ final class TableStore(
   //    file is right for this store's file counts.
   //  - vacuum vs. long-running readers: retention is TIME-based safety —
   //    keepLast must outlast the longest reader, since a vacuum can
-  //    delete history a still-running old-generation scan references
+  //    delete files a still-running old-generation scan references
   //    (the same contract as Delta's VACUUM retention window).
 
   /** Retained snapshot generations as (gen, commitTimeMillis), ascending. */
@@ -1192,50 +1183,44 @@ final class TableStore(
       .sorted
   }
 
-  /** Next generation number: one past the max over BOTH committed
-    * manifests and existing g<N> removed-file trees. Retirement renames
-    * into g<N> happen before the manifest commit, so a crash in that
-    * window leaves an orphaned g<N> with no m<N>.json — deriving from
-    * manifests alone would re-mint N and nest or fail (filesystem-
-    * dependent) on the leftover tree. */
-  private def nextGen(name: String): Int = {
-    val h = historyPath(name)
-    val dirGens =
-      if (!fs.exists(h)) Seq.empty[Int]
-      else fs.listStatus(h).toSeq.map(_.getPath.getName).collect {
-        case s if s.length > 1 && s.startsWith("g") && s.drop(1).forall(_.isDigit) =>
-          s.drop(1).toInt
-      }
-    (manifestGens(name) ++ dirGens ++ Seq(0)).max + 1
-  }
+  /** Next generation number: one past the newest committed manifest.
+    * A crash before a manifest's rename leaves nothing that claims the
+    * number (the next commit overwrites its stale tmp file). */
+  private def nextGen(name: String): Int = (manifestGens(name) :+ 0).max + 1
 
   /** Write generation `gen`'s manifest: the table's file set + schema.
     * tmp+rename like stats.json, so a torn write never becomes a
-    * generation.
+    * generation. That rename is the commit: `written` (the files the
+    * committing writer just put into data/) join the table only if it
+    * lands, and are deleted again if it fails.
     *
     * `files` is the caller's DERIVED file set: previous manifest plus
     * its own delta (appends and metadata-only DDL add files or nothing;
-    * rewrites replace what they retired with what they staged), so no
-    * commit lists data/ — only [[repair]] passes a fresh listing, to
-    * fold in files a crashed writer stranded. Deriving is sound because
-    * the commit lock serializes writers: the previous manifest IS the
-    * current file set. */
-  private def commitSnapshot(name: String, gen: Int, files: Seq[String]): Unit = {
-    val o = mapper.createObjectNode()
-    o.put("gen", gen)
-    o.put("ts", clock())
-    o.set("meta", metaNode(meta(name)): JsonNode)
-    val arr = o.putArray("files")
-    files.foreach(arr.add)
-    fs.mkdirs(historyPath(name))
-    val dst = manifestPath(name, gen)
-    val tmp = new Path(dst.getParent, dst.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(o))
-    out.close()
-    if (!fs.rename(tmp, dst))
-      throw new IllegalStateException(s"manifest commit failed: $dst")
-    evictUnder(dataPath(name), files.toSet.contains)
+    * rewrites replace the files they rewrote with what they wrote), so
+    * no commit lists data/. Deriving is sound because the commit lock
+    * serializes writers: the previous manifest IS the current file set. */
+  private def commitSnapshot(name: String, gen: Int, files: Seq[String],
+      written: Seq[String] = Nil): Unit = {
+    try {
+      val o = mapper.createObjectNode()
+      o.put("gen", gen)
+      o.put("ts", clock())
+      o.set("meta", metaNode(meta(name)): JsonNode)
+      val arr = o.putArray("files")
+      files.foreach(arr.add)
+      val dst = manifestPath(name, gen)
+      val tmp = new Path(dst.getParent, dst.getName + ".tmp")
+      fs.mkdirs(historyPath(name))
+      val out = fs.create(tmp, true)
+      out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(o))
+      out.close()
+      if (!fs.rename(tmp, dst))
+        throw new IllegalStateException(s"manifest commit failed: $dst")
+    } catch {
+      case e: Throwable =>
+        try deleteFiles(name, written) catch { case c: Throwable => e.addSuppressed(c) }
+        throw e
+    }
     commitEpoch.incrementAndGet()
     maybeAutoAnalyze(name)
     firePostCommitHooks(name)
@@ -1352,19 +1337,15 @@ final class TableStore(
 
   /** The table as of `asOf` (its manifest's meta), or CURRENT: the
     * newest manifest's file set under the live meta. A table never
-    * committed (a fresh create's flat seed file) falls back to one
-    * listing of data/ as generation 0. */
-  private def generation(name: String, asOf: Option[Int] = None): Generation = {
-    val newest = manifestGens(name).lastOption
-    asOf match {
-      case Some(g) =>
-        val (mAt, rels) = readManifest(name, g)
-        Generation(g, mAt, rels, newest.contains(g), current = false)
-      case None =>
-        val m = meta(name)
-        Generation(newest.getOrElse(0), m, newest.fold(listDataFiles(name))(readManifest(name, _)._2),
-          newest = true, current = true)
-    }
+    * committed has no files. */
+  private def generation(name: String, asOf: Option[Int] = None): Generation = asOf match {
+    case Some(g) =>
+      val (mAt, rels) = readManifest(name, g)
+      Generation(mAt, rels, current = false)
+    case None =>
+      Generation(meta(name),
+        manifestGens(name).lastOption.fold(Seq.empty[String])(readManifest(name, _)._2),
+        current = true)
   }
 
   /** Parse generation `gen`'s manifest → (schema at commit, file set). */
@@ -1380,58 +1361,21 @@ final class TableStore(
     (mAt, rels)
   }
 
-  /** Move a to-be-replaced data path into generation `gen`'s removed
-    * tree, preserving its data-relative path. A rename, not a copy. */
-  private def retire(name: String, gen: Int, target: Path): Unit = {
-    val rel = FileStats.relativeKey(dataPath(name), target)
-    val dst = new Path(removedPath(name, gen), rel)
-    fs.mkdirs(dst.getParent)
-    if (!fs.rename(target, dst))
-      throw new IllegalStateException(s"history retire failed: $target")
-  }
-
   /** Snapshot read (time travel): the table EXACTLY as of generation
-    * `gen` — the file set and schema its manifest recorded, whether the
-    * files still live in data/ or were since moved to the history tree
-    * by later rewrites. Raises on a vacuumed (or never-committed)
-    * generation. The same [[scan]] a current read takes. */
+    * `gen` — the file set and schema its manifest recorded; its files
+    * stay in data/ until a vacuum expires the manifest. Raises on a
+    * vacuumed (or never-committed) generation. The same [[scan]] a
+    * current read takes. */
   def readTableAt(name: String, gen: Int): DataFrame = readGen(name, generation(name, Some(gen)))
-
-  /** Resolve each manifest entry of an OLDER generation `gen` to its
-    * readable absolute path: data/<rel> while the newest manifest holds
-    * it, else the unique history/g<M>/<rel> (M > gen) that retired it.
-    * One recursive listing of history/ resolves all entries (O(#files)
-    * driver metadata, no per-file RPCs). */
-  private def resolveSnapshotFiles(name: String, gen: Int, rels: Seq[String]): Map[String, Path] = {
-    val current: Set[String] = generation(name).rels.toSet
-    // removal index: relative path -> the generation that retired it
-    val removed = scala.collection.mutable.Map.empty[String, Int]
-    if (fs.exists(historyPath(name)))
-      fs.listStatus(historyPath(name))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-        .foreach { s =>
-          val g = s.getPath.getName.stripPrefix("g").toInt
-          parquetFiles(s.getPath).foreach(rel => removed += rel -> g)
-        }
-    rels.map { rel =>
-      rel -> (if (current.contains(rel)) new Path(dataPath(name), rel)
-      else removed.get(rel).filter(_ > gen) match {
-        case Some(g) => new Path(removedPath(name, g), rel)
-        case None => throw errors.InvalidValue("asOf",
-          s"snapshot $gen of table $name is no longer reconstructable ($rel vacuumed)")
-      })
-    }.toMap
-  }
 
   /** THE scan of a committed generation — current reads, snapshot
     * reads, the change feed, analyze, countRows and the keyed-mutation
     * scan all take it: `rels` (the generation's whole file set, or a
     * pruned subset) under the merged footer schema of the WHOLE set,
     * unaligned. Spark plans from the named files and lists nothing
-    * (see bridge.committedParquetScan). The newest generation's files
-    * live in data/ by the commit protocol; an older generation's files
-    * resolve to their data/ or history/g<M> homes. Only a CURRENT read
-    * of the WHOLE file set is rooted at data/ — the identity
+    * (see bridge.committedParquetScan). Every retained generation's
+    * files live at data/<rel>. Only a CURRENT read of the WHOLE file
+    * set is rooted at data/ — the identity
     * [[dataLocation]] promises plan rules, which may answer such a scan
     * from a summary of the live table — and `__bucket` then comes from
     * the files' paths. Every other scan (a pruned subset, countRows'
@@ -1444,15 +1388,12 @@ final class TableStore(
       bucketed: Boolean = false): DataFrame = {
     if (rels.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], g.meta.sparkSchema)
-    val path: String => Path =
-      if (g.newest) rel => fs.makeQualified(new Path(dataPath(name), rel))
-      else resolveSnapshotFiles(name, g.gen, g.rels).andThen(fs.makeQualified(_))
     val leaves =
       if (g.current && rels == g.rels)
-        Seq(fs.makeQualified(dataPath(name)) -> rels.map(r => fileStatus(path(r))))
-      else rels.map { r => val p = path(r); p -> Seq(fileStatus(p)) }
+        Seq(fs.makeQualified(dataPath(name)) -> rels.map(r => fileStatus(dataFile(name, r))))
+      else rels.map { r => val p = dataFile(name, r); p -> Seq(fileStatus(p)) }
     org.apache.spark.sql.graftx.bridge.committedParquetScan(spark, leaves,
-      mergedSchema(name, g.rels, path),
+      mergedSchema(name, g.rels),
       if (bucketed) Some((g.meta.buckets, g.meta.primaryKey)) else None)
   }
 
@@ -1520,57 +1461,23 @@ final class TableStore(
     * rolled-back states stay in history and `readChanges` across the
     * restore boundary shows the exact reverse diff of what it undoes.
     *
-    * Metadata-only at any scale: since [[retire]] RENAMES files (never
-    * copies), every data-relative path has exactly ONE physical home at
-    * any instant — data/<rel> or the single history/g<M>/<rel> that
-    * retired it. Restore therefore (a) retires files added after `gen`
-    * into ITS generation tree and (b) renames the snapshot's retired
-    * files back to their original data/ homes. O(#changed files) driver
-    * renames, zero bytes of data copied or rewritten — restoring a
-    * 100 TB table after a bad load costs the same as the bad load's
-    * commit did. Every other snapshot stays resolvable: a renamed-back
-    * file is in the newest manifest again (resolution places those in
-    * data/), and if a later rewrite re-retires it, the rel path again
-    * has one home.
-    * Stats-sidecar entries are keyed by rel path over immutable bytes,
-    * so pruning survives the round trip untouched.
+    * Metadata-only at any scale: every retained generation's files stay
+    * in data/, so the restore is one manifest naming the snapshot's
+    * files again — zero bytes of data copied, rewritten or moved;
+    * restoring a 100 TB table after a bad load costs one manifest
+    * write. Stats-sidecar entries are keyed by rel path over immutable
+    * bytes, so pruning survives the round trip untouched.
     *
-    * Raises on a vacuumed generation (some needed file no longer has a
-    * home) — the same retention contract as snapshot reads. */
+    * Raises on a vacuumed generation (some needed file is gone) — the
+    * same retention contract as snapshot reads. */
   def restore(name: String, gen: Int): Unit = withCommitLock(name) {
     val (mAt, rels) = readManifest(name, gen)
-    val target = rels.toSet
-    val current = generation(name).rels
+    val current = generation(name).rels.toSet
+    rels.filterNot(current).find(rel => !fs.exists(new Path(dataPath(name), rel))).foreach { rel =>
+      throw errors.InvalidValue("restore",
+        s"snapshot $gen of table $name is no longer restorable ($rel vacuumed)")
+    }
     val g = nextGen(name)
-    // (a) files added after `gen` retire into this restore's tree
-    current.filterNot(target.contains).foreach { rel =>
-      retire(name, g, new Path(dataPath(name), rel))
-    }
-    // (b) snapshot files later rewrites retired rename back home;
-    // one history walk locates each (unique — rel paths have one home)
-    val missing = rels.filterNot(current.toSet.contains)
-    if (missing.nonEmpty) {
-      val homes = scala.collection.mutable.Map.empty[String, Path]
-      if (fs.exists(historyPath(name)))
-        fs.listStatus(historyPath(name))
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-          .foreach { s =>
-            val it = fs.listFiles(s.getPath, true)
-            while (it.hasNext) {
-              val p = it.next().getPath
-              if (p.getName.endsWith(".parquet"))
-                homes += FileStats.relativeKey(s.getPath, p) -> p
-            }
-          }
-      missing.foreach { rel =>
-        val src = homes.getOrElse(rel, throw errors.InvalidValue("restore",
-          s"snapshot $gen of table $name is no longer restorable ($rel vacuumed)"))
-        val dst = new Path(dataPath(name), rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(src, dst))
-          throw new IllegalStateException(s"restore rename failed: $rel")
-      }
-    }
     // the snapshot's meta comes back with its data: schema, primary
     // key and bucket count must describe the restored file set
     writeMeta(name, mAt)
@@ -1674,63 +1581,59 @@ final class TableStore(
   }
 
   /** Drop snapshot history, keeping the last `keepLast` generations
-    * readable. Deletes the expired manifests and every history/g<M>
-    * removed-file tree with M <= cutoff (files retired at M are only
-    * needed by snapshots OLDER than M — all expired). Current data is
-    * never touched; with keepLast=1 the table keeps only its latest
-    * committed state, the pre-snapshot disk footprint. */
+    * readable: deletes the expired manifests, then every file an
+    * expired manifest names and no retained manifest does ([[expiry]];
+    * from manifests alone, no listing). The manifests go first, so a
+    * crash in between leaves only unnamed files, which [[repair]]
+    * deletes. Current data is never touched; with keepLast=1 the table
+    * keeps only its latest committed state. */
   def vacuum(name: String, keepLast: Int = 1): Unit = withCommitLock(name) {
     require(keepLast >= 1, "vacuum: keepLast must be >= 1")
-    val gens = manifestGens(name)
-    if (gens.size <= keepLast) return
-    val cutoff = gens.takeRight(keepLast).head
-    gens.filter(_ < cutoff).foreach(g => fs.delete(manifestPath(name, g), false))
-    fs.listStatus(historyPath(name))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-      .filter(_.getPath.getName.stripPrefix("g").toInt <= cutoff)
-      .foreach { s => fs.delete(s.getPath, true); evictUnder(s.getPath) }
+    val (expired, dead, live) = expiry(name, keepLast)
+    if (expired.isEmpty) return
+    expired.foreach(g => fs.delete(manifestPath(name, g), false))
+    deleteFiles(name, dead.keys)
     // trim stats entries whose files no retained snapshot (the newest
     // included) references anymore — the sidecar's retention tracks
     // the snapshots' (see analyze), so vacuum bounds its growth too
     FileStats.read(fs, statsPath(name)).foreach { st =>
-      val live: Set[String] = manifestGens(name).flatMap(g => readManifest(name, g)._2).toSet
       val keptStats = st.filter { case (f, _) => live.contains(f) }
       if (keptStats.size != st.size)
         FileStats.write(fs, statsPath(name), keptStats)
     }
-    audit(s"vacuum $name: kept generations >= $cutoff")
+    audit(s"vacuum $name: dropped generations <= ${expired.last}")
+  }
+
+  /** What `vacuum(name, keepLast)` drops: the expired generations, each
+    * file named by an expired manifest and by no retained one — mapped
+    * to the generation whose manifest stopped naming it — and the files
+    * the retained manifests name. */
+  private def expiry(name: String, keepLast: Int): (Seq[Int], Map[String, Int], Set[String]) = {
+    val gens = manifestGens(name)
+    if (gens.size <= keepLast) return (Nil, Map.empty, Set.empty)
+    val sets = gens.map(g => g -> readManifest(name, g)._2.toSet)
+    val (expired, kept) = sets.splitAt(gens.size - keepLast)
+    val live = kept.flatMap(_._2).toSet
+    val named = expired.flatMap(_._2).toSet -- live
+    val stoppedAt = sets.zip(sets.tail).flatMap { case ((_, prev), (g, cur)) =>
+      (prev -- cur).filter(named).map(_ -> g) }.toMap
+    (expired.map(_._1), stoppedAt, live)
   }
 
   /** C40: vacuum DRY-RUN — exactly what `vacuum(name, keepLast)` would
-    * free, without freeing it: the manifests to drop and, per retired
-    * generation tree, the file count and bytes reclaimed. Shares
-    * [[vacuum]]'s cutoff arithmetic verbatim (gens.takeRight(keepLast)
-    * .head), so the report can never promise a different cut than the
-    * real run takes — the retention-decision input a data owner reads
-    * next to [[history]] before destroying time travel. Metadata-only:
-    * one manifest listing + one recursive listing of the to-be-deleted
-    * trees (the trees being sized for deletion is the one case where
-    * listing them is the cheap path). */
+    * free, without freeing it: per generation whose manifest stopped
+    * naming them, the count and bytes of the files vacuum deletes.
+    * Shares [[vacuum]]'s [[expiry]] verbatim, so the report can never
+    * promise a different cut than the real run takes — the
+    * retention-decision input a data owner reads next to [[history]]
+    * before destroying time travel. Metadata-only: the manifests plus
+    * one status per file to free. */
   def vacuumDryRun(name: String, keepLast: Int = 1): DataFrame = {
     require(keepLast >= 1, "vacuumDryRun: keepLast must be >= 1")
     import spark.implicits._
-    val gens = manifestGens(name)
-    if (gens.size <= keepLast)
-      return Seq.empty[(Int, Long, Long)].toDF("gen", "n_files", "bytes")
-    val cutoff = gens.takeRight(keepLast).head
-    val rows = fs.listStatus(historyPath(name))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("g"))
-      .filter(_.getPath.getName.stripPrefix("g").toInt <= cutoff)
-      .map { s =>
-        var n = 0L
-        var bytes = 0L
-        val it = fs.listFiles(s.getPath, true)
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile) { n += 1; bytes += f.getLen }
-        }
-        (s.getPath.getName.stripPrefix("g").toInt, n, bytes)
-      }.toSeq.sortBy(_._1)
+    val rows = expiry(name, keepLast)._2.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, files) =>
+      (g, files.size.toLong, files.keys.toSeq.map(r => fileStatus(dataFile(name, r)).getLen).sum)
+    }
     rows.toDF("gen", "n_files", "bytes")
   }
 
@@ -1820,40 +1723,25 @@ final class TableStore(
     }.toOption
   }
 
-  /** The files a write left in staging dir `dir`, as dir-relative keys
-    * under their FINAL names — the delta its commit derives the
-    * manifest from. r16: each bucket's id is embedded into its part-file
-    * names (Spark's `_00003` bucketed-file convention) right after a
-    * bucketed partitionBy write — FileSourceScanExec groups a bucketed
+  /** Write `df` in place under data/ — bucketed tables into their
+    * `__bucket=<id>` dirs, each file name embedding its bucket id
+    * (Spark's `_00003` convention: FileSourceScanExec groups a bucketed
     * scan's files by the id parsed from the NAME, which is what lets
-    * [[prunedMutation]] claim the layout as a Catalyst
-    * HashPartitioning. Renames happen pre-commit inside the staging
-    * dir, so manifests and the stats sidecar only ever record the
-    * final names. */
-  private def stagedFiles(dir: Path): Seq[String] =
-    parquetFiles(dir).map { rel =>
-      val (bucketDir, n) = rel.splitAt(rel.indexOf('/') + 1)
-      if (!bucketDir.startsWith(BucketCol + "=")) rel
-      else {
-        val suffix = f"_${bucketDir.stripPrefix(BucketCol + "=").stripSuffix("/").toInt}%05d"
-        val dot = n.indexOf('.')
-        val renamed = bucketDir +
-          (if (n.contains(suffix)) n else if (dot < 0) n + suffix
-          else n.substring(0, dot) + suffix + n.substring(dot))
-        if (renamed != rel && !fs.rename(new Path(dir, rel), new Path(dir, renamed)))
-          throw new IllegalStateException(s"bucket-id rename failed: $dir/$rel")
-        renamed
-      }
-    }
+    * [[prunedMutation]] claim the layout as a Catalyst HashPartitioning)
+    * — and commit `keep` plus the written files as the next generation.
+    * Nothing is staged or moved: until the manifest lands, no reader
+    * sees the new files, and a failed commit deletes them. */
+  private def writeAndCommit(name: String, m: Meta, df: DataFrame, keep: Seq[String]): Unit = {
+    val written = org.apache.spark.sql.graftx.bridge.writeParquet(
+      if (m.buckets > 0) df.withColumn(BucketCol, bucketExpr(m)) else df,
+      dataPath(name).toString, Some(BucketCol).filter(_ => m.buckets > 0))
+    commitSnapshot(name, nextGen(name), keep ++ written, written)
+  }
 
-  /** A fresh LISTING of data/ as relative keys: [[repair]]'s input and
-    * the file set of a table that never committed. Nothing else lists
-    * data/ — the newest manifest is the table. */
-  private def listDataFiles(name: String): Seq[String] = parquetFiles(dataPath(name))
-
-  /** The parquet files under `dir` as dir-relative keys (one recursive
-    * listing; empty when `dir` does not exist). */
-  private def parquetFiles(dir: Path): Seq[String] = {
+  /** A fresh LISTING of data/ as relative keys — [[repair]]'s input.
+    * Nothing else lists data/: the newest manifest is the table. */
+  private def listDataFiles(name: String): Seq[String] = {
+    val dir = dataPath(name)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     if (fs.exists(dir)) {
       val it = fs.listFiles(dir, true)
@@ -1865,18 +1753,28 @@ final class TableStore(
     out.toSeq
   }
 
+  /** Delete table `name`'s data files `rels` and forget their cached
+    * statuses and footers. */
+  private def deleteFiles(name: String, rels: Iterable[String]): Unit = rels.foreach { rel =>
+    val p = dataFile(name, rel)
+    fs.delete(p, false)
+    statusCache.remove(p.toString)
+    fileSchemaCache.remove(p.toString)
+  }
+
+  private def dataFile(name: String, rel: String): Path =
+    fs.makeQualified(new Path(dataPath(name), rel))
+
   // ── merged-schema cache (r15 optimization, guide §1.2/§6) ──────────────
   //
   // Every raw scan used to go through `spark.read.option("mergeSchema",
   // "true")`, and Spark's mergeSchema path launches a DISTRIBUTED footer
   // job per read (SchemaMergeUtils.mergeSchemasInParallel) — measured at
   // 16-23 jobs (~0.5-1 s plus driver gaps) per summary-lifecycle bench
-  // entry. Files are immutable and rel paths never reused (append
-  // part-names embed the job UUID; retired files keep their paths under
-  // history/g<N>), so per-file statuses and footer schemas are cacheable
-  // by path until the path goes away: a commit forgets the data/ paths
-  // its file set no longer holds (retired files reappear, if read, under
-  // their history path) and vacuum the history trees it deletes. A
+  // entry. Files are immutable, never move, and rel paths are never
+  // reused (part-names embed the write's job UUID), so per-file statuses
+  // and footer schemas are cacheable by path until the file is deleted:
+  // vacuum and repair forget exactly the files they delete. A
   // generation's merged schema is a function of its FILE SET alone, so
   // the one merged-schema cache holds, per table, the last set read
   // (digest of every rel) with its schema: current reads hit it, a new
@@ -1898,16 +1796,6 @@ final class TableStore(
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
 
-  /** Forget the cached statuses and footers of every path under `dir`
-    * whose `dir`-relative key `keep` rejects. */
-  private def evictUnder(dir: Path, keep: String => Boolean = _ => false): Unit = {
-    val prefix = fs.makeQualified(dir).toString + "/"
-    val gone: java.util.function.Predicate[String] =
-      k => k.startsWith(prefix) && !keep(k.substring(prefix.length))
-    statusCache.keySet.removeIf(gone)
-    fileSchemaCache.keySet.removeIf(gone)
-  }
-
   private def fileStatus(p: Path): org.apache.hadoop.fs.FileStatus =
     statusCache.computeIfAbsent(p.toString, _ => fs.getFileStatus(p))
 
@@ -1916,14 +1804,13 @@ final class TableStore(
       org.apache.spark.sql.graftx.bridge.parquetFooterSchema(
         spark, spark.sparkContext.hadoopConfiguration, fileStatus(p)))
 
-  /** Merged footer schema of the file set `rels` of table `name`, each
-    * rel read from `path(rel)` on a miss. */
-  private def mergedSchema(name: String, rels: Seq[String], path: String => Path): StructType = {
+  /** Merged footer schema of the file set `rels` of table `name`. */
+  private def mergedSchema(name: String, rels: Seq[String]): StructType = {
     val md = java.security.MessageDigest.getInstance("MD5")
     rels.foreach(r => md.update((r + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     val digest = java.util.Base64.getEncoder.encodeToString(md.digest())
     Option(schemaCache.get(dataLocation(name))).filter(_._1 == digest).map(_._2).getOrElse {
-      val s = mergedSchemaOf(rels.map(path))
+      val s = mergedSchemaOf(rels.map(dataFile(name, _)))
       schemaCache.put(dataLocation(name), (digest, s))
       s
     }
@@ -1969,7 +1856,7 @@ final class TableStore(
     * manifest's file set — bucket dirs by the generation's PK hash,
     * files by the stats sidecar (entries are keyed by never-reused
     * relative paths over immutable files, so they stay valid for
-    * retired files) — then one [[scan]] of the survivors. */
+    * replaced files) — then one [[scan]] of the survivors. */
   def readTable(
       name: String,
       columns: Seq[String] = Seq.empty,
@@ -2084,15 +1971,15 @@ final class TableStore(
     }
 
     // r15 (guide §1.2, one pass instead of two): bounds / NOT NULL /
-    // unicode validation rides the append's OWN staged write as a
-    // per-row assert (withSourceValidation) instead of a separate
-    // aggregate job over the batch. The auto-widen ladder keeps its
-    // aggregate — but only on the RARE path where a bounds violation
-    // actually fired: the catch below re-runs typeViolations to learn
-    // the violated column set, widens, and retries the staged write
-    // under the new meta (append.tmp is wiped at the top of each
-    // attempt, so a failed attempt leaves nothing behind).
-    def stageAndCommit(m: Meta): Unit = {
+    // unicode validation rides the append's OWN write as a per-row
+    // assert (withSourceValidation) instead of a separate aggregate job
+    // over the batch. The auto-widen ladder keeps its aggregate — but
+    // only on the RARE path where a bounds violation actually fired:
+    // the catch below re-runs typeViolations to learn the violated
+    // column set, widens, and retries the write under the new meta (a
+    // failed write job deletes its own files, so a failed attempt
+    // leaves nothing behind).
+    def writeBatch(m: Meta): Unit = {
       // CHECK constraints on the (possibly widened) batch — absent
       // columns read as null → UNKNOWN → pass, so only fully-present
       // constraints apply on an insert (SQL CHECK semantics)
@@ -2108,49 +1995,16 @@ final class TableStore(
         df2 = TableStore.assignDenseIds(vdf, maxPk)
       }
 
-      val target = read(name)
-      val appended = Mutations.insertAll(target.limit(0), df2, timeInsert)
-      // Staged append: write the batch to append.tmp, then rename each
-      // committed file into data/ under its tmp-relative path. Two wins
-      // over a direct mode("append") write: data/ never sees a partial
-      // job's output, and the mover KNOWS its exact file list — so the
-      // manifest is derived as previous-manifest + delta (O(batch)), not
-      // by re-listing the table (O(#files)). Part-file names embed the
-      // job UUID, so renames cannot collide with existing files.
-      val prevRels = generation(name).rels
-      val tmp = new Path(tablePath(name), "append.tmp")
-      fs.delete(tmp, true)
-      if (m.buckets > 0)
-        appended.withColumn(BucketCol, bucketExpr(m))
-          .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-      else
-        appended.write.mode("overwrite").parquet(tmp.toString)
-      val newRels = scala.collection.mutable.ArrayBuffer.empty[String]
-      // on any move failure, UNDO the already-moved part of the batch:
-      // half-moved files sit in data/ in no manifest — invisible to
-      // readers, but [[repair]] would fold them in. (A process CRASH in
-      // this window can still strand them — that's what the lock the
-      // crash leaves behind plus [[repair]] are for.)
-      try {
-        stagedFiles(tmp).foreach { rel =>
-          val dst = new Path(dataPath(name), rel)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(new Path(tmp, rel), dst))
-            throw new IllegalStateException(s"append move failed for table $name: $rel")
-          newRels += rel
-        }
-      } catch {
-        case e: Throwable =>
-          newRels.foreach(rel => fs.delete(new Path(dataPath(name), rel), false))
-          fs.delete(tmp, true)
-          throw e
-      }
-      fs.delete(tmp, true)
-      // appends remove nothing; the commit extends the previous file set
-      commitSnapshot(name, nextGen(name), prevRels ++ newRels)
+      val g = generation(name)
+      val appended = Mutations.insertAll(readGen(name, g).limit(0), df2, timeInsert)
+      // the batch's files land in data/ under fresh job-UUID names; the
+      // writer KNOWS its exact file list, so the manifest is derived as
+      // previous-manifest + batch (O(batch)), never by re-listing the
+      // table (O(#files)) — appends remove nothing
+      writeAndCommit(name, m, appended, g.rels)
     }
 
-    try stageAndCommit(m)
+    try writeBatch(m)
     catch {
       case e: Throwable => validationMarkerOf(e) match {
         case Some((kind, _, _)) if (kind == "size" || kind == "range") && autoAdjust =>
@@ -2165,7 +2019,7 @@ final class TableStore(
             audit(s"auto-adjust: widening $name.$n ${cur.render} -> ${widen(cur, t).render}")
             alterColumn(name, n, widen(cur, t).render)
           }
-          stageAndCommit(meta(name))
+          writeBatch(meta(name))
         case Some(marker) => throw validationError(marker)
         case None => throw e
       }
@@ -2173,37 +2027,23 @@ final class TableStore(
   }
 
   /** Recovery after a writer CRASHED mid-commit (the lock it left
-    * behind names it): drop stale staging dirs and commit a fresh
-    * RE-LISTED manifest, folding any files a crashed append moved into
-    * data/ but never committed into the table — readers plan from the
-    * newest manifest, so until this commit no reader sees them. The one
-    * commit that lists data/; re-listing is correct under the lock (it
-    * just pays O(#files) where other commits derive their file set) —
-    * EXCEPT after a rewrite that crashed mid-swap:
-    * data/ is gone (retired into history/g<N>) and the replacement
-    * sits in data.tmp, so re-listing would commit the broken (empty)
-    * state as the newest generation and a later vacuum would delete
-    * the only surviving copy. That state is detected and refused with
-    * the two manual options (roll forward: rename data.tmp → data/;
-    * roll back: restore data/ from the newest orphaned history/g<N>).
-    * A stale data.tmp WITH data/ intact (crash before the retire) is
-    * safely dropped — the pre-crash state was never touched. */
+    * behind names it): ROLL BACK to the newest committed generation.
+    * The manifest rename is the only commit point, so everything a
+    * crashed writer did before it is undone here: every parquet file in
+    * data/ that no retained manifest names is deleted (readers never
+    * saw it — they plan from the manifests), and a meta.json written
+    * ahead of a commit that never landed returns to the newest
+    * manifest's schema. Commits nothing new; the one path that lists
+    * data/. */
   def repair(name: String): Unit = withCommitLock(name) {
     if (!exists(name)) throw errors.TableDoesNotExist(name)
-    val dataTmp = new Path(tablePath(name), "data.tmp")
-    val dataExists = fs.exists(dataPath(name))
-    val lastHadFiles =
-      manifestGens(name).lastOption.exists(g => readManifest(name, g)._2.nonEmpty)
-    if (!dataExists && (fs.exists(dataTmp) || lastHadFiles))
-      throw errors.InvalidValue("repair",
-        s"table $name looks like a REWRITE that crashed mid-swap (data/ missing, " +
-          "data.tmp or committed history present); roll forward by renaming " +
-          "data.tmp to data/, or roll back by restoring data/ from the newest " +
-          "orphaned history/g<N>, then re-run repair")
-    fs.delete(dataTmp, true)
-    fs.delete(new Path(tablePath(name), "append.tmp"), true)
-    audit(s"repair $name (re-listed manifest)")
-    commitSnapshot(name, nextGen(name), listDataFiles(name))
+    val gens = manifestGens(name)
+    val named = gens.flatMap(readManifest(name, _)._2).toSet
+    val orphans = listDataFiles(name).filterNot(named)
+    deleteFiles(name, orphans)
+    gens.lastOption.map(readManifest(name, _)._1).filter(_ != meta(name))
+      .foreach(writeMeta(name, _))
+    audit(s"repair $name: deleted ${orphans.size} uncommitted files")
   }
 
   /** One-pass validation of a batch against the table's declared types:
@@ -2553,7 +2393,7 @@ final class TableStore(
     // stream straight from parquet with no table-side shuffle, at any
     // scale. The claim is honest because bucketExpr IS Spark's
     // partition-id expression (Murmur3 pmod) and every file's name
-    // embeds its bucket id (stagedFiles). A manifest naming a file
+    // embeds its bucket id (writeAndCommit). A manifest naming a file
     // without a parseable id (a pre-convention writer's) falls back to
     // the unclaimed scan — correctness never depends on the claim.
     val named = g.rels.forall(r =>
@@ -2563,38 +2403,18 @@ final class TableStore(
     val affected = alignTo(raw, m)
     val result = algebra(affected, source)
     registerTimeCols(name, result, mayAddTimeCols)
-    val m2 = meta(name)
-    // Stage rewritten buckets to data.tmp FIRST (the result reads lazily
-    // from data/, so writing in place would race the scan and a mid-job
-    // failure would leave a mix of old and new buckets), then swap each
-    // rewritten bucket directory in with a rename. The crash window
-    // narrows to per-bucket renames, matching overwriteData's swap.
-    val tmp = new Path(tablePath(name), "data.tmp")
-    result.withColumn(BucketCol, bucketExpr(m2))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-    val staged = stagedFiles(tmp)
-    def dirOf(rel: String) = rel.takeWhile(_ != '/')
-    val written = staged.map(dirOf).toSet
-    // swap every SOURCE-TOUCHED bucket, not just the dirs the result
-    // wrote: a delete that empties a bucket produces NO output dir, but
-    // its old files must still retire — iterating written dirs alone
-    // would leave the deleted rows silently live
-    val swapped = srcBuckets.map(b => s"$BucketCol=$b").toSet ++ written
-    val gen = nextGen(name)
-    swapped.foreach { dirName =>
-      val dst = new Path(dataPath(name), dirName)
-      // replaced bucket dirs RETIRE into the generation's history tree
-      // (rename, not delete) so concurrent/snapshot readers keep working
-      if (fs.exists(dst)) retire(name, gen, dst)
-      if (written(dirName) && !fs.rename(new Path(tmp, dirName), dst))
-        throw new IllegalStateException(s"bucket swap failed for table $name: $dirName")
-    }
-    fs.delete(tmp, true)
-    // the new file set: the untouched buckets' files plus what was staged
-    commitSnapshot(name, gen, g.rels.filterNot(r => swapped(dirOf(r))) ++ staged)
-    // stats entries for the retired buckets' files stay in the sidecar:
-    // keyed by never-reused rel paths, they keep pruning SNAPSHOT reads;
-    // the new files simply aren't pruned until the next analyze
+    // the rewritten buckets' files are written in place next to the
+    // files the scan reads (it reads a fixed file list, so the new ones
+    // never feed it), and the commit swaps EVERY source-touched bucket's
+    // files for them: a delete that empties a bucket writes no file
+    // there, but its old files must still leave the file set. The
+    // replaced files stay on disk for snapshot readers until a vacuum;
+    // their stats entries stay in the sidecar (keyed by never-reused
+    // rel paths, they keep pruning SNAPSHOT reads), and the new files
+    // aren't pruned until the next analyze.
+    val touched = srcBuckets.map(b => s"$BucketCol=$b").toSet
+    writeAndCommit(name, meta(name), result,
+      g.rels.filterNot(r => touched(r.takeWhile(_ != '/'))))
   }
 
   private def registerTimeCols(name: String, result: DataFrame, mayAddTimeCols: Boolean): Unit = {
@@ -2619,13 +2439,14 @@ final class TableStore(
   /** C31: change a table's PK-hash bucket count online (0 = flat).
     * The bucket count chosen at create is a capacity decision, not
     * forever: a table that grew 100× wants more buckets so keyed
-    * mutations keep touching a small fraction of files. One staged
-    * rewrite under the NEW layout (same data.tmp swap as every
-    * rewrite), committed as a generation — and because manifests pin
+    * mutations keep touching a small fraction of files. One rewrite
+    * under the NEW layout (committed like every rewrite), committed as
+    * a generation — and because manifests pin
     * the FULL meta, snapshot reads of older generations keep pruning
-    * under the layout they were written with. Meta is committed first
-    * and rolled back if the rewrite fails, so a crash never leaves the
-    * new meta describing old-layout files (readers would mis-prune). */
+    * under the layout they were written with. Meta is written first and
+    * rolled back if the rewrite fails — and after a crash [[repair]]
+    * returns it to the newest manifest's — so the new meta never
+    * describes old-layout files (readers would mis-prune). */
   def rebucket(name: String, buckets: Int): Unit = withCommitLock(name) {
     val m = meta(name)
     if (buckets < 0)
@@ -2640,28 +2461,10 @@ final class TableStore(
     audit(s"rebucket $name: ${m.buckets} -> $buckets buckets")
   }
 
-  private def overwriteData(name: String, df: DataFrame): Unit = {
-    val m = meta(name)
-    val tmp = new Path(tablePath(name), "data.tmp")
-    if (m.buckets > 0)
-      df.withColumn(BucketCol, bucketExpr(m))
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
-    else
-      df.write.mode("overwrite").parquet(tmp.toString)
-    val staged = stagedFiles(tmp)
-    val dst = dataPath(name)
-    val gen = nextGen(name)
-    // the whole replaced data dir RETIRES into history/g<gen>/ (one
-    // rename — relative paths preserved) instead of being deleted
-    if (fs.exists(dst)) {
-      fs.mkdirs(historyPath(name))
-      if (!fs.rename(dst, removedPath(name, gen)))
-        throw new IllegalStateException(s"history retire failed for table $name")
-    }
-    if (!fs.rename(tmp, dst))
-      throw new IllegalStateException(s"atomic swap failed for table $name")
-    commitSnapshot(name, gen, staged)
-    // old-file stats entries are retained for snapshot pruning (see
-    // prunedMutation); new files are unpruned until the next analyze
-  }
+  /** Replace the whole table with `df`: its files are written in place
+    * and the commit names only them. The old files stay on disk for
+    * snapshot readers (and their stats entries for snapshot pruning)
+    * until a vacuum; new files are unpruned until the next analyze. */
+  private def overwriteData(name: String, df: DataFrame): Unit =
+    writeAndCommit(name, meta(name), df, Nil)
 }

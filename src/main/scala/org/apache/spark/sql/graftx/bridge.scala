@@ -125,4 +125,83 @@ object bridge {
   def hasBucketId(fileName: String): Boolean =
     org.apache.spark.sql.execution.datasources.BucketingUtils
       .getBucketId(fileName).isDefined
+
+  /** The store's one parquet writer: `df` written as new files straight
+    * under `dir` — final names, no staging directory, no rename — and
+    * returned as `dir`-relative paths, so the caller's commit needs no
+    * listing. `bucketCol` (an int column) partitions the files into
+    * `<bucketCol>=<b>/` dirs and embeds `b` in each name (Spark's
+    * `_00003` convention, see [[hasBucketId]]). The same
+    * `FileFormatWriter.write` call Spark's `FileStreamSink.addBatch`
+    * makes with its `ManifestFileCommitProtocol`; the session's
+    * commit-protocol setting, which every user write goes through, is
+    * left alone. A failed job deletes what its tasks wrote. */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, dir: String,
+      bucketCol: Option[String]): Seq[String] = {
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = ds.queryExecution
+    val output = qe.analyzed.output
+    val committer = new InPlaceCommitProtocol(java.util.UUID.randomUUID().toString, dir, bucketCol)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      FileFormatWriter.write(ds.sparkSession, qe.executedPlan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(), committer,
+        FileFormatWriter.OutputSpec(dir, Map.empty, output),
+        ds.sparkSession.sessionState.newHadoopConf(),
+        output.filter(a => bucketCol.contains(a.name)), None, Nil, Map.empty)
+    }
+    committer.written
+  }
+}
+
+/** Commit protocol of [[bridge.writeParquet]]: each task writes its
+  * files at their final paths, `part-<split>-<jobId>[_<bucket>]<suffix>`
+  * (the job UUID keeps names unique across writes), and reports them
+  * in its commit message. Nothing is committed on disk — the caller's
+  * manifest is the commit. An aborted task deletes its files, an
+  * aborted job the files of the tasks that had committed. */
+private[graftx] class InPlaceCommitProtocol(jobId: String, dir: String, bucketCol: Option[String])
+    extends org.apache.spark.internal.io.FileCommitProtocol with Serializable {
+  import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+  import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+  import org.apache.spark.internal.io.FileNameSpec
+
+  @transient private var taskFiles: List[String] = Nil
+  @transient private var committedFiles: List[String] = Nil
+  /** The job's files, `dir`-relative; set by commitJob on the driver. */
+  @transient @volatile var written: Seq[String] = Nil
+
+  private def deleteAll(rels: Seq[String], conf: org.apache.hadoop.conf.Configuration): Unit =
+    rels.foreach { rel =>
+      val p = new org.apache.hadoop.fs.Path(dir, rel)
+      p.getFileSystem(conf).delete(p, false)
+    }
+
+  override def setupJob(ctx: JobContext): Unit = committedFiles = Nil
+  override def commitJob(ctx: JobContext, msgs: Seq[TaskCommitMessage]): Unit =
+    written = msgs.flatMap(_.obj.asInstanceOf[List[String]])
+  override def abortJob(ctx: JobContext): Unit = deleteAll(committedFiles, ctx.getConfiguration)
+  override def onTaskCommit(msg: TaskCommitMessage): Unit = synchronized {
+    committedFiles = msg.obj.asInstanceOf[List[String]] ++ committedFiles
+  }
+
+  override def setupTask(ctx: TaskAttemptContext): Unit = taskFiles = Nil
+  override def newTaskTempFile(ctx: TaskAttemptContext, sub: Option[String],
+      spec: FileNameSpec): String = {
+    val split = ctx.getTaskAttemptID.getTaskID.getId
+    val bucket = for (b <- bucketCol; d <- sub if d.startsWith(b + "="))
+      yield f"_${d.stripPrefix(b + "=").toInt}%05d"
+    val rel = sub.fold("")(_ + "/") +
+      f"${spec.prefix}part-$split%05d-$jobId${bucket.getOrElse("")}${spec.suffix}"
+    taskFiles = rel :: taskFiles
+    new org.apache.hadoop.fs.Path(dir, rel).toString
+  }
+  override def newTaskTempFileAbsPath(ctx: TaskAttemptContext, absoluteDir: String,
+      spec: FileNameSpec): String =
+    throw new UnsupportedOperationException("in-place writes have no custom partition locations")
+  override def commitTask(ctx: TaskAttemptContext): TaskCommitMessage =
+    new TaskCommitMessage(taskFiles.reverse)
+  override def abortTask(ctx: TaskAttemptContext): Unit =
+    deleteAll(taskFiles, ctx.getConfiguration)
 }

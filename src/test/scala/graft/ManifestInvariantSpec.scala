@@ -12,9 +12,11 @@ import graft.store.TableStore
 
 /** The newest committed manifest is the table: reads, keyed mutations
   * and commits take the file set from it and never list data/. That is
-  * sound only while every commit path leaves the newest manifest's file
-  * set equal to what data/ holds — pinned here after each path, on a
-  * tiny flat and a tiny bucketed table. */
+  * sound only while every commit path leaves each file the newest
+  * manifest names in data/; files it no longer names stay for older
+  * snapshots until a vacuum, after which data/ holds exactly its set —
+  * pinned here after each path, on a tiny flat and a tiny bucketed
+  * table. */
 class ManifestInvariantSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
@@ -56,17 +58,21 @@ class ManifestInvariantSpec extends AnyFunSuite {
       clock = lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).cast("timestamp_ntz"))))
 
   Seq(0, 4).foreach { buckets =>
-    test(s"after every commit path the newest manifest equals data/ ($buckets buckets)") {
+    test(s"data/ holds the newest manifest, exactly after vacuum ($buckets buckets)") {
       val root = Files.createTempDirectory("graft_manifest_")
       val store = new TableStore(spark, root.toString)
       store.createTable("t", Seq("k" -> "bigint", "v" -> "bigint"), Seq("k"), buckets = buckets)
       steps(buckets).foreach { case (path, step) =>
         step(store)
         val (manifest, walked) = fileSets(root, store)
-        assert(manifest == walked, s"after $path: manifest and data/ diverge")
+        assert(manifest.subsetOf(walked), s"after $path: manifest names files data/ lacks")
+        if (path == "vacuum") assert(manifest == walked, s"after $path: manifest and data/ diverge")
         // and a scan of that file set runs, agreeing with the stats count
         assert(store.readTable("t").count() == store.countRows("t"), s"after $path")
       }
+      store.vacuum("t", keepLast = 1)
+      val (manifest, walked) = fileSets(root, store)
+      assert(manifest == walked, "after the final vacuum: manifest and data/ diverge")
     }
   }
 }

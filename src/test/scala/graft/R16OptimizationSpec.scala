@@ -96,9 +96,17 @@ class R16OptimizationSpec extends AnyFunSuite {
       p.getName.replaceAll("_\\d{5}", ""))
     assert(fs.rename(p, stripped), s"test rename failed: $p")
     assert(!org.apache.spark.sql.graftx.bridge.hasBucketId(stripped.getName))
-    // the newest manifest is the table: commit the renamed file set the
+    // the newest manifest is the table: point it at the renamed file the
     // way a pre-convention writer's manifest would have named it
-    store.repair("t")
+    val rel = s"${p.getParent.getName}/${p.getName}"
+    val manifest = new org.apache.hadoop.fs.Path(p.getParent.getParent.getParent,
+      f"history/m${store.snapshots("t").last._1}%06d.json")
+    val in = fs.open(manifest)
+    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(json.contains(rel))
+    val out = fs.create(manifest, true)
+    try out.write(json.replace(rel, s"${p.getParent.getName}/${stripped.getName}").getBytes("UTF-8"))
+    finally out.close()
     val plans = capturePlans {
       store.upsert("t", Seq((0L, 77L), (51L, 88L)).toDF("k", "v"))
     }

@@ -135,6 +135,7 @@ class TableStoreSpec extends AnyFunSuite {
     val filesBefore = dataFiles()
     assert(filesBefore > 4, s"expected many small files, got $filesBefore")
     store.compact("t")
+    store.vacuum("t", keepLast = 1) // the replaced files stay for snapshots until then
     assert(dataFiles() <= 4, s"compact left ${dataFiles()} files for 4 buckets")
     assert(store.readTable("t", orderBy = Seq("k")).collect().toSeq == beforeRows)
   }
@@ -832,12 +833,16 @@ class TableStoreSpec extends AnyFunSuite {
     val store = new TableStore(spark, root)
     store.createTable("t", Seq("k" -> "int", "v" -> "int"), Seq("k"))
     store.insert("t", Seq((1, 10), (2, 20)).toDF("k", "v")) // gen 1
-    // simulate a crash AFTER retirement but BEFORE the manifest commit:
-    // an orphaned history/g000002 tree with no m000002.json
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "t/history/g000002"))
-    store.update("t", Seq((1, 11)).toDF("k", "v")) // must mint gen 3, not 2
-    assert(store.snapshots("t").map(_._1) == Seq(1, 3))
+    // simulate a crash BEFORE the manifest commit: the writer's file in
+    // data/, named by no manifest, and a stale m000002.json.tmp
+    val orphan = Files.createTempDirectory("graft_orphan_").toString
+    Seq((1, 99)).toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(orphan)
+    val part = new java.io.File(orphan).listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, java.nio.file.Paths.get(root, "t", "data", part.getName))
+    Files.write(java.nio.file.Paths.get(root, "t", "history", "m000002.json.tmp"),
+      "{\"torn".getBytes("UTF-8"))
+    store.update("t", Seq((1, 11)).toDF("k", "v")) // nothing claims gen 2: it is minted
+    assert(store.snapshots("t").map(_._1) == Seq(1, 2))
     assert(store.readTableAt("t", 1).orderBy("k").as[(Int, Int)].collect().toSeq ==
       Seq((1, 10), (2, 20)))
     assert(store.readTable("t", orderBy = Seq("k")).as[(Int, Int)].collect().toSeq ==
@@ -949,7 +954,7 @@ class TableStoreSpec extends AnyFunSuite {
       .select("c").as[String].collect().toSeq == Seq("100"))
   }
 
-  test("repair folds a crashed append's orphan files back into snapshot history") {
+  test("repair deletes a crashed append's orphan files, never folds them in") {
     val root = Files.createTempDirectory("graft_repair_").toString
     val store = new TableStore(spark, root)
     store.createTable("t", Seq("k" -> "int"), Seq("k"))
@@ -971,7 +976,7 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.explainPruning("t", "k >= 0")("total_files") ==
       store.readTableAt("t", store.snapshots("t").last._1).inputFiles.length)
     // nor does a keyed write: an upsert commits only what it derived from
-    // the committed files (a flat rewrite retires the orphan with data/)
+    // the committed files (the orphan stays unnamed)
     store.createTable("u", Seq("k" -> "int"), Seq("k"))
     store.insert("u", Seq(1, 2).toDF("k"))
     val uOut = Files.createTempDirectory("graft_orphan_").toString
@@ -982,31 +987,12 @@ class TableStoreSpec extends AnyFunSuite {
       java.nio.file.Paths.get(root, "u", "data", uPart.getName))
     store.upsert("u", Seq(4).toDF("k"))
     assert(store.readTable("u", orderBy = Seq("k")).as[Int].collect().toSeq == Seq(1, 2, 4))
-    store.repair("t")
-    assert(store.readTableAt("t", store.snapshots("t").last._1).count() == 3)
-    // and later incremental appends keep carrying the recovered file
-    store.insert("t", Seq(4).toDF("k"))
-    assert(store.readTableAt("t", store.snapshots("t").last._1).count() == 4)
-  }
-
-  test("repair refuses a crashed mid-swap rewrite instead of committing the broken state") {
-    val root = Files.createTempDirectory("graft_midswap_").toString
-    val store = new TableStore(spark, root)
-    store.createTable("t", Seq("k" -> "int"), Seq("k"))
-    store.insert("t", Seq(1, 2).toDF("k"))
-    // simulate overwriteData crashing between the history retire and the
-    // tmp→data swap: data/ gone, replacement stranded in data.tmp
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(root, "t", "data"),
-      java.nio.file.Paths.get(root, "t", "data.tmp"))
-    val e = intercept[errors.InvalidValue](store.repair("t"))
-    assert(e.getMessage.contains("crashed mid-swap"))
-    // roll forward as the message instructs, then repair succeeds
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(root, "t", "data.tmp"),
-      java.nio.file.Paths.get(root, "t", "data"))
+    // repair rolls back: the uncommitted file is deleted, not committed
     store.repair("t")
     assert(store.readTableAt("t", store.snapshots("t").last._1).count() == 2)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "t", "data", part.getName)))
+    store.insert("t", Seq(4).toDF("k"))
+    assert(store.readTableAt("t", store.snapshots("t").last._1).count() == 3)
   }
 
   test("a mutation on a missing table leaves no stray directory behind") {
@@ -1155,29 +1141,23 @@ class TableStoreSpec extends AnyFunSuite {
     store.insert("t", Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
     store.update("t", Seq((1L, 11L)).toDF("k", "v"))
     store.update("t", Seq((2L, 21L)).toDF("k", "v"))
-    def treeBytes(root: java.io.File): Long =
-      if (!root.exists()) 0L
-      else if (root.isFile) root.length()
-      else root.listFiles().map(treeBytes).sum
+    def parquetBytes(): Map[String, Long] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(root, "t", "data")).iterator().asScala
+        .filter(_.toString.endsWith(".parquet"))
+        .map(p => p.toString -> java.nio.file.Files.size(p)).toMap
+    }
     val report = store.vacuumDryRun("t", keepLast = 1).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    assert(report.nonEmpty, "rewrites must have retired files to free")
+    assert(report.nonEmpty, "rewrites must have replaced files to free")
     assert(report.map(_._2).sum > 0 && report.map(_._3).sum > 0)
-    // the promised per-generation sizes match the real trees on disk
-    val rootDir = new java.io.File(root, "t/history")
-    val treesByGen = Option(rootDir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("g"))
-      .map(f => f.getName.stripPrefix("g").toInt -> f).toMap
-    report.foreach { case (g, _, bytes) =>
-      assert(treeBytes(treesByGen(g)) >= bytes, s"g$g promised more than exists")
-    }
-    val promised = report.map(_._3).sum
-    val before = treeBytes(rootDir)
+    val before = parquetBytes()
     store.vacuum("t", keepLast = 1)
-    val after = treeBytes(rootDir)
-    // vacuum freed at LEAST the promised data bytes (plus manifests)
-    assert(before - after >= promised,
-      s"vacuum freed ${before - after}, promised $promised")
+    val deleted = before -- parquetBytes().keys
+    // vacuum deleted exactly the promised files and bytes
+    assert(deleted.size == report.map(_._2).sum, s"deleted ${deleted.keys}, promised $report")
+    assert(deleted.values.sum == report.map(_._3).sum,
+      s"vacuum freed ${deleted.values.sum}, promised ${report.map(_._3).sum}")
     // and a fresh dry-run at the same retention has nothing left
     assert(store.vacuumDryRun("t", keepLast = 1).collect()
       .forall(r => r.getLong(1) == 0L))

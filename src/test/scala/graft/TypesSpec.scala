@@ -193,9 +193,9 @@ class TypesSpec extends AnyFunSuite {
     // predicate excludes file 1's instant range entirely
     store.analyze("t", Seq("k", "d"))
     val report = store.explainPruning("t", "d >= '2026-01-15 05:00:00'")
-    // 3 files: the flat create's empty seed + the two inserts; stats
-    // drop the seed (rows=0) and file 1 (instant range below the probe)
-    assert(report("total_files") == 3L, s"unexpected layout: $report")
+    // 2 files, one per insert; stats drop file 1 (instant range below
+    // the probe)
+    assert(report("total_files") == 2L, s"unexpected layout: $report")
     assert(report("after_stats_prune") == 1L,
       s"instant predicate did not prune by derived stats: $report")
     // wall-clock-identical probe in another offset: equality by instant
