@@ -391,9 +391,12 @@ final case class Graft(
     }
 
     /** (spec, base, groups, derive) as `define` recorded them. */
-    private def descriptor(name: String): (IncrementalAgg.Spec, String, Seq[String], Seq[(String, String)]) = {
-      val store = st(name)
-      val props = store.properties(pn(name))
+    private def descriptor(name: String): (IncrementalAgg.Spec, String, Seq[String], Seq[(String, String)]) =
+      descriptorIn(st(name), pn(name), name)
+
+    private def descriptorIn(store: graft.store.TableStore, summary: String,
+        name: String): (IncrementalAgg.Spec, String, Seq[String], Seq[(String, String)]) = {
+      val props = store.properties(summary)
       val kind = props.getOrElse(KindKey, throw new IllegalArgumentException(
         s"$name carries no summary descriptor — define() it first"))
       (IncrementalAgg.Spec(kind, props(ValuesKey).split(',').toSeq, props(KKey).toInt),
@@ -472,15 +475,29 @@ final case class Graft(
         "maintained_gen" -> applied.map(_.toString).getOrElse("none"),
         "base_gen" -> cur.toString,
         "fresh" -> applied.contains(cur).toString,
-        "auto_maintain" -> store.properties(pn(name)).contains(AutoKey).toString)
+        "auto_maintain" -> store.properties(pn(name)).contains(AutoKey).toString) ++
+        IncrementalAgg.FoldRecord.map(k => s"fold_$k" ->
+          IncrementalAgg.foldRecord(store, b, pn(name)).getOrElse(k, "none"))
     }
 
     /** Incremental REFRESH: fold everything committed to the base
-      * since the durable watermark — crash-safe, replay-idempotent. */
+      * since the durable watermark — crash-safe, replay-idempotent.
+      * Every other summary this session attached to the same base whose
+      * watermark equals this one's is refreshed along with it, from the
+      * same change feed (one feed per base, not per summary); a
+      * sibling's failure is audited and leaves that sibling stale, and
+      * only this summary's failure is thrown. */
     def maintain(name: String): Unit = {
       val store = st(name)
       val (spec, b, groups, derive) = descriptor(name)
-      IncrementalAgg.maintainSpec(store, b, pn(name), spec, groups, derive)
+      val siblings = graft.plans.SummaryRewrite.registeredOn(store, b)
+        .filterNot(_ == pn(name)).flatMap { s =>
+          scala.util.Try(descriptorIn(store, s, s)).toOption.collect {
+            case (sSpec, `b`, sGroups, sDerive) => IncrementalAgg.Target(s, sSpec, sGroups, sDerive)
+          }
+        }
+      IncrementalAgg.maintainGroup(store, b, IncrementalAgg.Target(pn(name), spec, groups, derive),
+        siblings, audit)
     }
 
     /** C46e: the MV ADVISOR — the inverse of [[explain]]: given an

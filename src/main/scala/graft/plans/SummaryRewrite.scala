@@ -377,6 +377,13 @@ object SummaryRewrite extends Rule[LogicalPlan] {
         spark.experimental.extraOptimizations :+ this
   }
 
+  /** The summaries of `base` in `store` registered with this rule (the
+    * registry `define` and `attach` fill) — the siblings a maintain of
+    * one of them refreshes from the same change feed. */
+  private[graft] def registeredOn(store: TableStore, base: String): Seq[String] =
+    Option(registry.get(normalize(store.dataLocation(base)))).getOrElse(Nil)
+      .filter(r => (r.store eq store) && r.base == base).map(_.summary).distinct
+
   /** Drop every registration of `base` (tests; decommissioning). */
   def unregister(store: TableStore, base: String): Unit = {
     val key = normalize(store.dataLocation(base))

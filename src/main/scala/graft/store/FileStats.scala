@@ -147,6 +147,113 @@ object FileStats {
     else p.getName
   }
 
+  // ── stats collected by the write job ────────────────────────────────────
+
+  /** The i-th stat entry a [[Tracker]] collects: its sidecar key and
+    * type domain, the Spark type of its value, the bound cast that
+    * renders a value the way `analyze`'s `min(v).cast("string")` does
+    * (reading ordinal i of a row as wide as the key list), and whether
+    * it carries a sketch. */
+  final case class TrackedKey(key: String, dom: String, dataType: DataType,
+      render: Expression, bloomable: Boolean)
+
+  private final case class TaskFiles(files: Seq[(String, FileStat)])
+    extends org.apache.spark.sql.execution.datasources.WriteTaskStats
+
+  /** Per-file stats collected INSIDE the write job — the stats a later
+    * `analyze` would compute, at no second scan (Delta's `add.stats`
+    * route; `BasicWriteJobStatsTracker` is the in-tree model). Spark's
+    * FileFormatWriter shows each task's tracker every file it opens and
+    * every row it writes. Per row, `chain` — projections bound one over
+    * the next, the first over the written data columns — evaluates the
+    * SAME expressions `analyze` aggregates: per key its value (ordinal
+    * 2i) and its raw-null flag (2i+1). Per file the tracker keeps the row
+    * count, each key's min and max under Spark's interpreted ordering
+    * (the one `min`/`max` use), its null count and, when `bloomBits` >
+    * 0, a [[graft.plans.BloomSketch]] of the rendered non-null values.
+    * An empty file records rows = 0 and no sketch, as `analyze` does.
+    * `files` (absolute path → stats) is set on the driver when the job
+    * commits. */
+  final class Tracker(chain: Seq[Seq[Expression]], keys: Seq[TrackedKey],
+      bloomBits: Int, bloomHashes: Int)
+      extends org.apache.spark.sql.execution.datasources.WriteJobStatsTracker {
+    @transient @volatile var files: Map[String, FileStat] = Map.empty
+
+    override def newTaskInstance(): org.apache.spark.sql.execution.datasources.WriteTaskStatsTracker =
+      new TaskTracker(chain, keys, bloomBits, bloomHashes)
+
+    override def processStats(
+        stats: Seq[org.apache.spark.sql.execution.datasources.WriteTaskStats],
+        jobCommitTime: Long): Unit =
+      files = stats.flatMap(_.asInstanceOf[TaskFiles].files).toMap
+  }
+
+  private final class TaskTracker(chain: Seq[Seq[Expression]], keys: Seq[TrackedKey],
+      bloomBits: Int, bloomHashes: Int)
+      extends org.apache.spark.sql.execution.datasources.WriteTaskStatsTracker {
+    import org.apache.spark.sql.catalyst.InternalRow
+
+    private final class Acc {
+      var rows = 0L
+      val min = new Array[Any](keys.size)
+      val max = new Array[Any](keys.size)
+      val nulls = new Array[Long](keys.size)
+      val bloom: Array[Array[Long]] = keys.map(k =>
+        if (bloomBits > 0 && k.bloomable) graft.plans.BloomSketch.emptyWords(bloomBits) else null).toArray
+    }
+
+    private val projections = chain.map { exprs =>
+      val p = UnsafeProjection.create(exprs)
+      p.initialize(Option(org.apache.spark.TaskContext.get()).map(_.partitionId()).getOrElse(0))
+      p
+    }
+    private val orderings = keys.map(k =>
+      org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(k.dataType)).toArray
+    private val slots = new GenericInternalRow(keys.size)
+    private val open = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
+
+    private def render(i: Int, v: Any): org.apache.spark.unsafe.types.UTF8String = {
+      slots.update(i, v)
+      keys(i).render.eval(slots).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+    }
+
+    override def newPartition(partitionValues: InternalRow): Unit = ()
+    override def newFile(filePath: String): Unit = open.getOrElseUpdate(filePath, new Acc)
+    override def closeFile(filePath: String): Unit = ()
+
+    override def newRow(filePath: String, row: InternalRow): Unit = {
+      val acc = open.getOrElseUpdate(filePath, new Acc)
+      acc.rows += 1
+      var out = row
+      projections.foreach(p => out = p(out))
+      var i = 0
+      while (i < keys.length) {
+        if (out.getBoolean(2 * i + 1)) acc.nulls(i) += 1
+        if (!out.isNullAt(2 * i)) {
+          val v = out.get(2 * i, keys(i).dataType)
+          if (acc.min(i) == null || orderings(i).lt(v, acc.min(i))) acc.min(i) = InternalRow.copyValue(v)
+          if (acc.max(i) == null || orderings(i).gt(v, acc.max(i))) acc.max(i) = InternalRow.copyValue(v)
+          if (acc.bloom(i) != null)
+            graft.plans.BloomSketch.add(acc.bloom(i), render(i, v), bloomHashes)
+        }
+        i += 1
+      }
+    }
+
+    override def getFinalStats(taskCommitTime: Long): org.apache.spark.sql.execution.datasources.WriteTaskStats =
+      TaskFiles(open.toSeq.map { case (path, acc) =>
+        path -> FileStat(acc.rows, keys.indices.map { i =>
+          val k = keys(i)
+          k.key -> ColStat(Option(acc.min(i)).map(render(i, _).toString),
+            Option(acc.max(i)).map(render(i, _).toString),
+            acc.nulls(i), Some(k.dom),
+            Option(acc.bloom(i)).filter(_ => acc.rows > 0).map(w =>
+              java.util.Base64.getEncoder.encodeToString(
+                graft.plans.BloomSketch.serialize(w, bloomHashes))))
+        }.toMap)
+      })
+  }
+
   // ── conservative predicate evaluation ───────────────────────────────────
 
   /** Could any row of a file with these stats satisfy `pred`? False only

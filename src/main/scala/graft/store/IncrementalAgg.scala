@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -142,28 +142,52 @@ object IncrementalAgg {
       .groupBy(spec.keys(groupCols).map(col): _*)
       .agg(count(lit(1)).as("n_rows"), spec.cells.map(m => m.agg.as(m.name)): _*)
 
+  /** One summary a maintain folds: its table, measure spec, group
+    * columns and derived group columns (C47). */
+  private[graft] final case class Target(summary: String, spec: Spec,
+      groupCols: Seq[String], derive: Seq[(String, String)])
+
+  /** A fold result — lazy: the commit that writes it runs it — and,
+    * on the rescan path, the observation that counts the groups its
+    * rescan re-derives from the base as that commit runs. */
+  private final case class Folded(rows: DataFrame, rescanned: Option[Observation])
+
+  /** The fold's one checkpoint: the change feed, with its row count
+    * from the SAME job that materializes the blocks (the lazy
+    * checkpoint's first pass is the count), so emptiness costs no job
+    * of its own, and every summary folding the range reads it without
+    * re-deriving the diff. Everything downstream of it stays lazy: each
+    * fold runs inside its commit's write job, where AQE's stages cover
+    * the fold's own exchanges. Local — not replicated, so losing an
+    * executor fails the fold; the one-commit intent protocol keeps that
+    * safe, because the next call refolds the same range. (A reliable
+    * checkpoint would write every feed to a checkpoint directory to
+    * survive a loss the protocol already survives, so the fold keeps
+    * `localCheckpoint`.) */
+  private def materialized(df: DataFrame): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(false)
+    (cp, cp.queryExecution.toRdd.count())
+  }
+
   /** The one fold: post-maintenance rows for every group the range
     * touched, zero-count groups flagged `__dead` — the source of ONE
     * [[TableStore.applyChanges]] commit. Invertible specs merge the
-    * feed's per-group deltas (add/subtract). The others take grown ∪
-    * rescan ∪ dead: insert-only groups merge their deltas; groups a
-    * delete touched re-derive from the base PINNED AT `toGen` (the live
-    * table would leak a concurrent writer's rows past the watermark and
-    * double-apply them next fold), semi-joined to exactly those groups;
-    * a touched group with no rows left dies. `fromGen` None (a vacuum
-    * removed the watermark's snapshot) is that rescan branch with every
-    * group touched.
-    *
-    * Checkpoints: the result (the emptiness probe, the keyed write's
-    * source-bucket collect and its write each read it) and, on the
-    * rescan path, the delta and the rescan (each feeds two branches;
-    * AQE's stage reuse does not span this DAG).
-    * They are local — not replicated, so losing an executor fails the
-    * fold; the one-commit intent protocol keeps that safe, because the
-    * next call refolds the same range. */
-  private def fold(store: TableStore, base: String, summary: String, spec: Spec,
-      groupCols: Seq[String], derive: Seq[(String, String)],
-      fromGen: Option[Int], toGen: Int): DataFrame = {
+    * feed's per-group deltas (add/subtract). The others take, per group
+    * the feed touches, one of grown | rescan | dead: insert-only groups
+    * merge their deltas; groups a delete touched re-derive from the
+    * base PINNED AT `toGen` (the live table would leak a concurrent
+    * writer's rows past the watermark and double-apply them next fold),
+    * semi-joined to exactly those groups (read off the feed, so the
+    * delta is aggregated once); a touched group with no rows left dies.
+    * `feed` is the change feed of the range (at least the columns
+    * [[feedColumns]] names); None (a vacuum removed the watermark's
+    * snapshot) is that rescan with every stored group touched and the
+    * whole pinned base as its scope. A non-empty feed always yields rows
+    * (one per group it touches), so its count says whether there is
+    * anything to commit. */
+  private def fold(store: TableStore, base: String, t: Target, feed: Option[DataFrame],
+      toGen: Int): Folded = {
+    val Target(summary, spec, groupCols, derive) = t
     val keys = spec.keys(groupCols)
     val cur = store.readTable(summary)
     val nRows = coalesce(cur("n_rows"), lit(0L)) + col("__dn")
@@ -179,9 +203,8 @@ object IncrementalAgg {
       d.join(cur, keys.map(c => d(c) <=> cur(c)).reduce(_ && _), "left")
         .select(keys.map(d(_)) :+ (nRows + negGuard).as("n_rows") :++
           spec.cells.map(m => m.merge(cur(m.name), col("__d_" + m.name)).as(m.name)): _*)
-    def delta(from: Int): DataFrame = {
-      val ch = spec.measured(derivedView(store.readChanges(base, from, toGen), derive),
-        groupCols, Seq("_change_type"))
+    def delta(feed: DataFrame): DataFrame = {
+      val ch = spec.measured(derivedView(feed, derive), groupCols, Seq("_change_type"))
       // the null-group guard rides the count delta (null on success →
       // +0) so column pruning cannot drop it
       val guard = coalesce(assert_true(
@@ -195,35 +218,82 @@ object IncrementalAgg {
             else Seq(sum(when(sign === -1L, 1L).otherwise(0L)).as("__dels"))): _*)
     }
     def pinned = derivedView(store.readTableAt(base, toGen), derive)
-    def withRescan(grown: Option[DataFrame], touched: DataFrame, scope: DataFrame): DataFrame = {
-      val rescan = summarize(spec, scope, groupCols).localCheckpoint(true)
-      val dead = touched.join(rescan.select(keys.map(col): _*), keys, "left_anti")
-        .select(keys.map(col) :+ lit(0L).as("n_rows") :++ spec.cells.map(m => m.dead.as(m.name)): _*)
-      grown.fold(rescan)(_.unionByName(rescan)).unionByName(dead)
+    // rescan rows are flagged so the commit can count them
+    val rescanFlag = "__rescanned"
+    val rows = feed match {
+      case Some(f) if spec.invertible => merged(delta(f))
+      case Some(f) =>
+        // keys == groupCols here (only quantile widens them, and it is
+        // invertible), and group values are non-null (delta's guard),
+        // so the rescan joins on plain equality — both sides arrive
+        // hash-partitioned by the keys, and the join adds no exchange
+        val d = delta(f)
+        val touched = derivedView(f, derive).filter(sign === -1L)
+          .select(groupCols.map(col): _*).distinct()
+        val rescan = summarize(spec, pinned.join(touched, groupCols, "left_semi"), groupCols)
+        val redo = col("__dels") > 0L
+        val found = rescan("n_rows").isNotNull
+        d.join(cur, keys.map(c => d(c) <=> cur(c)).reduce(_ && _), "left")
+          .join(rescan, keys.map(c => d(c) === rescan(c)).reduce(_ && _), "left")
+          .select(keys.map(d(_)) :+
+            when(redo, coalesce(rescan("n_rows"), lit(0L))).otherwise(nRows + negGuard).as("n_rows") :++
+            spec.cells.map(m => when(redo && found, rescan(m.name)).when(redo, m.dead)
+              .otherwise(m.merge(cur(m.name), col("__d_" + m.name))).as(m.name)) :+
+            (redo && found).as(rescanFlag): _*)
+      case None =>
+        val rescan = summarize(spec, pinned, groupCols)
+        val dead = cur.select(keys.map(col): _*).join(rescan.select(keys.map(col): _*), keys, "left_anti")
+          .select(keys.map(col) :+ lit(0L).as("n_rows") :++ spec.cells.map(m => m.dead.as(m.name)): _*)
+        rescan.withColumn(rescanFlag, lit(true)).unionByName(dead.withColumn(rescanFlag, lit(false)))
     }
-    val rows = fromGen match {
-      case Some(from) if spec.invertible => merged(delta(from))
-      case Some(from) =>
-        val d = delta(from).localCheckpoint(true)
-        val touched = d.filter(col("__dels") > 0L).select(keys.map(col): _*)
-        withRescan(Some(merged(d.filter(col("__dels") === 0L))), touched,
-          pinned.join(touched, groupCols, "left_semi"))
-      case None => withRescan(None, cur.select(keys.map(col): _*), pinned)
+    val out = rows.withColumn("__dead", col("n_rows") === 0L)
+    if (!out.columns.contains(rescanFlag)) Folded(out, None)
+    else {
+      val obs = Observation()
+      Folded(out.observe(obs, sum(col(rescanFlag).cast("long")).as("n")).drop(rescanFlag), Some(obs))
     }
-    rows.withColumn("__dead", col("n_rows") === 0L).localCheckpoint(true)
+  }
+
+  /** The base columns `t`'s fold reads from a change feed `feed`: its
+    * physical (not derived) group and value columns plus what its
+    * derivations read (all of `feed`'s columns when a derivation does
+    * not resolve over them alone, e.g. one reading another derived
+    * column). */
+  private def feedColumns(feed: DataFrame, t: Target): Seq[String] = {
+    val derived = t.derive.map(_._1).toSet
+    (t.groupCols ++ t.spec.values).filterNot(derived) ++ t.derive.flatMap { case (_, e) =>
+      scala.util.Try(feed.select(expr(e)).queryExecution.analyzed.references.toSeq.map(_.name))
+        .getOrElse(feed.columns.toSeq)
+    }
   }
 
   private def appliedKey(base: String) = s"graft.maint.$base.applied"
   private def pendingKey(base: String) = s"graft.maint.$base.pending"
   private def sgenKey(base: String) = s"graft.maint.$base.sgen"
+  private def foldKey(base: String, field: String) = s"graft.maint.$base.fold.$field"
+
+  /** The per-fold record [[maintainGroup]] stores with the watermark:
+    * change-feed rows folded, groups rescanned from the base, and the
+    * fold's wall time in ms (fold, commit and watermark). */
+  private[graft] val FoldRecord = Seq("feed_rows", "rescanned_groups", "ms")
 
   /** Record that `summary` currently reflects `base` at generation
     * `gen` — call once after bootstrapping the summary from
     * [[summarize]]. Seeds the durable watermark [[maintainToCurrent]]
-    * advances. */
-  def markMaintained(store: TableStore, base: String, summary: String, gen: Int): Unit =
-    store.setProperties(summary, Map(appliedKey(base) -> gen.toString),
+    * advances. `record` (the [[FoldRecord]] of the fold that got it
+    * there) rides the same properties swap. */
+  def markMaintained(store: TableStore, base: String, summary: String, gen: Int,
+      record: Map[String, Long] = Map.empty): Unit =
+    store.setProperties(summary, Map(appliedKey(base) -> gen.toString) ++
+      record.map { case (k, v) => foldKey(base, k) -> v.toString },
       remove = Seq(pendingKey(base), sgenKey(base)))
+
+  /** The last fold's [[FoldRecord]] of `summary` from `base` (empty
+    * before its first fold). */
+  private[graft] def foldRecord(store: TableStore, base: String, summary: String): Map[String, String] = {
+    val props = store.properties(summary)
+    FoldRecord.flatMap(k => props.get(foldKey(base, k)).map(k -> _)).toMap
+  }
 
   /** The base generation `summary` durably reflects (None before
     * [[markMaintained]] has seeded it). */
@@ -269,26 +339,80 @@ object IncrementalAgg {
   }
 
   /** The crash-safe driver behind every `maintain*ToCurrent` (protocol:
-    * [[maintainToCurrent]]); a range whose fold has no rows (e.g. a pure
-    * rewrite: compaction, Z-order) only advances the watermark. */
+    * [[maintainToCurrent]]) for one summary: [[maintainGroup]] with no
+    * siblings. */
   private[graft] def maintainSpec(store: TableStore, base: String, summary: String,
-      spec: Spec, groupCols: Seq[String], derive: Seq[(String, String)]): Unit = {
-    recover(store, base, summary)
-    val applied = store.properties(summary).get(appliedKey(base)).map(_.toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"no maintenance watermark for '$base' on '$summary' — seed it with " +
-          "markMaintained at the generation the summary was bootstrapped from"))
+      spec: Spec, groupCols: Seq[String], derive: Seq[(String, String)]): Unit =
+    maintainGroup(store, base, Target(summary, spec, groupCols, derive), Nil, _ => ())
+
+  /** Fold `named` and every sibling on the same base whose watermark
+    * equals `named`'s from ONE change feed (classic incremental view
+    * maintenance: one delta per base for all of its views). The range's
+    * feed is read once, projected to the union of the columns the folds
+    * read ([[feedColumns]]) and materialized; an empty one (a pure
+    * rewrite: compaction, Z-order) only advances the watermarks. Then
+    * every summary folds and commits concurrently, each on its own
+    * driver thread (`named` on the caller's), under its own table's lock
+    * and its own intent/watermark protocol (see [[maintainToCurrent]]),
+    * with its [[FoldRecord]] in the watermark swap. A sibling's failure
+    * is audited and leaves that sibling stale, as a failed post-commit
+    * hook does; only `named`'s failure is thrown. */
+  private[graft] def maintainGroup(store: TableStore, base: String, named: Target,
+      siblings: Seq[Target], audit: String => Unit): Unit = {
+    def watermark(summary: String): Option[Int] = {
+      recover(store, base, summary)
+      store.properties(summary).get(appliedKey(base)).map(_.toInt)
+    }
+    val applied = watermark(named.summary).getOrElse(throw new IllegalStateException(
+      s"no maintenance watermark for '$base' on '${named.summary}' — seed it with " +
+        "markMaintained at the generation the summary was bootstrapped from"))
     val gens = store.snapshots(base).map(_._1)
     val cur = gens.last
     if (cur <= applied) return
-    val rows = fold(store, base, summary, spec, groupCols, derive,
-      Some(applied).filter(gens.contains), cur)
-    if (!rows.isEmpty) {
-      store.setProperties(summary, Map(pendingKey(base) -> cur.toString,
-        sgenKey(base) -> store.snapshots(summary).last._1.toString))
-      store.applyChanges(summary, rows, "__dead", spec.keys(groupCols))
+    val group = named +: siblings.filter { t =>
+      try watermark(t.summary).contains(applied)
+      catch {
+        case e: Exception =>
+          audit(s"maintain of ${t.summary} skipped (summary stays stale): ${e.getMessage}")
+          false
+      }
     }
-    markMaintained(store, base, summary, cur)
+    val feed = Some(applied).filter(gens.contains).map { from =>
+      val all = store.readChanges(base, from, cur)
+      materialized(all.select(("_change_type" +: group.flatMap(feedColumns(all, _))).distinct
+        .map(c => col(graft.Identifiers.quote(c))): _*))
+    }
+    def one(t: Target): Unit = {
+      val t0 = System.nanoTime()
+      var rescanned = 0L
+      if (!feed.exists(_._2 == 0L)) {
+        val folded = fold(store, base, t, feed.map(_._1), cur)
+        store.setProperties(t.summary, Map(pendingKey(base) -> cur.toString,
+          sgenKey(base) -> store.snapshots(t.summary).last._1.toString))
+        store.applyChanges(t.summary, folded.rows, "__dead", t.spec.keys(t.groupCols))
+        // reported by the commit's write job; -1 if it never arrives
+        rescanned = folded.rescanned.fold(0L)(o =>
+          org.apache.spark.sql.graftx.bridge.observed(o, 60000L)
+            .fold(-1L)(r => if (r.isNullAt(0)) 0L else r.getLong(0)))
+      }
+      markMaintained(store, base, t.summary, cur, Map(
+        "feed_rows" -> feed.fold(0L)(_._2), "rescanned_groups" -> rescanned,
+        "ms" -> (System.nanoTime() - t0) / 1000000L))
+    }
+    val failures = new java.util.concurrent.ConcurrentHashMap[String, Throwable]()
+    val threads = group.tail.map { t =>
+      val th = new Thread(() =>
+        try one(t) catch { case e: Throwable => failures.put(t.summary, e); () },
+        s"graft-fold-${t.summary}")
+      th.start()
+      th
+    }
+    try one(named)
+    finally {
+      threads.foreach(_.join())
+      failures.forEach((s, e) => audit(
+        s"maintain of $s along with ${named.summary} failed (summary stays stale): ${e.getMessage}"))
+    }
   }
 
   // ── the public per-kind entry points (delegates over one Spec) ──────
@@ -313,9 +437,10 @@ object IncrementalAgg {
   def maintain(store: TableStore, base: String, summary: String,
       groupCols: Seq[String], valueCol: String, fromGen: Int, toGen: Int,
       derive: Seq[(String, String)] = Nil): Unit = {
-    val rows = fold(store, base, summary, Spec("sum", Seq(valueCol)), groupCols, derive,
-      Some(fromGen), toGen)
-    if (!rows.isEmpty) store.applyChanges(summary, rows, "__dead", groupCols)
+    val (feed, n) = materialized(store.readChanges(base, fromGen, toGen))
+    if (n > 0) store.applyChanges(summary,
+      fold(store, base, Target(summary, Spec("sum", Seq(valueCol)), groupCols, derive), Some(feed),
+        toGen).rows, "__dead", groupCols)
   }
 
   /** S36's crash-safe driver: fold everything committed to `base`

@@ -106,6 +106,36 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
 
   override def getFileStatus(f: Path): FileStatus = nioStatus(f)
 
+  /** Fork-free link status: the stock one runs `readlink` per call
+    * (`FileUtil.readLink`), and `FileContext.rename(…, OVERWRITE)` — the
+    * stats sidecar swap — asks for it on the source, the target and both
+    * `.crc` files. Same shape as the stock status: a symlink reports its
+    * target's length, times and permission (zeros when dangling), the
+    * unqualified path it was asked for, and its target qualified against
+    * this filesystem. */
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val file = pathToFile(f).toPath
+    val isLink =
+      try Files.readAttributes(file, classOf[PosixFileAttributes], LinkOption.NOFOLLOW_LINKS)
+        .isSymbolicLink
+      catch {
+        case _: NoSuchFileException => throw new FileNotFoundException(s"File $f does not exist")
+      }
+    if (!isLink) return nioStatus(f)
+    val target = new Path(Files.readSymbolicLink(file).toString)
+    val st =
+      try {
+        val t = nioStatus(f)
+        new FileStatus(t.getLen, false, t.getReplication, t.getBlockSize, t.getModificationTime,
+          t.getAccessTime, t.getPermission, t.getOwner, t.getGroup, target, f)
+      } catch {
+        case _: FileNotFoundException =>
+          new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "", target, f)
+      }
+    st.setSymlink(org.apache.hadoop.fs.FSLinkResolver.qualifySymlinkTarget(getUri, st.getPath, target))
+    st
+  }
+
   override def listStatus(f: Path): Array[FileStatus] = {
     val file = pathToFile(f)
     if (!file.exists()) throw new FileNotFoundException(s"File $f does not exist")

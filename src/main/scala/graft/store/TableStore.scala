@@ -57,6 +57,10 @@ object TableStore {
       })
   }
 
+  /** See [[TableStore.statKeys]]. */
+  private[store] final case class StatKey(key: String, value: Column, raw: Column,
+      dom: String, bloomable: Boolean)
+
   /** One committed generation: the schema/PK/layout its files are read
     * under, and its file set as data-dir-relative keys. `current` = read
     * as the live table (no `asOf`), the only reading a plan rule may
@@ -85,6 +89,21 @@ object TableStore {
   val defaultAudit: String => Unit = {
     val log = java.util.logging.Logger.getLogger("graft.store")
     msg => log.info(msg)
+  }
+
+  /** The distinct values of `ids`' one int column, each in [0, n): ONE
+    * job with no exchange — every partition folds its ids into an
+    * n-bit set and the driver ORs them — where `distinct().collect()`
+    * costs AQE two jobs and a shuffle. Driver state is O(n), never
+    * O(rows). Ascending. */
+  private[store] def bucketIds(ids: DataFrame, n: Int): Seq[Int] = {
+    val words = (n + 63) / 64
+    val sets = ids.queryExecution.toRdd.mapPartitions { rows =>
+      val w = new Array[Long](words)
+      rows.foreach { r => val b = r.getInt(0); w(b >> 6) |= 1L << (b & 63) }
+      Iterator.single(w)
+    }.collect()
+    (0 until n).filter(b => sets.exists(w => (w(b >> 6) & (1L << (b & 63))) != 0L))
   }
 
   def assignDenseIds(df: DataFrame, startFrom: Long): DataFrame = {
@@ -126,7 +145,7 @@ final class TableStore(
     root: String,
     audit: String => Unit = TableStore.defaultAudit,
     clock: () => Long = () => System.currentTimeMillis()) {
-  import TableStore.{Generation, Meta}
+  import TableStore.{Generation, Meta, StatKey}
 
   /** The store's root directory (bench bootstrap cloning needs the
     * table dir location; see CoreQueries.bootstrapBase). */
@@ -361,11 +380,30 @@ final class TableStore(
     o
   }
 
+  private def metaTmpPath(name: String) = new Path(tablePath(name), "meta.json.tmp")
+
+  /** tmp-write + swap, like [[setProperties]]: a crash mid-write leaves
+    * a torn tmp behind the committed meta.json, never a torn meta.json;
+    * in the delete→rename window the complete tmp IS the committed meta
+    * (see [[metaFile]]). */
   private def writeMeta(name: String, meta: Meta): Unit = {
-    val out = fs.create(metaPath(name), true)
+    val tmp = metaTmpPath(name)
+    // heal a previous delete→rename crash window BEFORE truncating the
+    // tmp (which is the committed meta in that window)
+    if (!fs.exists(metaPath(name)) && fs.exists(tmp)) fs.rename(tmp, metaPath(name))
+    val out = fs.create(tmp, true)
     out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(metaNode(meta)))
     out.close()
+    fs.delete(metaPath(name), false)
+    if (!fs.rename(tmp, metaPath(name)))
+      throw new IllegalStateException(s"meta swap failed for table $name")
   }
+
+  /** The committed meta file: meta.json, or in the delete→rename window
+    * of [[writeMeta]] its complete tmp (only ever deleted-into-place
+    * after a successful close). None: no table. */
+  private def metaFile(name: String): Option[Path] =
+    Seq(metaPath(name), metaTmpPath(name)).find(fs.exists)
 
   private def parseMeta(node: JsonNode): Meta = {
     val cols = (0 until node.get("columns").size()).map { i =>
@@ -388,13 +426,12 @@ final class TableStore(
   }
 
   def meta(name: String): Meta = {
-    if (!exists(name)) throw errors.TableDoesNotExist(name)
-    val in = fs.open(metaPath(name))
+    val in = fs.open(metaFile(name).getOrElse(throw errors.TableDoesNotExist(name)))
     val node: JsonNode = try mapper.readTree(in) finally in.close()
     parseMeta(node)
   }
 
-  def exists(name: String): Boolean = fs.exists(metaPath(name))
+  def exists(name: String): Boolean = metaFile(name).isDefined
 
   private def propsPath(name: String) = new Path(tablePath(name), "props.json")
 
@@ -862,7 +899,111 @@ final class TableStore(
     * (≈10 bits/value for ~1% false positives at the default 6 hashes). */
   def analyze(name: String, columns: Seq[String] = Seq.empty,
       incremental: Boolean = false, bloomBits: Int = 0,
-      bloomHashes: Int = 6): Unit = withCommitLock(name) {
+      bloomHashes: Int = 6): Unit =
+    analyzeWith(name, columns, incremental, bloomBits, bloomHashes, Map.empty)
+
+  /** A stat entry to collect per file: each requested column under its
+    * aligned domain, PLUS a derived `<c>#instant` bigint entry for
+    * datetimeoffset columns — the zone map an instant-range predicate
+    * prunes with (the column's own min/max order by WALL CLOCK, a
+    * different order whenever offsets vary, so they cannot serve an
+    * instant comparison). The derived entry carries its OWN bloom:
+    * parseWhere rewrites every dto comparison (including =) to
+    * DtoInstant(col) form, so an equality probe resolves to the
+    * `#instant` entry — a sketch on the string column would never be
+    * consulted. The bigint's cast-to-string render is reproduced
+    * bit-exactly probe-side by FileStats.renderLit's LongType arm.
+    * `value` is what min/max and the sketch see, `raw` what the null
+    * count counts — over the ALIGNED columns. [[analyze]] aggregates
+    * these columns and the write job's [[FileStats.Tracker]] evaluates
+    * them, so the two cannot drift. */
+  private def statKeys(m: Meta, cols: Seq[String]): Seq[StatKey] = {
+    val dtos = dtoColsOf(m)
+    cols.flatMap { c =>
+      val t = m.columns.find(_._1 == c).get._2.spark
+      // zoned timestamps persist as EPOCH MICROS: a rendered local
+      // string would need the analyze-time session zone to read
+      // back (and is ambiguous in the repeated DST hour) — micros
+      // are zone-free and exact
+      val q0 = col(Identifiers.quote(c))
+      val q = if (t == TimestampType) unix_micros(q0) else q0
+      val base = StatKey(c, q, q0, t.catalogString, bloomable = true)
+      if (dtos.contains(c))
+        Seq(base, StatKey(c + "#instant", SqlType.dtoInstantMicros(q0),
+          SqlType.dtoInstantMicros(q0), "bigint", bloomable = true))
+      else Seq(base)
+    }
+  }
+
+  /** Would an incremental analyze for `keys` keep entry `st` as it is?
+    * Same key set, every entry computed in its current type domain (a
+    * re-scan replaces entries of another domain, or legacy ones without
+    * a domain tag — they can't prune), and a sketch at the requested
+    * width when `bloomBits` > 0 (bloomBits = 0 keeps existing sketches:
+    * immutable files — a sketch once true stays true). rows = 0 entries
+    * need no sketch: an empty file prunes by its row count and would
+    * re-scan forever (a scan yields it no sketch). */
+  private def covers(st: FileStats.FileStat, keys: Seq[StatKey], bloomBits: Int): Boolean = {
+    val domOf = keys.map(k => k.key -> k.dom).toMap
+    val bloomable = keys.filter(_.bloomable).map(_.key).toSet
+    st.cols.keySet == domOf.keySet &&
+      st.cols.forall { case (c, cs) => cs.dom.contains(domOf(c)) } &&
+      (bloomBits == 0 || st.rows == 0 || st.cols.forall { case (k, cs) =>
+        !bloomable(k) || cs.bloom.exists(b => graft.plans.BloomSketch.bitsOf(b) == bloomBits)
+      })
+  }
+
+  /** The write job's stats collector for files of `written` columns
+    * (the rows FileFormatWriter hands its trackers: the written frame's
+    * data columns) of a table with meta `m`: [[statKeys]] over
+    * [[alignTo]] of those columns, resolved once on the driver against
+    * an empty frame and bound for per-row evaluation (see
+    * [[FileStats.Tracker]]). */
+  private def statsTracker(m: Meta, written: StructType, cols: Seq[String],
+      bloomBits: Int, bloomHashes: Int): FileStats.Tracker = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    def emptyOf(schema: StructType) =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(schema.fields.map(_.copy(nullable = true))))
+    /** A chain of Projects over one leaf → each list bound over the
+      * previous output, innermost first. */
+    def bound(df: DataFrame): Seq[Seq[Expression]] = {
+      val plan = org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(df.queryExecution.analyzed)
+      def lists(p: LogicalPlan): List[Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]] =
+        p match {
+          case Project(l, child) => lists(child) :+ l
+          case leaf if leaf.children.isEmpty => Nil
+          case other => throw new IllegalStateException(s"unexpected stats probe node: ${other.nodeName}")
+        }
+      var in: Seq[Attribute] = plan.collectLeaves().head.output
+      lists(plan).map { l =>
+        val b = BindReferences.bindReferences(l.map(e => e: Expression), in)
+        in = l.map(_.toAttribute)
+        b
+      }
+    }
+    val keys = statKeys(m, cols)
+    val probe = alignTo(emptyOf(written), m).select(keys.zipWithIndex.flatMap { case (k, i) =>
+      Seq(k.value.as(s"v$i"), k.raw.isNull.as(s"n$i")) }: _*)
+    val valueTypes = keys.indices.map(i => probe.schema(s"v$i").dataType)
+    val renders = bound(emptyOf(StructType(valueTypes.zipWithIndex.map { case (t, i) =>
+      StructField(s"v$i", t) })).select(keys.indices.map(i => col(s"v$i").cast("string")): _*)).last
+    new FileStats.Tracker(bound(probe), keys.indices.map { i =>
+      FileStats.TrackedKey(keys(i).key, keys(i).dom, valueTypes(i), renders(i), keys(i).bloomable)
+    }, bloomBits, bloomHashes)
+  }
+
+  /** [[analyze]], given `fresh` entries the committing write job just
+    * collected for files it wrote. When those and the sidecar already
+    * cover every file of the current generation (see [[covers]]) and
+    * the pass is incremental, they are merged in with ONE swap and no
+    * Spark job — the steady state of an auto-analyzed table. Otherwise
+    * the files still lacking a covering entry are scanned (DDL domain
+    * changes, files written before stats rode the write). */
+  private def analyzeWith(name: String, columns: Seq[String], incremental: Boolean,
+      bloomBits: Int, bloomHashes: Int,
+      fresh: Map[String, FileStats.FileStat]): Unit = withCommitLock(name) {
     // under the lock: analyze read-modify-writes stats.json, and an
     // unlocked run could resurrect entries a concurrent dropColumn
     // scrubbed (or clobber a vacuum's trim)
@@ -877,7 +1018,15 @@ final class TableStore(
     // basenames collide across __bucket=N dirs, see FileStats.fileKey
     val present = g.rels
     val presentKeys = present.toSet
-    val existing = FileStats.read(fs, statsPath(name)).getOrElse(Map.empty)
+    val existing = FileStats.read(fs, statsPath(name)).getOrElse(Map.empty) ++ fresh
+    val keys = statKeys(m, cols0)
+    if (incremental && fresh.nonEmpty &&
+        present.forall(r => existing.get(r).exists(covers(_, keys, bloomBits)))) {
+      // entries of files that left the file set stay until a vacuum or
+      // a full analyze trims them (they keep pruning snapshot reads)
+      FileStats.write(fs, statsPath(name), existing)
+      return
+    }
     // entries for files a retained SNAPSHOT still references outlive the
     // files' removal from the current file set (rel paths are never
     // reused and files are immutable, so an entry stays true forever) —
@@ -899,60 +1048,15 @@ final class TableStore(
       else FileStats.write(fs, statsPath(name), forSnapshots)
       return
     }
-    // stat entries to collect per file: each requested column under its
-    // aligned domain, PLUS a derived `<c>#instant` bigint entry for
-    // datetimeoffset columns — the zone map an instant-range predicate
-    // prunes with (the column's own min/max order by WALL CLOCK, a
-    // different order whenever offsets vary, so they cannot serve an
-    // instant comparison). The derived entry carries its OWN bloom:
-    // parseWhere rewrites every dto comparison (including =) to
-    // DtoInstant(col) form, so an equality probe resolves to the
-    // `#instant` entry — a sketch on the string column would never be
-    // consulted. The bigint's cast-to-string render is reproduced
-    // bit-exactly probe-side by FileStats.renderLit's LongType arm.
-    final case class StatKey(key: String, value: Column, raw: Column,
-        dom: String, bloomable: Boolean)
-    val dtos = dtoColsOf(m)
-    val statKeys: Seq[StatKey] = cols0.flatMap { c =>
-      val isTz = m.columns.find(_._1 == c).get._2.spark == TimestampType
-      // zoned timestamps persist as EPOCH MICROS: a rendered local
-      // string would need the analyze-time session zone to read
-      // back (and is ambiguous in the repeated DST hour) — micros
-      // are zone-free and exact
-      val q0 = col(Identifiers.quote(c))
-      val q = if (isTz) unix_micros(q0) else q0
-      val base = StatKey(c, q, q0, m.columns.find(_._1 == c).get._2.spark.catalogString,
-        bloomable = true)
-      if (dtos.contains(c))
-        Seq(base, StatKey(c + "#instant", SqlType.dtoInstantMicros(q0),
-          SqlType.dtoInstantMicros(q0), "bigint", bloomable = true))
-      else Seq(base)
-    }
-    val domOf: Map[String, String] = statKeys.map(s => s.key -> s.dom).toMap
-    val bloomable: Set[String] = statKeys.filter(_.bloomable).map(_.key).toSet
     val kept: Map[String, FileStats.FileStat] =
       if (!incremental) Map.empty
-      else existing.filter { case (f, st) =>
-        presentKeys.contains(f) && st.cols.keySet == statKeys.map(_.key).toSet &&
-          // re-scan entries computed under another type domain (or
-          // legacy ones without a domain tag) — they can't prune
-          st.cols.forall { case (c, cs) => cs.dom.contains(domOf(c)) } &&
-          // a bloom-requesting analyze re-scans entries missing a sketch
-          // at the requested width; bloomBits=0 keeps existing sketches
-          // (immutable files — a sketch once true stays true). rows=0
-          // entries are exempt: an empty file prunes by its row count
-          // and would re-scan forever (a scan yields it no sketch)
-          (bloomBits == 0 || st.rows == 0 || st.cols.forall { case (k, cs) =>
-            !bloomable(k) ||
-              cs.bloom.exists(b => graft.plans.BloomSketch.bitsOf(b) == bloomBits)
-          })
-      }
+      else existing.filter { case (f, st) => presentKeys.contains(f) && covers(st, keys, bloomBits) }
     val toScan = present.filterNot(kept.contains)
     val scanned: Map[String, FileStats.FileStat] =
       if (toScan.isEmpty) Map.empty
       else {
         val aligned = alignTo(scan(name, g, toScan), m, extra = Seq(input_file_name().as("__file")))
-        val aggs = statKeys.flatMap { sk =>
+        val aggs = keys.flatMap { sk =>
           Seq(min(sk.value).cast("string").as(s"__min_${sk.key}"),
             max(sk.value).cast("string").as(s"__max_${sk.key}"),
             sum(when(sk.raw.isNull, 1L).otherwise(0L)).as(s"__nulls_${sk.key}")) ++
@@ -970,7 +1074,7 @@ final class TableStore(
           .collect()
         rows.map { r =>
           val key = FileStats.fileKey(dataDir, r.getAs[String]("__file"))
-          val cs = statKeys.map { sk =>
+          val cs = keys.map { sk =>
             val c = sk.key
             val fresh =
               if (bloomBits == 0 || !sk.bloomable) None
@@ -995,7 +1099,7 @@ final class TableStore(
       }
     // scanned files the aggregation never saw are EMPTY (e.g. an empty
     // insert batch's file) — record rows=0 so pruning can drop them too
-    val empty = statKeys.map(sk =>
+    val empty = keys.map(sk =>
       sk.key -> FileStats.ColStat(None, None, 0L, Some(sk.dom))).toMap
     val empties = toScan.map(_ -> FileStats.FileStat(0L, empty)).toMap
     FileStats.write(fs, statsPath(name), forSnapshots ++ empties ++ kept ++ scanned)
@@ -1200,7 +1304,8 @@ final class TableStore(
     * no commit lists data/. Deriving is sound because the commit lock
     * serializes writers: the previous manifest IS the current file set. */
   private def commitSnapshot(name: String, gen: Int, files: Seq[String],
-      written: Seq[String] = Nil): Unit = {
+      written: Seq[String] = Nil,
+      stats: Map[String, FileStats.FileStat] = Map.empty): Unit = {
     try {
       val o = mapper.createObjectNode()
       o.put("gen", gen)
@@ -1222,7 +1327,7 @@ final class TableStore(
         throw e
     }
     commitEpoch.incrementAndGet()
-    maybeAutoAnalyze(name)
+    maybeAutoAnalyze(name, stats)
     firePostCommitHooks(name)
   }
 
@@ -1315,25 +1420,32 @@ final class TableStore(
     audit(s"auto-analyze OFF for $name")
   }
 
-  /** The post-commit half of C45: incremental stats refresh when the
-    * table opted in. Columns dropped since opt-in are skipped (a DDL
-    * commit must not throw here); a stats failure is audited, never
-    * allowed to poison the data commit that already landed. */
-  private def maybeAutoAnalyze(name: String): Unit = {
-    val props = try properties(name) catch { case _: Exception => return }
-    props.get(AutoAnalyzeCols).foreach { csv =>
-      try {
-        val existing = meta(name).columns.map(_._1).toSet
-        val cols = csv.split(",").map(_.trim).filter(c => c.nonEmpty && existing(c)).toSeq
-        if (cols.nonEmpty)
-          analyze(name, cols, incremental = true,
-            bloomBits = props.get(AutoAnalyzeBloom).map(_.toInt).getOrElse(0))
-      } catch {
-        case e: Exception =>
-          audit(s"auto-analyze of $name failed (commit unaffected): ${e.getMessage}")
-      }
-    }
+  private val DefaultBloomHashes = 6
+
+  /** The C45 opt-in of `name` under meta `m`: (columns still in `m`,
+    * bloomBits); None when off, or when every opted column was dropped. */
+  private def autoAnalyzeCols(name: String, m: Meta): Option[(Seq[String], Int)] = {
+    val props = try properties(name) catch { case _: Exception => return None }
+    props.get(AutoAnalyzeCols).map { csv =>
+      val existing = m.columns.map(_._1).toSet
+      (csv.split(",").map(_.trim).filter(c => c.nonEmpty && existing(c)).toSeq,
+        props.get(AutoAnalyzeBloom).map(_.toInt).getOrElse(0))
+    }.filter(_._1.nonEmpty)
   }
+
+  /** The post-commit half of C45: incremental stats refresh when the
+    * table opted in. `fresh` are the entries the commit's write job
+    * collected; when they complete the sidecar, the refresh is one swap
+    * and no job. Columns dropped since opt-in are skipped (a DDL commit
+    * must not throw here); a stats failure is audited, never allowed to
+    * poison the data commit that already landed. */
+  private def maybeAutoAnalyze(name: String, fresh: Map[String, FileStats.FileStat]): Unit =
+    try autoAnalyzeCols(name, meta(name)).foreach { case (cols, bloomBits) =>
+      analyzeWith(name, cols, incremental = true, bloomBits, DefaultBloomHashes, fresh)
+    } catch {
+      case e: Exception =>
+        audit(s"auto-analyze of $name failed (commit unaffected): ${e.getMessage}")
+    }
 
   /** The table as of `asOf` (its manifest's meta), or CURRENT: the
     * newest manifest's file set under the live meta. A table never
@@ -1382,8 +1494,10 @@ final class TableStore(
     * unanalyzed tail, analyze's rescan, any `asOf` or change-feed
     * side, even of the newest generation) is rooted at its files, so
     * no rule mistakes it for the table. `bucketed` advertises the
-    * PK-hash layout as HashPartitioning (whole current scans only; the
-    * caller guarantees every file name embeds its bucket id). */
+    * PK-hash layout of `g` as HashPartitioning (the keyed mutation's
+    * table side and both sides of a bucket-local change feed; the
+    * caller guarantees every file name embeds its bucket id, which is
+    * what groups the files into buckets whatever the scan's root). */
   private def scan(name: String, g: Generation, rels: Seq[String],
       bucketed: Boolean = false): DataFrame = {
     if (rels.isEmpty)
@@ -1525,24 +1639,60 @@ final class TableStore(
     val (mFrom, mTo) = (from.meta, to.meta)
     val toSet = to.rels.toSet
     val fromSet = from.rels.toSet
-    val pre = alignTo(
-      alignTo(scan(name, from, from.rels.filterNot(toSet.contains)), mFrom), mTo)
-    val post = alignTo(scan(name, to, to.rels.filterNot(fromSet.contains)), mTo)
+    val (preRels, postRels) = (from.rels.filterNot(toSet.contains), to.rels.filterNot(fromSet.contains))
     val cols = mTo.columns.map(_._1)
     val ct = "_change_type"
     def packed(df: DataFrame, as: String): DataFrame =
       df.select(struct(cols.map(c => col(Identifiers.quote(c))): _*).as(as))
     val keyed = mTo.primaryKey.nonEmpty && mFrom.primaryKey == mTo.primaryKey &&
       mTo.primaryKey.forall(k => cols.contains(k))
+    // bucket-local diff: both generations hash-bucketed by the same key
+    // into the same count, every file named with its bucket id — both
+    // scans then claim HashPartitioning(pk, buckets) (see [[scan]]), and
+    // a join on the key columns themselves needs no exchange
+    val local = keyed && mTo.buckets > 0 && mFrom.buckets == mTo.buckets &&
+      (preRels ++ postRels).forall(r =>
+        org.apache.spark.sql.graftx.bridge.hasBucketId(new Path(r).getName))
+    val pre = alignTo(alignTo(scan(name, from, preRels, bucketed = local), mFrom), mTo)
+    val post = alignTo(scan(name, to, postRels, bucketed = local), mTo)
     if (keyed) {
       val pk = mTo.primaryKey
       val valCols = cols.filterNot(pk.contains)
-      // full outer on null-safe PK equality; struct packing sidesteps
-      // name collisions and gives a free presence indicator (an outer
-      // join's missing side is a NULL struct; a present row never is)
-      val joined = packed(pre, "__cdf_pre").join(packed(post, "__cdf_post"),
-        pk.map(k => col("__cdf_pre")(k) <=> col("__cdf_post")(k)).reduce(_ && _),
-        "full_outer")
+      // struct packing sidesteps name collisions and gives a free
+      // presence indicator (an outer join's missing side is a NULL
+      // struct; a present row never is); the key columns ride along
+      // unpacked, so the scans' partitioning survives to the join
+      def side(df: DataFrame, tag: String): DataFrame =
+        df.select(pk.indices.map(i => col(Identifiers.quote(pk(i))).as(s"${tag}_k$i")) :+
+          struct(cols.map(c => col(Identifiers.quote(c))): _*).as(tag): _*)
+      val (preS, postS) = (side(pre, "__cdf_pre"), side(post, "__cdf_post"))
+      def keyMatch(eq: (Column, Column) => Column): Column =
+        pk.indices.map(i => eq(col(s"__cdf_pre_k$i"), col(s"__cdf_post_k$i"))).reduce(_ && _)
+      def keySet(tag: String): Column =
+        pk.indices.map(i => col(s"${tag}_k$i").isNotNull).reduce(_ && _)
+      // full outer on null-safe PK equality. Bucket-local, that is two
+      // branches: rows whose key is all set join on plain equality of
+      // the claimed key columns (a null-safe key would be planned on
+      // coalesced expressions and lose the partitioning), and the few
+      // rows with a NULL key column match null-safely in a condition
+      // written `coalesce(a = b, a IS NULL AND b IS NULL)`, which the
+      // planner cannot take apart into join keys (it does rewrite
+      // `a = b OR (a IS NULL AND b IS NULL)` into `a <=> b`) — a
+      // broadcast nested-loop join, no shuffle. When the stats sidecar
+      // counts no NULL key in any file of either side, that branch is
+      // empty and left out (its broadcast is a job of its own).
+      val nullKeys = local && !FileStats.read(fs, statsPath(name)).exists(st =>
+        (preRels ++ postRels).forall(r =>
+          st.get(r).exists(f => pk.forall(k => f.cols.get(k).exists(_.nulls == 0)))))
+      val setKeys =
+        if (!local) preS.join(postS, keyMatch(_ <=> _), "full_outer")
+        else preS.filter(keySet("__cdf_pre"))
+          .join(postS.filter(keySet("__cdf_post")), keyMatch(_ === _), "full_outer")
+      val joined =
+        if (!nullKeys) setKeys
+        else setKeys.unionByName(preS.filter(!keySet("__cdf_pre"))
+          .join(postS.filter(!keySet("__cdf_post")),
+            keyMatch((a, b) => coalesce(a === b, a.isNull && b.isNull)), "full_outer"))
       val preP = col("__cdf_pre").isNotNull
       val postP = col("__cdf_post").isNotNull
       val changed = valCols
@@ -1732,10 +1882,16 @@ final class TableStore(
     * Nothing is staged or moved: until the manifest lands, no reader
     * sees the new files, and a failed commit deletes them. */
   private def writeAndCommit(name: String, m: Meta, df: DataFrame, keep: Seq[String]): Unit = {
+    // an auto-analyzed table's stats ride the write job (C45)
+    val tracker = autoAnalyzeCols(name, m).map { case (cols, bloomBits) =>
+      statsTracker(m, df.schema, cols, bloomBits, DefaultBloomHashes) }
+    val dir = dataPath(name)
     val written = org.apache.spark.sql.graftx.bridge.writeParquet(
       if (m.buckets > 0) df.withColumn(BucketCol, bucketExpr(m)) else df,
-      dataPath(name).toString, Some(BucketCol).filter(_ => m.buckets > 0))
-    commitSnapshot(name, nextGen(name), keep ++ written, written)
+      dir.toString, Some(BucketCol).filter(_ => m.buckets > 0), tracker.toSeq)
+    val fresh = tracker.fold(Map.empty[String, FileStats.FileStat])(_.files.map {
+      case (path, st) => FileStats.relativeKey(dir, new Path(path)) -> st })
+    commitSnapshot(name, nextGen(name), keep ++ written, written, fresh)
   }
 
   /** A fresh LISTING of data/ as relative keys — [[repair]]'s input.
@@ -2381,11 +2537,7 @@ final class TableStore(
       rewrite(name, algebra(readGen(name, g), source), mayAddTimeCols)
       return
     }
-    // source bucket ids: bounded by the bucket count, so the collect is
-    // O(buckets), never O(source)
-    val srcBuckets = source
-      .select(bucketExpr(m).as("b"))
-      .distinct().collect().map(_.getInt(0)).sorted
+    val srcBuckets = TableStore.bucketIds(source.select(bucketExpr(m)), m.buckets)
     // r16 (guide §3.4): the table side of the mutation join reads
     // through a scan that ADVERTISES the PK-hash bucket layout as
     // HashPartitioning(pk, buckets) — the full-outer join then

@@ -135,9 +135,20 @@ object bridge {
     * `FileFormatWriter.write` call Spark's `FileStreamSink.addBatch`
     * makes with its `ManifestFileCommitProtocol`; the session's
     * commit-protocol setting, which every user write goes through, is
-    * left alone. A failed job deletes what its tasks wrote. */
+    * left alone. A failed job deletes what its tasks wrote.
+    * `trackers` see every file and row the job writes (the store's
+    * per-file stats ride the write this way). */
+  /** The metrics `obs` observed, once the query that ran its frame has
+    * reported them (the session's listener bus delivers them just after
+    * the query ends), waiting at most `timeoutMs`; None if they have
+    * not arrived by then. */
+  def observed(obs: org.apache.spark.sql.Observation, timeoutMs: Long): Option[org.apache.spark.sql.Row] =
+    scala.util.Try(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS))).toOption
+
   def writeParquet(df: org.apache.spark.sql.DataFrame, dir: String,
-      bucketCol: Option[String]): Seq[String] = {
+      bucketCol: Option[String],
+      trackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker] = Nil): Seq[String] = {
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.datasources.FileFormatWriter
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
@@ -149,7 +160,7 @@ object bridge {
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(), committer,
         FileFormatWriter.OutputSpec(dir, Map.empty, output),
         ds.sparkSession.sessionState.newHadoopConf(),
-        output.filter(a => bucketCol.contains(a.name)), None, Nil, Map.empty)
+        output.filter(a => bucketCol.contains(a.name)), None, trackers, Map.empty)
     }
     committer.written
   }

@@ -14,13 +14,15 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.store.{NioLocalFileSystem, NioRawLocalFileSystem, TableStore}
+import graft.store.{IncrementalAgg, NioLocalFileSystem, NioRawLocalFileSystem, TableStore}
 
 /** `faultfile://`: the local filesystem with a simulated process kill.
-  * Armed with k, it counts the arming thread's rename, delete, mkdirs
-  * and create calls; the k-th such call and every later one, from any
-  * thread, throws, as if the process had died there. Its own scheme
-  * keeps it to the stores a test roots under it. */
+  * Armed with k, it counts the rename, delete, mkdirs and create calls
+  * of the arming thread and of the threads it starts while armed (a
+  * maintain's sibling folds; Spark's task threads are not among them);
+  * the k-th such call and every later one, from any thread, throws, as
+  * if the process had died there. Its own scheme keeps it to the stores
+  * a test roots under it. */
 class FaultFs extends NioLocalFileSystem(new FaultRawFs) {
   override def rename(src: Path, dst: Path): Boolean = { FaultFs.step(); super.rename(src, dst) }
   override def delete(f: Path, recursive: Boolean): Boolean = {
@@ -43,19 +45,25 @@ class FaultRawFs extends NioRawLocalFileSystem {
 
 object FaultFs {
   val Scheme = "faultfile"
-  @volatile private var armedBy: Thread = null
+  /** This arming's token; a thread counts when it carries it. */
+  @volatile private var token: AnyRef = null
+  private val carried = new InheritableThreadLocal[AnyRef]
   @volatile private var killAt = Long.MaxValue
   @volatile private var dead = false
   private val calls = new AtomicLong
 
   /** Kill the process at the arming thread's `k`-th counted call. */
-  def arm(k: Long): Unit = { calls.set(0); killAt = k; dead = false; armedBy = Thread.currentThread() }
+  def arm(k: Long): Unit = {
+    calls.set(0); killAt = k; dead = false
+    token = new Object
+    carried.set(token)
+  }
 
   /** Revive and disarm; the arming thread's counted calls. */
-  def disarm(): Long = { armedBy = null; dead = false; calls.get }
+  def disarm(): Long = { token = null; carried.remove(); dead = false; calls.get }
 
   private[graft] def step(): Unit = {
-    if (!dead && (Thread.currentThread() eq armedBy) && calls.incrementAndGet() >= killAt)
+    if (!dead && token != null && (carried.get eq token) && calls.incrementAndGet() >= killAt)
       dead = true
     if (dead) throw new IOException("process killed by fault injection")
   }
@@ -161,31 +169,105 @@ class CrashMatrixSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `op` on a copy of `tpl` to count its crash points (`onPost`
+    * sees the store it leaves), then kill it at each point in a fresh
+    * copy; the problems `check` finds in the crashed copies. */
+  private def crashEach(tpl: JPath, op: TableStore => Unit, onPost: TableStore => Unit = _ => ())(
+      check: JPath => Seq[String]): Seq[String] = {
+    val postDir = copyOf(tpl)
+    val postStore = storeAt(postDir)
+    FaultFs.arm(Long.MaxValue)
+    op(postStore)
+    val calls = FaultFs.disarm()
+    assert(calls > 0)
+    info(s"$calls crash points")
+    onPost(postStore)
+    deleteTree(postDir)
+    (1L to calls).flatMap { k =>
+      val dir = copyOf(tpl)
+      FaultFs.arm(k)
+      val crash = Try(op(storeAt(dir)))
+      FaultFs.disarm()
+      val problems = Try(check(dir)).fold(e => Seq(s"threw $e"), identity)
+      deleteTree(dir)
+      problems.map(p => s"k=$k/$calls (op ${if (crash.isSuccess) "finished" else "killed"}): $p")
+    }
+  }
+
   for (buckets <- Seq(0, 4); (path, op) <- paths(buckets))
     test(s"$path ($buckets buckets): every crash reads pre or post; repair rolls back") {
       val tpl = templates(buckets)
       val pre = frozen(storeAt(tpl).read("t"))
       val preMeta = storeAt(tpl).meta("t")
-      val postDir = copyOf(tpl)
-      val postStore = storeAt(postDir)
-      FaultFs.arm(Long.MaxValue)
-      op(postStore)
-      val calls = FaultFs.disarm()
-      assert(calls > 0)
-      info(s"$calls crash points")
-      val post = frozen(postStore.read("t"))
-      val postMeta = postStore.meta("t")
-      deleteTree(postDir)
-      val failures = (1L to calls).flatMap { k =>
-        val dir = copyOf(tpl)
-        FaultFs.arm(k)
-        val crash = Try(op(storeAt(dir)))
-        FaultFs.disarm()
-        val problems = Try(check(dir, pre, post, Seq(preMeta, postMeta)))
-          .fold(e => Seq(s"threw $e"), identity)
-        deleteTree(dir)
-        problems.map(p => s"k=$k/$calls (op ${if (crash.isSuccess) "finished" else "killed"}): $p")
+      var post: DataFrame = null
+      var postMeta: TableStore.Meta = null
+      val failures = crashEach(tpl, op, { s => post = frozen(s.read("t")); postMeta = s.meta("t") })(
+        check(_, pre, post, Seq(preMeta, postMeta)))
+      assert(failures.isEmpty, failures.mkString(s"\n$path ($buckets buckets):\n", "\n", ""))
+    }
+
+  // ── summary maintenance ─────────────────────────────────────────────
+
+  private val summaries = Seq(
+    IncrementalAgg.Target("s_multi", IncrementalAgg.Spec("multi", Seq("v")), Seq("g"), Nil),
+    IncrementalAgg.Target("s_minmax", IncrementalAgg.Spec("minmax", Seq("v")), Seq("g"), Nil))
+
+  private def kgv(ks: Range): DataFrame = ks.map(k => (k.toLong, k % 3L, k * 10L)).toDF("k", "g", "v")
+
+  /** Base `t` with a `multi` and a `minmax` summary maintained at gen 1,
+    * then an upsert and a delete for the next maintain to fold (the
+    * delete makes the minmax fold rescan its group). */
+  private def summaryTemplate(buckets: Int): JPath = {
+    val dir = Files.createTempDirectory("graft_crash_stpl_")
+    val store = storeAt(dir)
+    store.createTable("t", Seq("k" -> "bigint", "g" -> "bigint", "v" -> "bigint"), Seq("k"),
+      buckets = buckets)
+    store.insert("t", kgv(0 until 9))
+    summaries.foreach { s =>
+      store.createTableFromDataFrame(s.summary,
+        IncrementalAgg.summarize(s.spec, store.read("t"), s.groupCols), s.spec.keys(s.groupCols),
+        infer = false)
+      IncrementalAgg.markMaintained(store, "t", s.summary, 1)
+    }
+    store.upsert("t", Seq((4L, 1L, 400L), (20L, 2L, 7L)).toDF("k", "g", "v"))
+    store.delete("t", Seq(6L).toDF("k"))
+    dir
+  }
+  /** `maintain(s_multi)`: both summaries fold from one feed. */
+  private def maintainBoth(store: TableStore): Unit =
+    IncrementalAgg.maintainGroup(store, "t", summaries(0), summaries.tail, _ => ())
+
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  // the maintain protocol's crash points are the summaries' (flat
+  // tables whatever the base's layout), so each case runs on one layout:
+  // the bucket-local feed on the 4-bucket base, the vacuumed watermark's
+  // rescan on the flat one
+  for ((path, buckets, op) <- Seq[(String, Int, TableStore => Unit)](
+      ("maintain", 4, maintainBoth),
+      ("vacuum, maintain", 0, { s => s.vacuum("t"); maintainBoth(s) })))
+    test(s"$path of a multi + minmax pair ($buckets buckets): after every crash a re-run maintain is exact") {
+      val tpl = summaryTemplate(buckets)
+      // the uninterrupted run's summaries: equal to summarize over the
+      // base, whose rows no kill changes
+      var expected: Seq[Seq[String]] = Nil
+      val failures = crashEach(tpl, op, { store =>
+        summaries.foreach(s => Equality.compareDfs(store.read(s.summary),
+          IncrementalAgg.summarize(s.spec, store.read("t"), s.groupCols)))
+        expected = summaries.map(s => rowsOf(store.read(s.summary)))
+      }) { dir =>
+        val store = storeAt(dir)
+        (Seq("t") ++ summaries.map(_.summary)).foreach(store.clearCommitLock)
+        maintainBoth(store)
+        // a sibling left behind at another watermark folds on its own
+        IncrementalAgg.maintainGroup(store, "t", summaries(1), Nil, _ => ())
+        summaries.zip(expected).flatMap { case (s, want) =>
+          val got = rowsOf(store.read(s.summary))
+          Some(s"${s.summary} is ${got.mkString(" ")}, summarize gives ${want.mkString(" ")}")
+            .filterNot(_ => got == want)
+        }
       }
+      deleteTree(tpl)
       assert(failures.isEmpty, failures.mkString(s"\n$path ($buckets buckets):\n", "\n", ""))
     }
 }
