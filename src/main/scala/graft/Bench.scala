@@ -443,10 +443,20 @@ object Bench {
     // reconstructible).
     BenchSetup.armed = true
 
+    // Janino compiles so far (count, ms), for the "codegen" dict
+    def compiled(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L)
+    val cgWarm0 = compiled()
+
     // Warmup: run every headline plan shape once at the smallest SF so
     // JIT + Janino codegen compile outside the timings (measured: the
     // minhash pipeline costs ~60s cold vs 1.7s warm — the delta is all
     // code compilation, identical for the same plan shape at any SF).
+    // That holds only while Spark's generated-class cache still holds
+    // the warm-up's classes: at its default 100 entries the sf0.01
+    // timed runs compiled 3979 classes, more than the warm-up's 3082;
+    // at GraftSession.CodegenCacheEntries they compile 274.
     // clearCache drops warmup-persisted intermediates so the timed run
     // cannot accidentally reuse them.
     val warmDir = "/root/testdata/sf0.001"
@@ -457,6 +467,7 @@ object Bench {
       }
     }
     Graft.clearOperatorCaches(); spark.catalog.clearCache()
+    val cgWarm1 = compiled()
 
     // per-query peak task memory (max over tasks of peakExecutionMemory,
     // i.e. the largest single-task footprint for sort/agg/join buffers):
@@ -530,6 +541,7 @@ object Bench {
     // whose signal was graded) — emitted as the "setup" diagnostic dict
     // so full span = queries[e] + setup[e] stays reconstructible
     val setupByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val cgTimed0 = compiled()
     val results = selected.flatMap { case (name, _) =>
       SparkEntry.queries.get(name).map { fn =>
         currentPeak.set(0L)
@@ -558,6 +570,7 @@ object Bench {
       }
     } ++ (if (withStream) streamBench(spark, sfDir, errors) ++
       insertBulkBench(spark, sfDir, errors) else Nil)
+    val cgTimed1 = compiled()
     val (j1, s1) = calibrate(spark)
     val (j2, s2) = calibrate(spark)
     val cm2 = commitCalib(spark)
@@ -634,7 +647,12 @@ object Bench {
     // per probe), then the graded "queries"/"value" — so the last
     // ~1.5 KB always carries calib + probe_worst + queries + value.
     val totalStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(total))
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","errors":$errs,"alias":$aliasJson,"probe_34m":$probes,"peak_task_mem":$mem,"setup":$setupJson,"calib":$calib,"probe_worst":$probeWorst,"queries":$qs,"value":$totalStr}""")
+    // compiles and compile ms of the warm-up and of the timed window
+    // (diagnostic, before calib like every diagnostic dict)
+    val codegenJson =
+      s"""{"warm":[${cgWarm1._1 - cgWarm0._1},${cgWarm1._2 - cgWarm0._2}],""" +
+        s""""timed":[${cgTimed1._1 - cgTimed0._1},${cgTimed1._2 - cgTimed0._2}]}"""
+    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","errors":$errs,"alias":$aliasJson,"probe_34m":$probes,"peak_task_mem":$mem,"setup":$setupJson,"codegen":$codegenJson,"calib":$calib,"probe_worst":$probeWorst,"queries":$qs,"value":$totalStr}""")
     spark.stop()
   }
 }

@@ -19,6 +19,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf whose default
+    * is 100). An entry is one generated source compiled under one class
+    * loader, so a whole-stage body compiled on the driver takes a second
+    * entry when an executor task thread compiles it. Measured per
+    * process (4 cores): perfbench's `keyed_oltp` holds 196 entries over
+    * its warm-up, three set-ups and four rounds (280 without hoisted
+    * filter literals), `analytics_mix` 309 over three rounds, and
+    * `graft.Bench` 1977 over its sf0.001 warm-up and sf0.01 timed runs.
+    * At 100 entries LRU evicted every class before its next use: a
+    * `keyed_oltp` round compiled ~160 classes, and Bench's timed runs
+    * compiled 3979 (1953 at 1000 entries, 274 at 4000). 4000 holds
+    * twice the largest set.
+    *
+    * The session also registers [[graft.plans.GraftExtensions]], whose
+    * `HoistFilterLiterals` keeps the literals of filter conditions out
+    * of the generated source: otherwise each point read's key and each
+    * range's bounds is a new source text, a cache miss and a compile,
+    * whatever the cache size. */
+  val CodegenCacheEntries = 4000
+
   def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession = {
     val s = SparkSession
       .builder()
@@ -31,6 +52,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .withExtensions(new graft.plans.GraftExtensions)
       // fork-free local filesystem — without libhadoop, the stock
       // local FS shells out `chmod`/`ls` per file op (measured 210
       // forks per one-file parquet write); see NioLocalFileSystem

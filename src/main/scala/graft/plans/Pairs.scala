@@ -83,13 +83,6 @@ case class PairsInputBarrierExec(child: SparkPlan) extends UnaryExecNode {
     copy(child = newChild)
 }
 
-/** `SparkSessionExtensions` entry point for deployments that configure
-  * extensions declaratively (`--conf spark.sql.extensions=graft.plans.GraftExtensions`). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    e.injectPlannerStrategy(_ => PairsStrategy)
-}
-
 /** Serializable factory shipped through the codegen `references` array:
   * UnsafeProjection itself is not serializable, so the generated stage
   * builds its projections on the executor from the bound expressions. */

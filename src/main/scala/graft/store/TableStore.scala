@@ -2260,10 +2260,14 @@ final class TableStore(
     * rows (applyChanges delete verdicts, which legitimately carry only
     * a key) skip validation, as they did under the eager path's
     * pre-filter. `skipBounds` columns skip the bounds check only
-    * (insert's own canonical dto conversion cannot violate it). */
+    * (insert's own canonical dto conversion cannot violate it). `keep`
+    * columns pass through unwrapped, so a source partitioned by them
+    * stays partitioned (a summary fold's output, by its keys); the
+    * caller keeps them only when another wrapped column is read for
+    * every row, which then carries their checks. */
   private def withSourceValidation(
       m: Meta, source: DataFrame, exempt: Option[Column] = None,
-      skipBounds: Set[String] = Set.empty): DataFrame = {
+      skipBounds: Set[String] = Set.empty, keep: Set[String] = Set.empty): DataFrame = {
     val fields = source.columns.toSet
     val checks: Seq[(Column, String)] =
       m.notNull.filter(fields.contains).map { n =>
@@ -2298,8 +2302,8 @@ final class TableStore(
     // its output columns; the filter's predicate re-evaluates the
     // substituted source expressions — the dto insert went 1.26 s →
     // 3.2 s under a filter and back to ~0.7 s as a projection).
-    // Wrapping EVERY column keeps the assert alive under any
-    // downstream column pruning (delete prunes to the match keys);
+    // Wrapping every column but `keep` keeps the assert alive under
+    // any downstream column pruning (delete prunes to the match keys);
     // CSE evaluates the shared guard once per row. The
     // monotonically_increasing_id anchor — never negative, so it can
     // never change the verdict — makes the guard nondeterministic so
@@ -2308,7 +2312,7 @@ final class TableStore(
     val guard = assert_true(ok, marker)
     source.select(source.columns.map { c =>
       val q = col(Identifiers.quote(c))
-      coalesce(guard.cast(source.schema(c).dataType), q).as(c)
+      if (keep(c)) q else coalesce(guard.cast(source.schema(c).dataType), q).as(c)
     }.toIndexedSeq: _*)
   }
 
@@ -2390,8 +2394,12 @@ final class TableStore(
       throw errors.DataFrameColumnDoesNotExist(Seq(s"source.$deleteCol"))
     val isDelete = coalesce(col(Identifiers.quote(deleteCol)).cast("boolean"), lit(false))
     // delete verdicts carry just a key — they are exempt from source
-    // validation, as under the eager path's pre-filter
-    val src0 = withSourceValidation(m, source, exempt = Some(isDelete))
+    // validation, as under the eager path's pre-filter. The mutation
+    // reads every row's verdict, so the guard rides `deleteCol` and the
+    // keys pass through: a source partitioned by them (a summary fold)
+    // needs no exchange before the dup-key guard.
+    val src0 = withSourceValidation(m, source, exempt = Some(isDelete),
+      keep = keys.toSet - deleteCol)
     val partial =
       enforceChecks(m, source.filter(!isDelete).drop(deleteCol), "source", deferrable = true)
     translatingDupKeys(name, keys) {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -23,9 +24,14 @@ class MaintainGroupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** Queries over a change feed's diff join, by the join's struct alias. */
   private val feedQueries = new java.util.concurrent.atomic.AtomicInteger
+  /** The executed plans of the store writes, while `capture` is on. */
+  @volatile private var capture = false
+  private val writes = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
   spark.listenerManager.register(new QueryExecutionListener {
-    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
       if (qe.analyzed.toString.contains("__cdf_pre")) feedQueries.incrementAndGet()
+      if (capture && f == "save") writes.add(qe.executedPlan)
+    }
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
   })
   private def feedQueriesDuring(body: => Unit): Int = {
@@ -130,6 +136,32 @@ class MaintainGroupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(g.summaries.status("s_multi")("fold_rescanned_groups") == "0")
       // the sibling is already fresh: its own maintain is a watermark check
       assert(feedQueriesDuring(g.summaries.maintain("s_minmax")) == 0)
+    } finally { g.summaries.detach("base"); g.close() }
+  }
+
+  test("a summary commit keeps the fold's partitioning: no exchange over the fold output") {
+    val g = newBase()
+    try {
+      g.summaries.define("s_multi", "base", Seq("grp"), Seq("v"), kind = "multi")
+      g.summaries.define("s_minmax", "base", Seq("grp"), Seq("v"), kind = "minmax")
+      changeBase(g)
+      org.apache.spark.sql.graftx.bridge.drainListenerBus(spark.sparkContext, 10000)
+      writes.clear(); capture = true
+      try g.summaries.maintain("s_multi") finally {
+        org.apache.spark.sql.graftx.bridge.drainListenerBus(spark.sparkContext, 10000)
+        capture = false
+      }
+      val plans = writes.toArray.toSeq.map(_.asInstanceOf[org.apache.spark.sql.execution.SparkPlan])
+      assert(plans.size == 2, "one commit per summary")
+      // the dup-key guard groups the renamed source keys (`__src_grp`):
+      // a shuffle by them would re-exchange the fold output
+      for (p <- plans) {
+        val bySource = collect(p) { case ShuffleExchangeExec(h: HashPartitioning, _, _, _)
+          if h.references.exists(_.name.startsWith("__src_")) => h }
+        assert(bySource.isEmpty, s"shuffle over the fold output:\n$p")
+      }
+      assert(sameRows(g.read.table("s_multi"),
+        IncrementalAgg.summarizeMulti(g.read.table("base"), Seq("grp"), Seq("v"))))
     } finally { g.summaries.detach("base"); g.close() }
   }
 
